@@ -13,7 +13,7 @@ package graft
   * | As-of join | `Engine.Asof.join` / `.nativeJoin` | linear union+window / co-partitioned two-pointer merge; one exchange per side, tolerance-aware |
   * | Range join | `Engine.RangeJoin.pointInInterval` / `.intervalOverlap` | bucketed equi-join, exactly-once pairs, fail-fast width cap |
   * | SCD2 | `Engine.Scd2.merge` / `.seed` / `.asOf` | broadcast-able updates join + key-only anti-join; the large current side never shuffles |
-  * | Entity resolution | `Engine.EntityResolution.resolve` | hash-keyed dedup + two-phase BIGINT surrogate minting; no driver state |
+  * | Entity resolution | `Engine.EntityResolution.resolve` | hash-keyed dedup + range-partition + zipWithIndex BIGINT surrogate minting; no driver state |
   * | Connected components | `Engine.ConnectedComponents.run` | large-star/small-star: O(log n) rounds regardless of graph diameter |
   * | Near-dup dedup | `Engine.NearDup.{signatures, sigPairs, edges, clusters, dedupe}` + `LshConfig(bands, rows, minSig)` | MinHash sigs in one HashAggregate; banded LSH (never all-pairs; s-curve knee per config, default 4×4); O(log n)-round clustering; survivor cost bounded by dup volume |
   * | Checkpoint release | `Engine.Checkpoints.release` | deterministic reclaim of a superseded cut (reliable files deleted, local blocks dropped) |
@@ -28,9 +28,9 @@ package graft
   * | Batch ingest | `Engine.IngestManifest.processNew` | bounded-batch discovery; ≤ one batch of paths on the driver |
   * | Files/formats | `Engine.Sources.*`, `Engine.Xlsx` | declared-schema scans, ordered/Z-ordered/compacted writes |
   * | DDL + scripts | `Engine.SchemaDdl`, `Engine.SqlRunner` | reference schema on Spark SQL; quote-aware script execution |
-  * | Full reference DAG | `Engine.Pipeline.run` | the 19-table ETL, one lazy plan per output table |
+  * | Full reference DAG | `Engine.Pipeline.run` | the 19-table ETL; canonical profiles and the user map persisted once, every output table a plan over them |
   * | Streaming | `Engine.Sessionize`, `Engine.StreamDedup`, `Engine.CdcMerge`, `Engine.EventStream`, `Engine.TopKStream`, `Engine.StreamJoin`, `Engine.Enrich`, `Engine.Changepoint`, `Engine.NearDupStream`, `Engine.FunnelStream`, `Engine.SlidingKmv` | watermark-bounded state; batch ≡ stream parity-tested |
-  * | Online serving | `Engine.PqServeStream` (ADC), `Engine.SparseServeStream` (BM25), `Engine.FusedServeStream` (hybrid RRF) | query streams served from loaded indexes; ONE stateful fold each, bit-identical to the batch serves |
+  * | Online serving | `Engine.PqServeStream` (ADC), `Engine.SparseServeStream` (BM25), `Engine.FusedServeStream` (hybrid RRF) | query streams served from loaded indexes by the batch serves' own scan (`PqIndex.candidates`, `SparseIndex.contribs`); ONE stateful fold each |
   * | Persisted indexes | `Engine.AnnIndex` (IVF), `Engine.PqIndex` (IVFPQ compressed layout), `Engine.NearDup.writeIndex/incrementalEdges/deleteFromIndex`, `Engine.SparseIndex` (BM25) | build once, serve/append/DELETE forever; round trips + exact append/delete spec-proven in all four families |
   * | Segmented (LSM) layouts | `Engine.SparseSegments`, `Engine.PqSegments`, `Engine.MinHashSegments` (+ `Engine.SegmentOps`) | O(delta) nightly maintenance WRITES — base files immutable, scoped tombstones make revise correct, compact() folds segments (fire at `SegmentOps.DefaultMaxSegs`, the x105-priced default); each family's `mergeSegsAt` is the TIERED move — fold any contiguous segment range at O(delta) cost, the base never rewritten for churn (priced by x107) — and `tieredMaintain` runs `SegmentOps.tieredPlan`'s LEVELED schedule (nightly fresh-run folds that never re-absorb a standing merged segment + the geometric >= fanout similar-size rule; priced vs naive tiered by x108, geometric fire by x109); each family's `changesBetween` is snapshot CDC — state-diff rows (added/removed/updated) between two retained versions at the family's content grain (signatures / BM25 tf / frozen-book codes), O(delta) fast path when no fold crossed the window, content-diff fallback proven cell-identical (x110); the shared row diff is symmetric, so multi-row content (sparse tf) reports grown as well as shrunk docs; manifest CAS multi-writer safe, orphan claims stolen after `graft.manifest.claimTtlMs`; view ≡ rebuild/fold-in spec-proven, x99 serve-gated cross-engine |
   * | Online index ingest | `Engine.SegmentIngest.once` | batchId-keyed exactly-once foreachBatch sink over any segmented layout; tagged publications self-heal BOTH crash windows; markers bounded (64-batch retention); chaos-gated (21 seeded kill schedules) |

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference walks rows sequentially, minting `next_user_id += 1` and
   * reusing keys on profile-hash collisions. That serialization point
-  * disappears here: dedup is a window over the hash, key minting is a
-  * `row_number` over the deduped set — fully distributed, deterministic
-  * (explicit orderBy everywhere; no `monotonically_increasing_id`).
+  * disappears here: dedup is a window over the hash, key minting numbers
+  * the deduped set in range-partitioned key order with `zipWithIndex` —
+  * fully distributed, deterministic (explicit ordering everywhere; no
+  * `monotonically_increasing_id`).
   *
   * At 100 TB: one shuffle on `profile_hash` for the dedup window; key
   * minting is range-partition + sort + zipWithIndex — distributed dense
@@ -41,13 +42,13 @@ object EntityResolution {
   /** Mint dense surrogate keys 1..N over `orderCol` (deterministic
     * replacement for the reference's sequential counter).
     *
-    * Two-phase distributed numbering — never a global single-partition
-    * window: (1) range-partition by the order key so partition index
-    * order == global key order; (2) count rows per partition (tiny agg)
-    * and turn counts into exclusive prefix-sum offsets (window over ≤
-    * #partitions rows); (3) broadcast-join the offsets back and number
-    * within each partition. Requires `orderCol` be unique per row for a
-    * deterministic assignment (callers pass the deduped profile hash). */
+    * Distributed dense numbering — never a global single-partition
+    * window: range-partition by the order key (partition index order ==
+    * global key order), sort within partitions, and number the rows with
+    * RDD `zipWithIndex` (its count job derives each partition's offset,
+    * over the same shuffle dependency as the numbering pass). Requires
+    * `orderCol` be unique per row for a deterministic assignment
+    * (callers pass the deduped profile hash). */
   def mintKeys(df: DataFrame, keyName: String, orderCols: Column*): DataFrame = {
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism

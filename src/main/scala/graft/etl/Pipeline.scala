@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale stance: every stage is a lazy DataFrame program — entity
   * resolution is one hash shuffle (EntityResolution), surrogate keys are
-  * two-phase distributed numbering (mintKeys), dimension lookups
+  * range-partition + zipWithIndex numbering (mintKeys), dimension lookups
   * broadcast only the genuinely small sides (static dims, date dim), and
   * the user-mapping join is left to AQE (it grows with the user count).
   */

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Checkpoints.CutOps
@@ -13,9 +14,9 @@ import graft.functions.DotProduct
   * x97 query that gates the composed serve cross-engine. A 100 TB ANN
   * deployment does not store 64 doubles per vector: it stores the
   * coarse cell (from [[AnnIndex]]'s trained codebook) plus [[Sub]]
-  * byte-sized PQ codes, and serves queries from per-query asymmetric-
-  * distance tables over ONLY the probed cells' code rows — the layout
-  * every production vector index (FAISS-style IVFADC) actually ships.
+  * byte-sized PQ codes, and serves queries by asymmetric distances
+  * over ONLY the probed cells' code rows — the layout every
+  * production vector index (FAISS-style IVFADC) actually ships.
   *
   * Stored tables ([[write]]): `coarse` (≤ [[AnnIndex.K]] rows),
   * `cells` (vec_id → coarse cell), `book0..book3` (8-row PQ codebooks
@@ -41,10 +42,15 @@ import graft.functions.DotProduct
   * by the same row-locality; a revision is delete + append).
   *
   * Scale: build is the two trainings (bounded codebooks, broadcast-
-  * safe forever) + per-row encodes; serve cost per query is
-  * nprobe/K of the corpus' CODE rows (4 small ints each, not 64
-  * doubles) via one cluster-keyed join + 4 LUT lookups; append/delete
-  * touch only the shard's rows.
+  * safe forever) + per-row encodes; append/delete touch only the
+  * shard's rows. Serve is ONE scan, shared by every serve form here
+  * and by the streaming twins ([[graft.streaming.PqServeStream]],
+  * [[graft.streaming.FusedServeStream]]): the coarse codebook and
+  * the PQ books (≤ 16 + 4×8 rows by construction) are collected in
+  * one job per call and bound as literals, so probe choice is
+  * row-local and ADC scoring is expression-only; one cluster-keyed
+  * join brings nprobe/K of the corpus' CODE rows (4 small ints each,
+  * not 64 doubles); one bounded-heap fold per query emits the top-k.
   */
 object PqIndex {
 
@@ -122,28 +128,146 @@ object PqIndex {
     Index(coarse, cells, subs.map(_._2), codes)
   }
 
-  /** Serve top-`k` ADC neighbors for `queries`(q_id, emb, norm):
-    * rank the `nprobe` nearest coarse cells per query (broadcast —
-    * ≤ 16 rows), build the |q|×8 ADC lookup table per subspace
-    * (joined UNHINTED — the query side grows with the corpus, x05's
-    * rule), and score ONLY the probed cells' code rows by four LUT
-    * lookups + a fixed-order sum. Self-matches excluded. Output
-    * carries `n_scanned` — the exact per-query count of code rows
-    * scored, the cost column the IVF-vs-flat trade is measured in. */
+  /** One scanned (query, code row) pair and its ADC score. */
+  final case class Cand(q_id: Long, vec_id: Long, adc: Double)
+  /** A served neighbor; `n_scanned` is the exact per-query count of
+    * code rows scored — the cost column the IVF-vs-flat trade is
+    * measured in. */
+  final case class Served(q_id: Long, vec_id: Long, rank: Long,
+      adc: Double, n_scanned: Long)
+  /** [[Cand]] plus the exact squared L2 the refine tail ranks by. */
+  final case class CandR(q_id: Long, vec_id: Long, adc: Double,
+      l2: Double)
+  final case class ServedR(q_id: Long, vec_id: Long, rank: Long,
+      l2: Double, n_scanned: Long)
+
+  /** A trained codebook row on the driver: (c_id, centroid, norm or
+    * squared norm). */
+  type Centroid = (Long, Seq[Double], Double)
+
+  /** Driver-side snapshot of the frozen trained artifacts — the coarse
+    * codebook (empty unless asked for) and the [[Sub]] PQ books — in
+    * ONE job: the ≤ [[AnnIndex.K]] + [[Sub]]×[[K]] rows are tagged by
+    * table and collected as one union. Taken per serve call, never
+    * cached across calls, so a serve always scores with the books of
+    * the index it is given. */
+  private def bind(idx: Index, withCoarse: Boolean)
+      : (Seq[Centroid], Seq[Seq[Centroid]]) = {
+    val coarse = idx.coarse.select(lit(-1).as("t"),
+      col("c_id").cast("long"), col("c_emb"), col("c_norm"))
+    val books = idx.books.zipWithIndex.map { case (b, i) =>
+      b.select(lit(i).as("t"), col("c_id").cast("long"), col("c_v"),
+        col("c_vv"))
+    }
+    val rows = ((if (withCoarse) Seq(coarse) else Nil) ++ books)
+      .reduce(_ union _).collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1),
+        r.getSeq[Double](2).toSeq, r.getDouble(3)): Centroid))
+    val byTable = rows.groupBy(_._1).map { case (t, rs) =>
+      t -> rs.map(_._2).toSeq.sortBy(_._1) }
+    val c = byTable.getOrElse(-1, Nil)
+    require(!withCoarse || (c.nonEmpty && c.length <= AnnIndex.K),
+      s"coarse codebook must be 1..${AnnIndex.K} rows")
+    (c, (0 until Sub).map(i => byTable.getOrElse(i, Nil)))
+  }
+
+  /** Row-local probe choice: each query row ranks its distances to the
+    * literal coarse centroids in an array sort and explodes its
+    * `nprobe` nearest cells — zero shuffle. The struct field order
+    * (dist, c_id) is the (dist asc, c_id) probe ranking. */
+  private def probe(queries: DataFrame, coarse: Seq[Centroid],
+      nprobe: Int): DataFrame = {
+    val dists = coarse.map { case (cid, cemb, cnorm) =>
+      struct(
+        (lit(1.0) - DotProduct(col("emb"), typedLit(cemb)) /
+          (col("norm") * lit(cnorm))).as("dist"),
+        lit(cid).as("c_id"))
+    }
+    queries
+      .withColumn("probe", explode(functions.slice(
+        sort_array(array(dists: _*)), 1, nprobe)))
+      .select(col("q_id"), col("emb"), col("probe.c_id").as("cluster"))
+  }
+
+  /** The one scan behind every serve: probed (q_id, cluster, ...)
+    * rows join the stored cells⋈codes on `cluster` — only probed
+    * cells' CODE rows flow, never full-precision vectors —
+    * self-matches dropped. */
+  private def scan(probed: DataFrame, idx: Index): DataFrame =
+    probed
+      .join(idx.codes.join(idx.cells, Seq("vec_id")), Seq("cluster"))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  /** ADC of a scanned row (query `emb`, codes `code0..`): per subspace
+    * qvv − 2·dot(qv, c_v(code)) + c_vv(code), the code's centroid
+    * looked up in a literal 8-entry map, summed in subspace order. */
+  private def adc(books: Seq[Seq[Centroid]]): Column =
+    books.zipWithIndex.map { case (book, i) =>
+      val qv = expr(s"slice(emb, ${Dims * i + 1}, $Dims)")
+      val cv = typedLit(book.map(b => b._1 -> b._2).toMap)
+      val cvv = typedLit(book.map(b => b._1 -> b._3).toMap)
+      DotProduct(qv, qv) -
+        lit(2.0) * DotProduct(qv, element_at(cv, col(s"code$i"))) +
+        element_at(cvv, col(s"code$i"))
+    }.reduce(_ + _)
+
+  /** Every scanned (query, candidate) pair with its ADC score for
+    * `queries`(q_id, emb, norm) — stateless, so a streaming query frame
+    * may use it too. */
+  def candidates(queries: DataFrame, idx: Index,
+      nprobe: Int = AnnIndex.Probes): Dataset[Cand] = {
+    import queries.sparkSession.implicits._
+    val (coarse, books) = bind(idx, withCoarse = true)
+    scan(probe(queries, coarse, nprobe), idx)
+      .select(col("q_id"), col("vec_id"), adc(books).as("adc")).as[Cand]
+  }
+
+  /** Bounded top-k fold over one query's candidates: keep the k
+    * smallest (adc, vec_id) in a max-heap, count everything scanned —
+    * O(k) memory per query, one pass. */
+  def topK(k: Int)(qId: Long, rows: Iterator[Cand]): Iterator[Served] = {
+    val heap = mutable.PriorityQueue.empty[(Double, Long)]
+    var n = 0L
+    rows.foreach { r =>
+      n += 1
+      heap.enqueue((r.adc, r.vec_id))
+      if (heap.size > k) heap.dequeue()
+    }
+    heap.dequeueAll[(Double, Long)].reverse.iterator.zipWithIndex.map {
+      case ((adc, vid), i) => Served(qId, vid, (i + 1).toLong, adc, n)
+    }
+  }
+
+  private def fold(cand: Dataset[Cand], k: Int): DataFrame = {
+    import cand.sparkSession.implicits._
+    cand.groupBy("q_id").as[Long, Cand]
+      .flatMapGroups((q, rows) => topK(k)(q, rows)).toDF()
+  }
+
+  /** Serve top-`k` ADC neighbors for `queries`(q_id, emb, norm): the
+    * `nprobe` nearest coarse cells per query (row-local, over the
+    * literal coarse codebook), the probed cells' code rows scored by
+    * the literal-book ADC expression, and one top-k fold per query.
+    * Self-matches excluded. Output (q_id, vec_id, rank, adc,
+    * n_scanned) — see [[Served]]. */
   def serve(queries: DataFrame, idx: Index,
-      nprobe: Int = AnnIndex.Probes, k: Int = 10): DataFrame = {
-    val probes = queries
-      .select(col("q_id"), col("emb").as("q_emb"), col("norm")
-        .as("q_norm"))
-      .crossJoin(broadcast(idx.coarse))
-      .withColumn("dist", lit(1.0) -
-        DotProduct(col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm")))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("dist").asc, col("c_id"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    serveWithProbes(queries, idx, probes, k)
+      nprobe: Int = AnnIndex.Probes, k: Int = 10): DataFrame =
+    fold(candidates(queries, idx, nprobe), k)
+
+  /** [[serve]] behind an EXPLICIT (q_id, cluster) probe relation —
+    * [[serve]]'s fixed-nprobe choice is one producer; adaptive
+    * policies (x103's distance-ratio cut) are another. Same scan, same
+    * ADC, same fold. */
+  def serveWithProbes(queries: DataFrame, idx: Index,
+      probes: DataFrame, k: Int = 10): DataFrame = {
+    import queries.sparkSession.implicits._
+    val (_, books) = bind(idx, withCoarse = false)
+    // the query join comes last, so the fold reuses its q_id
+    // partitioning
+    fold(scan(probes.select("q_id", "cluster"), idx)
+      .join(queries.select("q_id", "emb"), "q_id")
+      .select(col("q_id"), col("vec_id"), adc(books).as("adc")).as[Cand],
+      k)
   }
 
   /** Refine-tail width promoted by x104's measured card (sf1): k'=50
@@ -152,64 +276,69 @@ object PqIndex {
     * query, 1% of the ADC scan. */
   val RefineK = 50
 
-  /** Two-stage serve — [[serve]]'s ADC pass plus the standard exact
+  /** [[candidates]] plus each scanned row's exact squared L2 against
+    * `vecs` (vec_id, emb — the relation the codes were built from; the
+    * index itself stays compressed), joined on vec_id over the
+    * cluster-pruned scan. The exact L2 rides along every scanned row so
+    * that ONE fold can both cut the ADC top-k' and re-rank it.
+    *
+    * PRECONDITION: `vecs` must cover every indexed vec_id. The inner
+    * join runs before the fold, so a scanned candidate missing from
+    * `vecs` is dropped before the ADC cut (the next candidate silently
+    * promotes) and excluded from n_scanned. Validate coverage
+    * upstream. */
+  def candidatesRefined(queries: DataFrame, idx: Index,
+      vecs: DataFrame, nprobe: Int = AnnIndex.Probes): Dataset[CandR] = {
+    import queries.sparkSession.implicits._
+    val (coarse, books) = bind(idx, withCoarse = true)
+    scan(probe(queries, coarse, nprobe), idx)
+      .join(vecs.select(col("vec_id"), col("emb").as("d_emb")),
+        Seq("vec_id"))
+      .select(col("q_id"), col("vec_id"), adc(books).as("adc"),
+        (DotProduct(col("d_emb"), col("d_emb")) -
+          lit(2.0) * DotProduct(col("d_emb"), col("emb")) +
+          DotProduct(col("emb"), col("emb"))).as("l2"))
+      .as[CandR]
+  }
+
+  /** Two-stage fold over one query's candidates: the ADC
+    * top-max(refineK, k) by (adc, vec_id) in a max-heap, then those
+    * re-ranked by (l2, vec_id), top-`k` out. O(refineK) memory per
+    * query. */
+  def topKRefined(refineK: Int, k: Int)(qId: Long,
+      rows: Iterator[CandR]): Iterator[ServedR] = {
+    val keep = math.max(refineK, k)
+    val heap = mutable.PriorityQueue.empty[(Double, Long, Double)](
+      Ordering.by[(Double, Long, Double), (Double, Long)](t =>
+        (t._1, t._2)))
+    var n = 0L
+    rows.foreach { r =>
+      n += 1
+      heap.enqueue((r.adc, r.vec_id, r.l2))
+      if (heap.size > keep) heap.dequeue()
+    }
+    heap.dequeueAll[(Double, Long, Double)]
+      .map { case (_, vid, l2) => (l2, vid) }.sorted
+      .take(k).iterator.zipWithIndex.map { case ((l2, vid), i) =>
+        ServedR(qId, vid, (i + 1).toLong, l2, n)
+      }
+  }
+
+  /** Two-stage serve — [[serve]]'s ADC scan plus the standard exact
     * REFINE tail (FAISS-style): the top-`refineK` ADC candidates are
     * re-ranked by exact squared L2 against the full-precision vectors
-    * in `vecs` (vec_id, emb — the relation the codes were built from;
-    * the index itself stays compressed), then cut to `k`. Cost on top
-    * of [[serve]]: one keyed join of ≤ refineK·|q| candidate rows —
-    * never a second corpus scan. x104's card prices the k' choice;
-    * PqIndexSpec pins refine(corpus-wide k') ≡ exact brute force and
-    * refined recall ≥ plain ADC recall. Output mirrors [[serve]] with
-    * `l2` in place of `adc`. */
+    * in `vecs` (see [[candidatesRefined]] and its coverage
+    * precondition), then cut to `k`. x104's card prices the k'
+    * choice; PqIndexSpec pins refine(corpus-wide k') ≡ exact brute
+    * force and refined recall ≥ plain ADC recall. Output mirrors
+    * [[serve]] with `l2` in place of `adc`. */
   def serveRefined(queries: DataFrame, idx: Index, vecs: DataFrame,
       refineK: Int = RefineK, nprobe: Int = AnnIndex.Probes,
       k: Int = 10): DataFrame = {
-    val cand = serve(queries, idx, nprobe, math.max(refineK, k))
-      .select(col("q_id"), col("vec_id"), col("n_scanned"))
-    cand
-      .join(vecs.select(col("vec_id"), col("emb")), "vec_id")
-      .join(queries.select(col("q_id"), col("emb").as("qe")), "q_id")
-      .withColumn("l2", DotProduct(col("emb"), col("emb")) -
-        lit(2.0) * DotProduct(col("emb"), col("qe")) +
-        DotProduct(col("qe"), col("qe")))
-      .withColumn("rank", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("l2"), col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "l2", "n_scanned")
-  }
-
-  /** The serve tail behind an EXPLICIT (q_id, cluster) probe
-    * relation — [[serve]]'s fixed-nprobe ranking is one producer;
-    * adaptive policies (x103's distance-ratio cut) are another. Same
-    * LUT build, same probed-cells scan, same ADC ranking. */
-  def serveWithProbes(queries: DataFrame, idx: Index,
-      probes: DataFrame, k: Int = 10): DataFrame = {
-    val luts = (0 until Sub).map { i =>
-      queries.select(col("q_id"),
-        expr(s"slice(emb, ${Dims * i + 1}, $Dims)").as("qv"))
-        .withColumn("qvv", DotProduct(col("qv"), col("qv")))
-        .crossJoin(broadcast(idx.books(i)))
-        .select(col("q_id"), col("c_id").as(s"code$i"),
-          (col("qvv") - lit(2.0) * DotProduct(col("qv"), col("c_v")) +
-            col("c_vv")).as(s"d$i"))
-    }
-    val scan = idx.codes.join(idx.cells, Seq("vec_id"))
-      .join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .cut(false) // consumers: the scan census + the ADC ranking
-    val nScanned = scan.groupBy("q_id")
-      .agg(count(lit(1)).as("n_scanned"))
-    (1 until Sub)
-      .foldLeft(scan.join(luts(0), Seq("q_id", "code0")))((acc, i) =>
-        acc.join(luts(i), Seq("q_id", s"code$i")))
-      .withColumn("adc",
-        (0 until Sub).map(i => col(s"d$i")).reduce(_ + _))
-      .withColumn("rank", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("adc"), col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .join(nScanned, Seq("q_id"))
-      .select("q_id", "vec_id", "rank", "adc", "n_scanned")
+    val cand = candidatesRefined(queries, idx, vecs, nprobe)
+    import cand.sparkSession.implicits._
+    cand.groupBy("q_id").as[Long, CandR]
+      .flatMapGroups((q, rows) => topKRefined(refineK, k)(q, rows)).toDF()
   }
 
   /** Fold a disjoint shard in WITHOUT retraining: assignment against

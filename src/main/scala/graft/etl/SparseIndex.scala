@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,9 +51,11 @@ import graft.etl.Checkpoints.CutOps
   * is one term-keyed candidate join bounded ≤ cap rows per query term
   * AT ANY CORPUS SIZE (the WAND/MaxScore discipline — the uncapped join
   * was measured at 55M rows / 492 s at sf1 on this corpus's 31-token
-  * stop-word vocabulary), one (q_id, doc_id) sum agg and one per-query
-  * top-k window; append touches the delta and the stored lists of the
-  * delta's terms only — never the rest of the index.
+  * stop-word vocabulary) and one per-query fold that sums by doc and
+  * keeps the top-k — the same scan and fold the streaming twin
+  * ([[graft.streaming.SparseServeStream]]) runs; append touches the
+  * delta and the stored lists of the delta's terms only — never the
+  * rest of the index.
   */
 object SparseIndex {
 
@@ -100,35 +104,73 @@ object SparseIndex {
     Index(truncate(tf, cap), df, dl, stats, tf)
   }
 
-  /** Score a query-term relation (q_id, tok) against the index:
-    * x80's exact integer BM25. Self-matches (doc_id = q_id) are
-    * excluded, matching x80's corpus-probe contract (a no-op for
-    * external query id spaces). */
-  def serve(qterms: DataFrame, idx: Index, k: Int = 10): DataFrame = {
-    val contrib = qterms
+  /** One (query, term, doc) BM25 contribution. */
+  final case class Contrib(q_id: Long, doc_id: Long, c_ppm: Long)
+  /** A served hit: summed contributions and the matched-term count. */
+  final case class Served(q_id: Long, doc_id: Long, rank: Long,
+      score_ppm: Long, n_terms: Long)
+
+  /** Per-(query, term, doc) contributions of a query-term relation
+    * (q_id, tok): term-keyed joins against `plist` (≤ cap rows per
+    * term), `df` and `dl`, self-matches (doc_id = q_id) excluded —
+    * x80's corpus-probe contract, a no-op for external query id
+    * spaces. The 1-row corpus card `stats` is collected in one job per
+    * call and bound into the scoring expressions as literals; the
+    * arithmetic is x80's exact integer BM25 verbatim (all products
+    * through DECIMAL(38,0), ppm fractions cleared with `div`).
+    * Stateless, so a streaming qterms frame may use it too. */
+  def contribs(qterms: DataFrame, idx: Index): Dataset[Contrib] = {
+    import qterms.sparkSession.implicits._
+    val st = idx.stats.select("n_docs", "t_tokens").collect()
+    require(st.length == 1, "stats must be the 1-row corpus card")
+    val nDocs = st(0).getLong(0)
+    val tTokens = st(0).getLong(1)
+    qterms
       .join(idx.plist, "tok")
       .filter(col("doc_id") =!= col("q_id"))
       .join(idx.df, "tok")
       .join(idx.dl, "doc_id")
-      .crossJoin(broadcast(idx.stats))
       .withColumn("idf_ppm", expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * (2*(n_docs - df) + 1))" +
+        s"CAST((CAST(1000000 AS DECIMAL(38,0)) * (2*($nDocs - df) + 1))" +
           " div (2*df + 1) AS BIGINT)"))
       .withColumn("tfp_ppm", expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * 22 * t_tokens * tf) div" +
-          " (CAST(10 AS DECIMAL(38,0)) * t_tokens * tf + 3 * t_tokens" +
-          " + 9 * dl * n_docs) AS BIGINT)"))
-      .withColumn("c_ppm", expr(
+        s"CAST((CAST(1000000 AS DECIMAL(38,0)) * 22 * $tTokens * tf) div" +
+          s" (CAST(10 AS DECIMAL(38,0)) * $tTokens * tf + 3 * $tTokens" +
+          s" + 9 * dl * $nDocs) AS BIGINT)"))
+      .select(col("q_id"), col("doc_id"), expr(
         "CAST((CAST(idf_ppm AS DECIMAL(38,0)) * tfp_ppm)" +
-          " div 1000000 AS BIGINT)"))
-    contrib.groupBy("q_id", "doc_id")
-      .agg(sum("c_ppm").as("score_ppm"),
-        count(lit(1)).as("n_terms"))
-      .withColumn("rank", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("score_ppm").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "rank", "score_ppm", "n_terms")
-      .orderBy("q_id", "rank")
+          " div 1000000 AS BIGINT)").as("c_ppm"))
+      .as[Contrib]
+  }
+
+  /** Sum one query's contributions by doc in a hash map (bounded by
+    * the serve candidate bound: ≤ |query terms| × cap entries) and emit
+    * the top-k by (score_ppm desc, doc_id) with ranks. */
+  def topK(k: Int)(qId: Long, rows: Iterator[Contrib])
+      : Iterator[Served] = {
+    val acc = mutable.HashMap.empty[Long, (Long, Long)]
+    rows.foreach { r =>
+      val (s0, n0) = acc.getOrElse(r.doc_id, (0L, 0L))
+      acc.update(r.doc_id, (s0 + r.c_ppm, n0 + 1L))
+    }
+    acc.iterator
+      .map { case (doc, (s, n)) => (doc, s, n) }
+      .toArray
+      .sortBy { case (doc, s, _) => (-s, doc) }
+      .take(k)
+      .iterator.zipWithIndex
+      .map { case ((doc, s, n), i) =>
+        Served(qId, doc, (i + 1).toLong, s, n)
+      }
+  }
+
+  /** Serve the top-`k` BM25 hits of a query-term relation (q_id, tok):
+    * [[contribs]], then one [[topK]] fold per query. Output (q_id,
+    * doc_id, rank, score_ppm, n_terms), unordered. */
+  def serve(qterms: DataFrame, idx: Index, k: Int = 10): DataFrame = {
+    import qterms.sparkSession.implicits._
+    contribs(qterms, idx).groupBy("q_id").as[Long, Contrib]
+      .flatMapGroups((q, rows) => topK(k)(q, rows)).toDF()
   }
 
   /** Fold a delta shard into the index WITHOUT a rebuild — exact (see

@@ -166,8 +166,11 @@ object SparseSegments {
       .filter(col("df") > 0)
     val dlLive = SegmentOps.scopedUnion(base.dl, segs.map(_.dlAdd),
       tombs, "doc_id")
+    // the 1-row card sums 1 + |segs| rows: one partition needs no
+    // exchange, so a serve binds it as literals in one job, not two
     val statsLive = segs.map(_.statsd)
       .foldLeft(base.stats)(_ unionByName _)
+      .coalesce(1)
       .agg(sum("n_docs").as("n_docs"), sum("t_tokens").as("t_tokens"))
     // the dirty-term set is consumed by k+2 joins (clean's anti-join,
     // baseDirty's semi-join, each segment add's semi-join) — cut it
@@ -181,7 +184,7 @@ object SparseSegments {
     // live tf restricted to dirty terms, built from PRUNED components:
     // when the base tf carries the on-disk `tbk` partition column, the
     // DIRTY BUCKET census (≤ TokBuckets values by construction — the
-    // same bounded-artifact trick PqServeStream plays with the coarse
+    // same bounded-artifact trick PqIndex.serve plays with the coarse
     // codebook) is collected at view time and becomes a STATIC
     // partition filter on the base tf scan, so pruning is guaranteed
     // by the planner rather than left to DPP heuristics

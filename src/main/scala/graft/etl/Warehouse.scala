@@ -27,9 +27,9 @@ object Warehouse {
 
   /** J4+J3 — dimension from the distinct non-null values of a column,
     * with dense deterministic surrogate keys
-    * (main_etl_pipeline.py:373-382). Keys minted via the two-phase
-    * distributed numbering in [[EntityResolution.mintKeys]] — no global
-    * single-partition window even for large dims. */
+    * (main_etl_pipeline.py:373-382). Keys minted via the range-partition
+    * + zipWithIndex numbering in [[EntityResolution.mintKeys]] — no
+    * global single-partition window even for large dims. */
   def dimFromDistinct(src: DataFrame, valueCol: String, keyName: String,
       nameCol: String): DataFrame =
     EntityResolution.mintKeys(

@@ -394,7 +394,7 @@ object Advanced {
     // HLL register array (1,639 longs at rsd 0.01) per DISTINCT
     // (priority, custkey) pair through the distinct-expand — a
     // 1,641-column intermediate measured at 4.4 s vs the 5-row join's
-    // sub-second (plans audited via Explain).
+    // sub-second (plans audited via the formatted physical plan).
     val o = Tables.orders(s, d)
     val approx = o.groupBy(col("o_orderpriority"))
       .agg(approx_count_distinct(col("o_custkey"), 0.01).as("approx"))

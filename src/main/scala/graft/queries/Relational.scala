@@ -891,8 +891,8 @@ object Relational {
 
   // ---------------------------------------------------------------------
   // A3 — unpivot/melt: one row → N metric rows (main_etl_pipeline.py:587-593)
-  // Perf note: BENCH_r02 showed 28.9 s at sf0.1 — investigated with
-  // QBench: steady state is ~1 s (runs 2-5: 1.36/0.92/1.21/1.02 s); the
+  // Perf note: BENCH_r02 showed 28.9 s at sf0.1 — repeated in-process
+  // runs put steady state at ~1 s (runs 2-5: 1.36/0.92/1.21/1.02 s); the
   // outlier was first-execution JIT compounded by the since-removed
   // -Xms8g/AlwaysPreTouch heap pre-fault. Plan is the expected single
   // scan → generate(stack) → range-sort; nothing to fix.

@@ -20,11 +20,12 @@ import graft.etl.{PqIndex, SparseIndex}
   *
   * Composition, all streaming-legal with ONE stateful operator:
   *  - the sparse leg is [[SparseServeStream.queryTerms]] (row-local) →
-  *    [[SparseServeStream.contribs]] (stream-static plist/df/dl joins,
-  *    literal corpus card);
-  *  - the dense leg is [[PqServeStream.candidates]] (row-local probe
-  *    selection from the literal coarse codebook, stream-static
-  *    cluster-keyed code join, expression-only ADC);
+  *    [[graft.etl.SparseIndex.contribs]] (the batch serve's scan:
+  *    stream-static plist/df/dl joins, literal corpus card);
+  *  - the dense leg is [[graft.etl.PqIndex.candidates]] (the batch
+  *    serve's scan: row-local probe selection from the literal coarse
+  *    codebook, stream-static cluster-keyed code join, literal-book
+  *    ADC);
   *  - the two legs UNION as tagged rows (legal: both derive from the
   *    same input stream via stateless ops) and ONE
   *    flatMapGroupsWithState per q_id computes both legs' top-`fuseK`
@@ -180,12 +181,12 @@ object FusedServeStream {
       pqIdx: PqIndex.Index, nprobe: Int = graft.etl.AnnIndex.Probes,
       fuseK: Int = FuseK, k: Int = 10): Dataset[Fused] = {
     import queries.sparkSession.implicits._
-    val sp = SparseServeStream.contribs(
+    val sp = SparseIndex.contribs(
       SparseServeStream.queryTerms(queries.select("q_id", "text")),
       sparseIdx).toDF()
       .select(col("q_id"), col("doc_id"), lit(0).as("leg"),
         col("c_ppm"), lit(0.0).as("adc"))
-    val dn = PqServeStream.candidates(
+    val dn = PqIndex.candidates(
       queries.select("q_id", "emb", "norm"), pqIdx, nprobe).toDF()
       .select(col("q_id"), col("vec_id").as("doc_id"),
         lit(1).as("leg"), lit(0L).as("c_ppm"), col("adc"))
@@ -202,8 +203,8 @@ object FusedServeStream {
   // --------------------------------------------------------------------
   // The REFINED hybrid — w07b's online twin: the dense leg is the
   // x104-promoted two-stage serve (ADC top-RefineK re-ranked by exact
-  // L2 — [[PqServeStream.candidatesRefined]] carries the exact L2
-  // along each scanned row, the one-pass trade documented there), the
+  // L2 — [[PqIndex.candidatesRefined]] carries the exact L2 along
+  // each scanned row, so one fold both cuts and re-ranks), the
   // sparse leg and the RRF fuse are [[serve]]'s verbatim. One
   // stateful fold, O(max(refineK, fuseK)) memory per group.
   // FusedServeStreamSpec pins stream ≡ fuseBatch over
@@ -272,12 +273,12 @@ object FusedServeStream {
       nprobe: Int = graft.etl.AnnIndex.Probes,
       fuseK: Int = FuseK, k: Int = 10): Dataset[Fused] = {
     import queries.sparkSession.implicits._
-    val sp = SparseServeStream.contribs(
+    val sp = SparseIndex.contribs(
       SparseServeStream.queryTerms(queries.select("q_id", "text")),
       sparseIdx).toDF()
       .select(col("q_id"), col("doc_id"), lit(0).as("leg"),
         col("c_ppm"), lit(0.0).as("adc"), lit(0.0).as("l2"))
-    val dn = PqServeStream.candidatesRefined(
+    val dn = PqIndex.candidatesRefined(
       queries.select("q_id", "emb", "norm"), pqIdx, vecs, nprobe)
       .toDF()
       .select(col("q_id"), col("vec_id").as("doc_id"),

@@ -1,244 +1,63 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.etl.PqIndex
-import graft.functions.DotProduct
 
 /** Streaming ANN serving against a persisted [[graft.etl.PqIndex]] —
   * the "serve a STREAM of queries" completion of the compressed
-  * index's build/serve/append/delete lifecycle (x97 gates the batch
-  * serve; this is the online form a retrieval endpoint actually runs:
-  * queries arrive continuously, the index is loaded once).
+  * index's build/serve/append/delete lifecycle: queries arrive
+  * continuously, the index is loaded once.
   *
-  * Shape, chosen so the whole plan is streaming-legal with ONE
-  * stateful operator:
-  *  - probe selection is ROW-LOCAL: the coarse codebook is ≤
-  *    [[graft.etl.AnnIndex.K]] rows by construction, so it is
-  *    collected ONCE at query start and baked into literal
-  *    expressions — each query row ranks its 16 cell distances in an
-  *    array sort and explodes its nprobe probes with zero shuffle
-  *    (exactly how a serving process caches a codebook in memory);
-  *  - the candidate join is a stream-static equi join on `cluster`
-  *    against the stored cells⋈codes relation — only probed cells'
-  *    CODE rows flow, never full-precision vectors (the IVFADC
-  *    contract);
-  *  - ADC scoring is expression-only: per candidate, each subspace
-  *    contributes qvv − 2·dot(qv, c_v(code)) + c_vv(code) with the
-  *    code's centroid looked up in a literal 8-entry map — the SAME
-  *    arithmetic, on the same inputs, as the batch LUT join, so
-  *    scores are bit-identical to [[graft.etl.PqIndex.serve]];
-  *  - top-k per query is a bounded-heap fold in ONE
-  *    flatMapGroupsWithState (O(k) memory per group, single pass over
-  *    the candidate iterator — never a collect_list buffer), emitting
-  *    rank/adc/n_scanned exactly like the batch card. State is never
-  *    stored (a query's candidates arrive entirely within its own
-  *    micro-batch, because they all derive from its single input
-  *    row), so the store stays empty — no eviction needed.
+  * The scan is the batch serve's own: [[graft.etl.PqIndex.candidates]]
+  * (row-local probe choice over the literal coarse codebook, the
+  * stream-static cluster-keyed join against cells⋈codes, the
+  * literal-book ADC expression) is stateless, so it runs unchanged on
+  * a streaming frame. What this module adds is the stateful form of
+  * the batch fold: ONE flatMapGroupsWithState per q_id running
+  * [[graft.etl.PqIndex.topK]] (or [[graft.etl.PqIndex.topKRefined]]).
+  * State is never stored (a query's candidates arrive entirely within
+  * its own micro-batch, because they all derive from its single input
+  * row), so the store stays empty — no eviction needed.
   *
   * PqServeStreamSpec pins stream ≡ batch: the same query slice fed as
   * a file stream in arbitrary chunks serves bit-identically to
-  * PqIndex.serve, rank for rank.
+  * PqIndex.serve / serveRefined, rank for rank.
   */
 object PqServeStream {
 
-  final case class Cand(q_id: Long, vec_id: Long, adc: Double)
-  final case class Served(q_id: Long, vec_id: Long, rank: Long,
-      adc: Double, n_scanned: Long)
-  final case class CandR(q_id: Long, vec_id: Long, adc: Double,
-      l2: Double)
-  final case class ServedR(q_id: Long, vec_id: Long, rank: Long,
-      l2: Double, n_scanned: Long)
-
-  /** Bounded top-k fold over one query's candidate iterator: keep the
-    * k smallest (adc, vec_id) in a max-heap, count everything scanned.
-    * Pure — unit-testable without a streaming query; state unused. */
-  def step(k: Int)(qId: Long, rows: Iterator[Cand],
-      state: GroupState[Int]): Iterator[Served] = {
-    val worstFirst = Ordering.by[(Double, Long), (Double, Long)](identity)
-    val heap = mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-    var n = 0L
-    rows.foreach { r =>
-      n += 1
-      heap.enqueue((r.adc, r.vec_id))
-      if (heap.size > k) heap.dequeue()
-    }
-    val worstToBest: Seq[(Double, Long)] = heap.dequeueAll
-    worstToBest.reverse.iterator.zipWithIndex.map {
-      case ((adc, vid), idx) =>
-        Served(qId, vid, (idx + 1).toLong, adc, n)
-    }
-  }
-
-  /** The shared pre-fold ADC scan: row-local probe selection over the
-    * driver-collected codebooks, the stream-static cluster-keyed
-    * candidate join, and the expression-only ADC column. Returns the
-    * candidate frame (q_id, emb, vec_id, code0..) and the ADC
-    * expression over it. */
-  private def adcScan(queries: DataFrame, idx: PqIndex.Index,
-      nprobe: Int): (DataFrame, Column) = {
-    // driver-side snapshots of the bounded trained artifacts
-    val coarse = idx.coarse
-      .select("c_id", "c_emb", "c_norm").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-    require(coarse.nonEmpty && coarse.length <= graft.etl.AnnIndex.K,
-      s"coarse codebook must be 1..${graft.etl.AnnIndex.K} rows")
-    val books = idx.books.map(_.select("c_id", "c_v", "c_vv").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))))
-    // row-local probe selection: rank the literal centroids, explode
-    // the nprobe nearest (struct field order (dist, c_id) gives the
-    // batch serve's exact (dist asc, c_id) ordering)
-    val distStructs = coarse.map { case (cid, cemb, cnorm) =>
-      struct(
-        (lit(1.0) - DotProduct(col("emb"), typedLit(cemb)) /
-          (col("norm") * lit(cnorm))).as("dist"),
-        lit(cid).as("c_id"))
-    }
-    val probed = queries
-      .withColumn("probe", explode(slice(
-        sort_array(array(distStructs: _*)), 1, nprobe)))
-      .select(col("q_id"), col("emb"), col("probe.c_id").as("cluster"))
-    // stream-static candidate join: probed cells' code rows only
-    val cand0 = probed
-      .join(idx.codes.join(idx.cells, Seq("vec_id")), Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-    // expression-only ADC: same formula/inputs as the batch LUT join
-    val adcCols: Seq[Column] = books.zipWithIndex.map { case (book, i) =>
-      val lo = PqIndex.Dims * i + 1
-      val qv = expr(s"slice(emb, $lo, ${PqIndex.Dims})")
-      val cvMap = typedLit(book.map(b => b._1 -> b._2).toMap)
-      val cvvMap = typedLit(book.map(b => b._1 -> b._3).toMap)
-      DotProduct(qv, qv) -
-        lit(2.0) * DotProduct(qv, element_at(cvMap, col(s"code$i"))) +
-        element_at(cvvMap, col(s"code$i"))
-    }
-    (cand0, adcCols.reduce(_ + _))
-  }
-
-  /** The per-(query, candidate) ADC stage — everything before the
-    * stateful fold, all streaming-legal stateless ops. Shared with
-    * [[FusedServeStream]] (the hybrid funnel's dense leg). */
-  def candidates(queries: DataFrame, idx: PqIndex.Index,
-      nprobe: Int = graft.etl.AnnIndex.Probes): Dataset[Cand] = {
-    import queries.sparkSession.implicits._
-    val (cand0, adc) = adcScan(queries, idx, nprobe)
-    cand0
-      .select(col("q_id"), col("vec_id"), adc.as("adc"))
-      .as[Cand]
-  }
-
-  /** Serve top-`k` ADC neighbors for a (possibly streaming) query
-    * frame (q_id, emb, norm) from a loaded index. The coarse codebook
-    * and PQ books are collected at CALL time (≤ 16 and 4×8 rows by
-    * construction — the explicit driver-side cache every serving
-    * process keeps); cells/codes stay distributed. */
+  /** Serve top-`k` ADC neighbors for a (possibly streaming) query frame
+    * (q_id, emb, norm) from a loaded index. */
   def serve(queries: DataFrame, idx: PqIndex.Index,
       nprobe: Int = graft.etl.AnnIndex.Probes, k: Int = 10)
-      : Dataset[Served] = {
+      : Dataset[PqIndex.Served] = {
     import queries.sparkSession.implicits._
-    val cand = candidates(queries, idx, nprobe)
-    if (queries.isStreaming)
-      cand.groupByKey(_.q_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(step(k))
-    else
-      cand.groupByKey(_.q_id).flatMapGroups((q, rows) =>
-        step(k)(q, rows, null))
-  }
-
-  // --------------------------------------------------------------------
-  // The REFINED online serve — the x104-promoted two-stage tail
-  // (PqIndex.serveRefined: ADC top-refineK re-ranked by exact L2,
-  // 92.1% recall@10 at sf1 vs plain ADC's 81.3%) in streaming-legal
-  // form. The batch refine defers the exact arithmetic to a second
-  // join over ≤ refineK rows/query; a stream cannot re-order after
-  // its one stateful fold, so the exact L2 rides ALONG each candidate
-  // row instead — one extra stream-static keyed join (vec_id → the
-  // full-precision embedding, itself cluster-pruned to the scanned
-  // rows) and three DotProduct folds per SCANNED row. That trades
-  // n_scanned − refineK extra exact dots (~1% of serve cost per
-  // probed row at 64 dims) for single-pass legality; the fold then
-  // keeps the ADC top-refineK in a bounded heap and emits the L2
-  // re-ranked top-k — set- and rank-identical to the batch
-  // serveRefined, tie for tie (PqServeStreamSpec pins it).
-  // --------------------------------------------------------------------
-
-  /** [[candidates]] plus the per-row exact L2 against `vecs`
-    * (vec_id, emb — the same relation the batch refine joins).
-    *
-    * PRECONDITION (ADVICE r12): `vecs` must cover EVERY indexed
-    * vec_id. The inner join here runs BEFORE the fold, so a scanned
-    * candidate missing from `vecs` is dropped pre-heap (the next ADC
-    * candidate silently promotes) and excluded from n_scanned —
-    * whereas batch PqIndex.serveRefined counts it in n_scanned and
-    * cuts the ADC top-refineK before its refine join. Stream ≡ batch
-    * (the spec-pinned bit-exactness) only under full coverage; a
-    * partial refine relation diverges silently, so validate coverage
-    * upstream rather than relying on the twin check to catch it. */
-  def candidatesRefined(queries: DataFrame, idx: PqIndex.Index,
-      vecs: DataFrame, nprobe: Int = graft.etl.AnnIndex.Probes)
-      : Dataset[CandR] = {
-    import queries.sparkSession.implicits._
-    val (cand0, adc) = adcScan(queries, idx, nprobe)
-    cand0
-      // the refine leg: full-precision rows for the scanned candidates
-      // only (keyed on vec_id — the scan is already cluster-pruned)
-      .join(vecs.select(col("vec_id"), col("emb").as("d_emb")),
-        Seq("vec_id"))
-      .select(col("q_id"), col("vec_id"), adc.as("adc"),
-        (DotProduct(col("d_emb"), col("d_emb")) -
-          lit(2.0) * DotProduct(col("d_emb"), col("emb")) +
-          DotProduct(col("emb"), col("emb"))).as("l2"))
-      .as[CandR]
-  }
-
-  /** Bounded two-stage fold: ADC top-`refineK` in a max-heap (ties
-    * (adc, vec_id) — the batch rank's exact order), then the exact-L2
-    * re-rank of those, top-`k` out. O(refineK) memory per group.
-    * Pure; state unused. */
-  def stepRefined(refineK: Int, k: Int)(qId: Long,
-      rows: Iterator[CandR], state: GroupState[Int])
-      : Iterator[ServedR] = {
-    val worstFirst =
-      Ordering.by[(Double, Long, Double), (Double, Long)](t =>
-        (t._1, t._2))
-    val heap =
-      mutable.PriorityQueue.empty[(Double, Long, Double)](worstFirst)
-    var n = 0L
-    rows.foreach { r =>
-      n += 1
-      heap.enqueue((r.adc, r.vec_id, r.l2))
-      if (heap.size > refineK) heap.dequeue()
-    }
-    val kept: Seq[(Double, Long, Double)] = heap.dequeueAll
-    kept
-      .map { case (_, vid, l2) => (l2, vid) }
-      .sorted
-      .take(k)
-      .iterator.zipWithIndex
-      .map { case ((l2, vid), idx) =>
-        ServedR(qId, vid, (idx + 1).toLong, l2, n)
-      }
+    if (!queries.isStreaming)
+      return PqIndex.serve(queries, idx, nprobe, k).as[PqIndex.Served]
+    PqIndex.candidates(queries, idx, nprobe).groupByKey(_.q_id)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(
+        (q: Long, rows: Iterator[PqIndex.Cand], _: GroupState[Int]) =>
+          PqIndex.topK(k)(q, rows))
   }
 
   /** Two-stage serve for a (possibly streaming) query frame —
-    * [[graft.etl.PqIndex.serveRefined]]'s online twin. */
+    * [[graft.etl.PqIndex.serveRefined]]'s online twin, under the same
+    * `vecs` coverage precondition. */
   def serveRefined(queries: DataFrame, idx: PqIndex.Index,
       vecs: DataFrame, refineK: Int = PqIndex.RefineK,
       nprobe: Int = graft.etl.AnnIndex.Probes, k: Int = 10)
-      : Dataset[ServedR] = {
+      : Dataset[PqIndex.ServedR] = {
     import queries.sparkSession.implicits._
-    val cand = candidatesRefined(queries, idx, vecs, nprobe)
-    if (queries.isStreaming)
-      cand.groupByKey(_.q_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(stepRefined(refineK, k))
-    else
-      cand.groupByKey(_.q_id).flatMapGroups((q, rows) =>
-        stepRefined(refineK, k)(q, rows, null))
+    if (!queries.isStreaming)
+      return PqIndex.serveRefined(queries, idx, vecs, refineK, nprobe, k)
+        .as[PqIndex.ServedR]
+    PqIndex.candidatesRefined(queries, idx, vecs, nprobe)
+      .groupByKey(_.q_id)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(
+        (q: Long, rows: Iterator[PqIndex.CandR], _: GroupState[Int]) =>
+          PqIndex.topKRefined(refineK, k)(q, rows))
   }
 }

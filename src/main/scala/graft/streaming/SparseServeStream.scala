@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -9,41 +7,25 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.etl.SparseIndex
 
 /** Streaming BM25 serving against a persisted [[graft.etl.SparseIndex]]
-  * — the sparse-family twin of [[PqServeStream]], completing the online
-  * half of the serving story: after round 10 both retrieval families
-  * have a build/serve/append/delete lifecycle AND a "serve a STREAM of
-  * queries" form (queries arrive continuously, the index is loaded
-  * once — what a retrieval endpoint actually runs).
+  * — the sparse-family twin of [[PqServeStream]]: both retrieval
+  * families have a build/serve/append/delete lifecycle AND a "serve a
+  * STREAM of queries" form (queries arrive continuously, the index is
+  * loaded once — what a retrieval endpoint actually runs).
   *
-  * Shape, chosen so the whole plan is streaming-legal with ONE
-  * stateful operator:
-  *  - query tokenization ([[queryTerms]]) is ROW-LOCAL:
-  *    `array_distinct(split(lower(text)))` explodes each query's
-  *    distinct terms with zero shuffle — the same token contract as
-  *    [[graft.etl.SparseIndex.termFreqs]] (distinct toks per doc are
-  *    identical by construction; the spec asserts it);
-  *  - the candidate join is a stream-static equi join on `tok` against
-  *    the stored impact-truncated `plist` (≤ cap rows per term AT ANY
-  *    CORPUS SIZE — the serve bound carries over to the stream
-  *    verbatim), then stream-static joins to `df` and `dl`;
-  *  - the corpus card (`stats`, 1 row by construction) is collected at
-  *    CALL time and baked into the scoring expressions as literals —
-  *    the same driver-side snapshot a serving process keeps, and the
-  *    same trick PqServeStream plays with the coarse codebook. The
-  *    arithmetic is x80's EXACT integer BM25 verbatim (all products
-  *    through DECIMAL(38,0), ppm fractions cleared with `div`), so
-  *    per-term contributions are bit-identical to
-  *    [[graft.etl.SparseIndex.serve]];
-  *  - the (doc sum → top-k) tail — a groupBy + rank window in batch,
-  *    neither streaming-legal in append mode — is ONE
-  *    flatMapGroupsWithState keyed by q_id: sum contributions per doc
-  *    in a hash map (bounded by the serve candidate bound:
-  *    ≤ |query terms| × cap entries), then emit the k best by
-  *    (score_ppm desc, doc_id) with ranks — the exact batch ordering.
-  *    State is never stored (a query's candidates arrive entirely
-  *    within its own micro-batch, because they all derive from its
-  *    input rows via stream-static joins), so the store stays empty —
-  *    no eviction needed and NoTimeout is the honest setting.
+  * The scan is the batch serve's own: [[graft.etl.SparseIndex.contribs]]
+  * (stream-static term-keyed joins against `plist` — ≤ cap rows per
+  * term AT ANY CORPUS SIZE — then `df` and `dl`, with the 1-row corpus
+  * card bound as literals) is stateless, so it runs unchanged on a
+  * streaming frame. Query tokenization ([[queryTerms]]) is row-local
+  * under the same token contract as
+  * [[graft.etl.SparseIndex.termFreqs]] (the spec asserts it). What
+  * this module adds is the stateful form of the batch fold: ONE
+  * flatMapGroupsWithState per q_id running
+  * [[graft.etl.SparseIndex.topK]]. State is never stored (a query's
+  * candidates arrive entirely within its own micro-batch, because they
+  * all derive from its input rows via stream-static joins), so the
+  * store stays empty — no eviction needed and NoTimeout is the honest
+  * setting.
   *
   * SparseServeStreamSpec pins stream ≡ batch: the same query-term
   * relation fed as a file stream in arbitrary chunks serves
@@ -51,10 +33,6 @@ import graft.etl.SparseIndex
   * cross-engine — rank for rank.
   */
 object SparseServeStream {
-
-  final case class Contrib(q_id: Long, doc_id: Long, c_ppm: Long)
-  final case class Served(q_id: Long, doc_id: Long, rank: Long,
-      score_ppm: Long, n_terms: Long)
 
   /** Row-local query tokenization: each query row's DISTINCT terms,
     * under the index's token contract ([a-z]+ runs of lowered text).
@@ -68,72 +46,17 @@ object SparseServeStream {
           .as("tok"))
       .filter(col("tok") =!= "")
 
-  /** Sum one query's per-term contributions by doc and emit the top-k
-    * by (score_ppm desc, doc_id) — the batch groupBy+rank tail as a
-    * single-pass fold. Pure — unit-testable without a streaming query;
-    * state unused (candidates never straddle micro-batches). */
-  def step(k: Int)(qId: Long, rows: Iterator[Contrib],
-      state: GroupState[Int]): Iterator[Served] = {
-    val acc = mutable.HashMap.empty[Long, (Long, Long)]
-    rows.foreach { r =>
-      val (s0, n0) = acc.getOrElse(r.doc_id, (0L, 0L))
-      acc.update(r.doc_id, (s0 + r.c_ppm, n0 + 1L))
-    }
-    acc.iterator
-      .map { case (doc, (s, n)) => (doc, s, n) }
-      .toArray
-      .sortBy { case (doc, s, _) => (-s, doc) }
-      .take(k)
-      .iterator.zipWithIndex
-      .map { case ((doc, s, n), idx) =>
-        Served(qId, doc, (idx + 1).toLong, s, n)
-      }
-  }
-
-  /** The per-(query, term, doc) contribution stage — everything
-    * before the stateful fold, all streaming-legal stateless ops.
-    * Shared with [[FusedServeStream]] (the hybrid funnel's sparse
-    * leg). */
-  def contribs(qterms: DataFrame, idx: SparseIndex.Index)
-      : Dataset[Contrib] = {
-    import qterms.sparkSession.implicits._
-    val st = idx.stats.select("n_docs", "t_tokens").collect()
-    require(st.length == 1, "stats must be the 1-row corpus card")
-    val nDocs = st(0).getLong(0)
-    val tTokens = st(0).getLong(1)
-    qterms
-      .join(idx.plist, "tok")
-      .filter(col("doc_id") =!= col("q_id"))
-      .join(idx.df, "tok")
-      .join(idx.dl, "doc_id")
-      .withColumn("idf_ppm", expr(
-        s"CAST((CAST(1000000 AS DECIMAL(38,0)) * (2*($nDocs - df) + 1))" +
-          " div (2*df + 1) AS BIGINT)"))
-      .withColumn("tfp_ppm", expr(
-        s"CAST((CAST(1000000 AS DECIMAL(38,0)) * 22 * $tTokens * tf) div" +
-          s" (CAST(10 AS DECIMAL(38,0)) * $tTokens * tf + 3 * $tTokens" +
-          s" + 9 * dl * $nDocs) AS BIGINT)"))
-      .select(col("q_id"), col("doc_id"), expr(
-        "CAST((CAST(idf_ppm AS DECIMAL(38,0)) * tfp_ppm)" +
-          " div 1000000 AS BIGINT)").as("c_ppm"))
-      .as[Contrib]
-  }
-
   /** Serve top-`k` BM25 hits for a (possibly streaming) query-term
-    * frame (q_id, tok) from a loaded index. The 1-row `stats` table is
-    * collected at call time; `plist`/`df`/`dl` stay distributed behind
-    * stream-static joins. Scores are bit-identical to
-    * [[graft.etl.SparseIndex.serve]] on the same qterms. */
+    * frame (q_id, tok) from a loaded index. */
   def serve(qterms: DataFrame, idx: SparseIndex.Index, k: Int = 10)
-      : Dataset[Served] = {
+      : Dataset[SparseIndex.Served] = {
     import qterms.sparkSession.implicits._
-    val contrib = contribs(qterms, idx)
-    if (qterms.isStreaming)
-      contrib.groupByKey(_.q_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(step(k))
-    else
-      contrib.groupByKey(_.q_id).flatMapGroups((q, rows) =>
-        step(k)(q, rows, null))
+    if (!qterms.isStreaming)
+      return SparseIndex.serve(qterms, idx, k).as[SparseIndex.Served]
+    SparseIndex.contribs(qterms, idx).groupByKey(_.q_id)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(
+        (q: Long, rows: Iterator[SparseIndex.Contrib],
+          _: GroupState[Int]) => SparseIndex.topK(k)(q, rows))
   }
 }

@@ -225,7 +225,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     "x102_incremental_cc" -> 2,
     // x97's audited serve tail behind the adaptive probe relation
     // (+1: the probe census agg joined into the card)
-    "x103_adaptive_probes" -> 38,
+    "x103_adaptive_probes" -> 37,
     // 0 — the whole point: both scans are bucketed on the join key,
     // the aggregate reuses the layout, and the top-100 plans as
     // TakeOrderedAndProject. The one-time layout shuffle happens at
@@ -250,19 +250,19 @@ class ShuffleBudgetSpec extends SparkSpec {
     // dense stages + the fusion outer join, rerank window, packing
     // window and final sort — everything after the retrievers is
     // <= 10 rows/query
-    "w07_rag_funnel" -> 18,
-    "w07b_rag_funnel_pq" -> 20,
-    "x93c_funnel_pq_recall" -> 24,
+    "w07_rag_funnel" -> 16,
+    "w07b_rag_funnel_pq" -> 10,
+    "x93c_funnel_pq_recall" -> 14,
     "x105_compaction_policy" -> 1,
     "x107_tiered_compaction" -> 1,
     "x108_leveled_compaction" -> 1,
     "x109_geometric_schedule" -> 1,
     "x110_snapshot_cdc" -> 1,
     "w13_cdc_dedup_sync" -> 1,
-    "w12_online_funnel" -> 20,
+    "w12_online_funnel" -> 10,
     // w07's 18 audited stages + x05's truth slice + the per-query
     // eval join/agg over two <= 10-rows/query relations + final sort
-    "x93_funnel_recall" -> 22,
+    "x93_funnel_recall" -> 20,
     // three funnel configs over shared cut arms (truth, sparse, the
     // bucketed corpus): per config one fuse window + rerank window +
     // pack window + grade agg; the two dense arms add a pair census
@@ -294,9 +294,9 @@ class ShuffleBudgetSpec extends SparkSpec {
     "x104_pq_refine" -> 26,
     // the serve plan over the pq lifecycle's MATERIALIZED layout —
     // the nightly writes run eagerly before this plan exists (w09's
-    // shape, dense family): probe ranking + the cluster-keyed scan
-    // join + ADC ranking over parquet the compaction already folded
-    "w10_pq_lifecycle" -> 11,
+    // shape, dense family): row-local probes + the cluster-keyed scan
+    // join + one top-k fold over parquet the compaction already folded
+    "w10_pq_lifecycle" -> 4,
     // the serve plan over the minhash lifecycle's MATERIALIZED
     // layout: band-key candidate join + the two signature verify
     // joins over the parquet the compaction already folded
@@ -308,7 +308,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     // the delete's dirty-term re-truncation + x80's serve joins.
     // Flatter than x99's 17 BY CONSTRUCTION: compaction folded the
     // append segments into parquet the serve just scans
-    "w09_segment_lifecycle" -> 8,
+    "w09_segment_lifecycle" -> 5,
     // x05b's audited candidate plan + the two sliced-embedding joins,
     // the per-query rerank window and the final sort
     "x83_maxsim_rerank" -> 10,
@@ -320,9 +320,9 @@ class ShuffleBudgetSpec extends SparkSpec {
     // the monitor costs one scan of the data that just arrived
     "x87_centroid_drift" -> 15,
     // token tf agg + vocab df agg + the impact-truncation window (tok)
-    // + doc-grain dl agg + the (q_id, doc_id) score agg + final sort;
+    // + doc-grain dl agg + the serve's one per-query top-k fold;
     // the candidate join itself rides the broadcast qterms side
-    "x80_bm25" -> 6,
+    "x80_bm25" -> 3,
     // the build phase alone (x80 minus serve, SparseIndex.build): the
     // token tf agg + vocab df agg + the impact-truncation window (tok)
     // + the per-term census agg/sort; stats rides a 1-row broadcast
@@ -343,8 +343,8 @@ class ShuffleBudgetSpec extends SparkSpec {
     // broadcasts
     "x96_index_delete" -> 10,
     // x96's build+delete stages + the rare-term query selection window
-    // + the serve's candidate join, (q,doc) sum agg and top-10 window
-    "x98_delete_serve" -> 14,
+    // + the serve's candidate join and one per-query top-k fold
+    "x98_delete_serve" -> 10,
     // base build + the append/delete segment derivations (df deltas,
     // doc lengths), the scoped tombstone anti-joins and telescoping
     // df sum of the LIVE VIEW, the dirty-term re-truncation window,
@@ -352,7 +352,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     // segments (23 → 17 when the dirty-term set gained its cut and
     // stopped re-inlining into every consumer; growth per segment is
     // LINEAR, pinned by SparseSegmentsSpec, and compact() resets it)
-    "x99_segmented_serve" -> 17,
+    "x99_segmented_serve" -> 11,
     // per-source prefix-sum window + the (source, shard) census agg
     // — packing is per-source streams, never one global ordering
     "x100_sequence_pack" -> 2,
@@ -409,8 +409,10 @@ class ShuffleBudgetSpec extends SparkSpec {
     // serve — the gate covers the deployable module); serve's two
     // card consumers (top-k + scan census) re-plan the post-cut LUT
     // joins, which AQE broadcasts at runtime (steady 5.0 s at sf0.1;
-    // an outer cut-on-cut was measured SLOWER, 9.7 s, and reverted)
-    "x97_ivfpq_serve" -> 37,
+    // an outer cut-on-cut was measured SLOWER, 9.7 s, and reverted).
+    // 37 -> 33: serve is one scan (codebooks bound as literals, one
+    // top-k fold) — no LUT joins, rank window or scan census join.
+    "x97_ivfpq_serve" -> 33,
     // 3 groupBy-on-dst iteration shuffles + the top-20 sort + one
     // visible join-side exchange; the pairs-distinct and deg aggs sit
     // behind lazy cuts
