@@ -19,9 +19,13 @@ import graft.functions.DotProduct
   * production vector index (FAISS-style IVFADC) actually ships.
   *
   * Stored tables ([[write]]): `coarse` (≤ [[AnnIndex.K]] rows),
-  * `cells` (vec_id → coarse cell), `book0..book3` (8-row PQ codebooks
-  * per subspace), `codes` (vec_id → [[Sub]] code ids — the compressed
-  * corpus; full-precision vectors never touch the serve path).
+  * `book0..book3` (8-row PQ codebooks per subspace), and `codes` —
+  * the IVF inverted lists: one row per vector, (vec_id, cluster,
+  * code0..code3), its coarse cell beside its [[Sub]] code ids. The
+  * compressed corpus is stored in the shape the serve scans, so a
+  * probe joins it on `cluster` directly — no vec_id → cell join and
+  * no corpus-sized hashed relation at serve time; full-precision
+  * vectors never touch the serve path.
   *
   * All kernels are the gated x18/x58/x95/x97 chains verbatim: hash-
   * spread seeds + exact-decimal Lloyd means (bit-identical codebooks
@@ -49,8 +53,9 @@ import graft.functions.DotProduct
   * the PQ books (≤ 16 + 4×8 rows by construction) are collected in
   * one job per call and bound as literals, so probe choice is
   * row-local and ADC scoring is expression-only; one cluster-keyed
-  * join brings nprobe/K of the corpus' CODE rows (4 small ints each,
-  * not 64 doubles); one bounded-heap fold per query emits the top-k.
+  * join of the probes against `codes` brings nprobe/K of the corpus'
+  * CODE rows (4 small ints each, not 64 doubles); one bounded-heap
+  * fold per query emits the top-k.
   */
 object PqIndex {
 
@@ -59,10 +64,11 @@ object PqIndex {
   val Dims = 16
   val K = 8
 
-  /** The IVFPQ index: trained coarse codebook, per-vector cell
-    * assignments, per-subspace PQ codebooks, per-vector code rows. */
-  final case class Index(coarse: DataFrame, cells: DataFrame,
-      books: Seq[DataFrame], codes: DataFrame)
+  /** The IVFPQ index: trained coarse codebook, per-subspace PQ
+    * codebooks, and the per-vector code rows (vec_id, cluster,
+    * code0..code3) — the inverted lists. */
+  final case class Index(coarse: DataFrame, books: Seq[DataFrame],
+      codes: DataFrame)
 
   /** (vec_id, v, vv) slice of subspace `i` from an (vec_id, emb, ...)
     * relation — the shared slicing contract of build, append and the
@@ -120,12 +126,12 @@ object PqIndex {
     * relation (vec_id, emb, norm). */
   def build(e: DataFrame): Index = {
     val coarse = AnnIndex.train(e).cut(false) // assignment + every probe
-    val cells = AnnIndex.assign(e, coarse).select("vec_id", "cluster")
     val subs = (0 until Sub).map(i => subspace(e, i))
     val codes = subs.zipWithIndex
       .map { case ((c, _), i) => c.select(col("vec_id"), col(s"code$i")) }
-      .reduce((a, b) => a.join(b, Seq("vec_id")))
-    Index(coarse, cells, subs.map(_._2), codes)
+      .foldLeft(AnnIndex.assign(e, coarse).select("vec_id", "cluster"))(
+        (a, b) => a.join(b, Seq("vec_id")))
+    Index(coarse, subs.map(_._2), codes)
   }
 
   /** One scanned (query, code row) pair and its ADC score. */
@@ -190,12 +196,12 @@ object PqIndex {
   }
 
   /** The one scan behind every serve: probed (q_id, cluster, ...)
-    * rows join the stored cells⋈codes on `cluster` — only probed
-    * cells' CODE rows flow, never full-precision vectors —
+    * rows join the stored inverted lists `codes` on `cluster` — only
+    * probed cells' CODE rows flow, never full-precision vectors —
     * self-matches dropped. */
   private def scan(probed: DataFrame, idx: Index): DataFrame =
     probed
-      .join(idx.codes.join(idx.cells, Seq("vec_id")), Seq("cluster"))
+      .join(idx.codes, Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
 
   /** ADC of a scanned row (query `emb`, codes `code0..`): per subspace
@@ -349,10 +355,7 @@ object PqIndex {
     * shard's vec_ids are disjoint from the indexed corpus — the
     * family-wide ingest contract; a revision is [[delete]] + append. */
   def append(idx: Index, eNew: DataFrame): Index = {
-    // the check reads `codes` (same vec_id set as `cells` by
-    // construction) so a codes-only consumer never forces the coarse
-    // training/assignment subtree just to assert disjointness. Eager
-    // check kept on this IN-MEMORY api (the returned Index's frames
+    // Eager check kept on this IN-MEMORY api (the returned Index's frames
     // each embed the shard — an in-plan guard would duplicate per
     // consumer); the disk path (PqSegments.appendSeg) guards in-plan.
     val clash = idx.codes.select("vec_id")
@@ -361,49 +364,41 @@ object PqIndex {
     require(clash == 0L,
       "PqIndex.append: shard vec_ids overlap the indexed corpus — " +
         "append is defined for disjoint shards (revise = delete + append)")
-    val (cellsNew, codesNew) = encodeShard(idx, eNew)
-    Index(idx.coarse, idx.cells.unionByName(cellsNew), idx.books,
-      idx.codes.unionByName(codesNew))
+    Index(idx.coarse, idx.books,
+      idx.codes.unionByName(encodeShard(idx, eNew)))
   }
 
-  /** Frozen-codebook (cells, codes) encode of a shard — the per-row
-    * kernel [[append]] folds in and [[graft.etl.PqSegments]] persists
-    * as an O(delta) segment. */
-  def encodeShard(idx: Index, eNew: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val cellsNew = AnnIndex.assign(eNew, idx.coarse)
-      .select("vec_id", "cluster")
-    val codesNew = (0 until Sub)
+  /** Frozen-codebook encode of a shard into code rows (vec_id, cluster,
+    * code0..code3) — the per-row kernel [[append]] folds in and
+    * [[graft.etl.PqSegments]] persists as an O(delta) segment. */
+  def encodeShard(idx: Index, eNew: DataFrame): DataFrame =
+    (0 until Sub)
       .map(i => encode(slice(eNew, i), idx.books(i))
         .select(col("vec_id"), col("cluster").as(s"code$i")))
-      .reduce((a, b) => a.join(b, Seq("vec_id")))
-    (cellsNew, codesNew)
-  }
+      .foldLeft(AnnIndex.assign(eNew, idx.coarse)
+        .select("vec_id", "cluster"))((a, b) => a.join(b, Seq("vec_id")))
 
-  /** Retract vectors — keyed anti-joins on `cells` and `codes`, exact
-    * by row-locality under the frozen codebooks (the same argument as
+  /** Retract vectors — one keyed anti-join on `codes`, exact by
+    * row-locality under the frozen codebooks (the same argument as
     * [[AnnIndex.delete]]; serve over the deleted index ≡ serve over a
     * frozen-codebook encode of the remaining corpus). Deleting an
     * absent id is a no-op. */
-  def delete(idx: Index, vecIds: DataFrame): Index = {
-    val del = vecIds.select("vec_id").distinct()
-    Index(idx.coarse,
-      idx.cells.join(del, Seq("vec_id"), "left_anti"),
-      idx.books,
-      idx.codes.join(del, Seq("vec_id"), "left_anti"))
-  }
+  def delete(idx: Index, vecIds: DataFrame): Index =
+    idx.copy(codes = idx.codes.join(vecIds.select("vec_id").distinct(),
+      Seq("vec_id"), "left_anti"))
 
-  /** Persist the 3 + [[Sub]] index tables under `dir`. */
+  /** The 2 + [[Sub]] index tables by name. */
+  private[etl] def tables(idx: Index): Seq[(String, DataFrame)] =
+    Seq("coarse" -> idx.coarse, "codes" -> idx.codes) ++
+      (0 until Sub).map(i => s"book$i" -> idx.books(i))
+
+  /** Persist the 2 + [[Sub]] index tables under `dir`. */
   def write(idx: Index, dir: String): Unit =
-    graft.sources.Sources.writeOrdered(
-      Seq("coarse" -> idx.coarse, "cells" -> idx.cells,
-        "codes" -> idx.codes) ++
-        (0 until Sub).map(i => s"book$i" -> idx.books(i)), dir)
+    graft.sources.Sources.writeOrdered(tables(idx), dir)
 
   /** Load a persisted index. */
   def read(s: SparkSession, dir: String): Index =
     Index(SegmentOps.readKnown(s, s"$dir/coarse"),
-      SegmentOps.readKnown(s, s"$dir/cells"),
       (0 until Sub).map(i => SegmentOps.readKnown(s, s"$dir/book$i")),
       SegmentOps.readKnown(s, s"$dir/codes"))
 }

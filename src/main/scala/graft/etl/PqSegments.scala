@@ -7,25 +7,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (sparse) and [[MinHashSegments]] (MinHash). The trained artifacts
   * (coarse codebook + PQ books) are FROZEN at build time — the
   * family's whole lifecycle contract — so a segment is just the
-  * frozen-book encode of the shard ([[PqIndex.encodeShard]]: cell
-  * assignments + code rows, both per-row) or a tombstone set; the
-  * live view is [[SegmentOps.scopedUnion]] on `cells` and `codes`
-  * with the base's books passed through. No term/posting repair
-  * exists in this family (nothing is shared between vectors), which
-  * is why the whole module is composition: the per-row kernels it
-  * persists are exactly the ones PqIndexSpec pins (append = frozen
-  * encode, delete = anti-join) and x97's oracle gates through
-  * `PqIndex.serve`. PqSegmentsSpec pins view ≡ fold-in
-  * append/delete, delete-then-revise scoping, O(delta) disk writes,
-  * and compact ≡ segmented.
+  * frozen-book encode of the shard ([[PqIndex.encodeShard]]: code rows
+  * that carry their coarse cell, per-row) or a tombstone set; the
+  * live view is [[SegmentOps.scopedUnion]] on `codes` with the base's
+  * books passed through. The stored rows are already in the serve's
+  * inverted-list shape (vec_id, cluster, code0..code3), so a serve
+  * over the view is the probe join on `cluster` plus one tombstone
+  * anti-join per segment that deletes — no vec_id → cell join. No
+  * term/posting repair exists in this family (nothing is shared
+  * between vectors), which is why the whole module is composition:
+  * the per-row kernels it persists are exactly the ones PqIndexSpec
+  * pins (append = frozen encode, delete = anti-join) and x97's oracle
+  * gates through `PqIndex.serve`. The base's 1-row `meta` records the
+  * layout [[Format]]; every entry point refuses a layout of another
+  * format. PqSegmentsSpec pins view ≡ fold-in append/delete,
+  * delete-then-revise scoping, O(delta) disk writes, and
+  * compact ≡ segmented.
   */
 object PqSegments {
 
+  /** The on-disk layout format this build reads and writes: 2 = the
+    * code rows carry their cell and no `cells` table exists. (Layouts
+    * without a `meta` table are format 1.) */
+  val Format = 2
+
   /** One maintenance operation's delta bundle: an append segment's
-    * frozen-book encode (cells + codes), or a delete segment's
-    * tombstones. */
-  final case class Seg(cellsAdd: DataFrame, codesAdd: DataFrame,
-      tombs: DataFrame)
+    * frozen-book encode, or a delete segment's tombstones. */
+  final case class Seg(codesAdd: DataFrame, tombs: DataFrame)
 
   /** Build an APPEND segment: the shard's frozen-book encode.
     * Precondition (asserted): shard vec_ids are disjoint from the
@@ -43,8 +51,7 @@ object PqSegments {
       "PqSegments.appendSegOf: shard vec_ids overlap the live corpus " +
         "— append segments are for disjoint shards (revise = " +
         "deleteSeg + appendSeg)")
-    val (cellsNew, codesNew) = PqIndex.encodeShard(live, eNew)
-    Seg(cellsNew, codesNew,
+    Seg(PqIndex.encodeShard(live, eNew),
       SegmentOps.emptyLike(eNew.select("vec_id")))
   }
 
@@ -59,8 +66,7 @@ object PqSegments {
       "PqSegments.appendSeg: shard vec_ids overlap the live corpus " +
         "— append segments are for disjoint shards (revise = " +
         "deleteSeg + appendSeg)")
-    val (cellsNew, codesNew) = PqIndex.encodeShard(live, eNew)
-    Seg(cellsNew, codesNew,
+    Seg(PqIndex.encodeShard(live, eNew),
       SegmentOps.emptyLike(eNew.select("vec_id")))
   }
 
@@ -68,36 +74,41 @@ object PqSegments {
     * are statically-empty LocalRelations so the view's unions elide
     * them). Deleting an absent id is a no-op. */
   def deleteSegOf(live: PqIndex.Index, vecIds: DataFrame): Seg =
-    Seg(SegmentOps.emptyLike(live.cells),
-      SegmentOps.emptyLike(live.codes),
+    Seg(SegmentOps.emptyLike(live.codes),
       vecIds.select("vec_id").distinct())
 
   /** Compose base + segments into the LIVE index view. */
   def view(base: PqIndex.Index, segs: Seq[Seg]): PqIndex.Index =
-    PqIndex.Index(base.coarse,
-      SegmentOps.scopedUnion(base.cells, segs.map(_.cellsAdd),
-        segs.map(_.tombs), "vec_id"),
-      base.books,
-      SegmentOps.scopedUnion(base.codes, segs.map(_.codesAdd),
-        segs.map(_.tombs), "vec_id"))
+    base.copy(codes = SegmentOps.scopedUnion(base.codes,
+      segs.map(_.codesAdd), segs.map(_.tombs), "vec_id"))
 
   // ------------------------------------------------------------------
-  // Disk layout: root/base/<PqIndex.write tables>,
-  // root/segs/seg=<n>/{cells,codes,tombs}
+  // Disk layout: root/base/{<PqIndex.write tables>,meta},
+  // root/segs/seg=<n>/{codes,tombs}
   // ------------------------------------------------------------------
 
   /** Write `idx` as the base generation of a segmented layout. */
   def init(idx: PqIndex.Index, root: String): Unit = {
-    PqIndex.write(idx, s"$root/base")
+    writeBase(idx, s"$root/base")
     SegmentOps.publishManifest(idx.codes.sparkSession, root, "base",
       Seq.empty)
   }
 
+  /** The index tables plus the 1-row `meta` (zero-job local write). */
+  private def writeBase(idx: PqIndex.Index, dirAbs: String): Unit =
+    graft.sources.Sources.writeOrdered(PqIndex.tables(idx) :+
+      ("meta" -> SegmentOps.metaTable(idx.codes.sparkSession,
+        "format" -> Format)), dirAbs)
+
+  private def checkFormat(s: SparkSession, root: String,
+      snap: SegmentOps.Snapshot): Unit =
+    SegmentOps.requireFormat(s, s"$root/${snap.baseDir}", "PqSegments",
+      Format)
+
   private def writeSeg(s: SparkSession, seg: Seg, root: String,
       n: Int, kind: Char, tag: Option[String]): Unit =
     SegmentOps.publishSeg(s, root, n, kind,
-      Seq("cells" -> seg.cellsAdd, "codes" -> seg.codesAdd,
-        "tombs" -> seg.tombs), tag)
+      Seq("codes" -> seg.codesAdd, "tombs" -> seg.tombs), tag)
 
   /** Read one on-disk segment; the kind tag rebuilds the vacuous
     * tables as statically-empty LocalRelations (join elision — see
@@ -108,7 +119,6 @@ object PqSegments {
       SegmentOps.readKnown(s, s"$root/segs/$dirName/$name")
     def emptyT(name: String) = SegmentOps.emptyLike(t(name))
     Seg(
-      cellsAdd = if (kind == 'd') emptyT("cells") else t("cells"),
       codesAdd = if (kind == 'd') emptyT("codes") else t("codes"),
       tombs = if (kind == 'a') emptyT("tombs") else t("tombs"))
   }
@@ -126,6 +136,7 @@ object PqSegments {
 
   private def readSnap(s: SparkSession, root: String,
       snap: SegmentOps.Snapshot): PqIndex.Index = {
+    checkFormat(s, root, snap)
     val base = PqIndex.read(s, s"$root/${snap.baseDir}")
     val segs = snap.segs.map { case (_, d, k) => readSeg(s, root, d, k) }
     if (segs.isEmpty) base else view(base, segs)
@@ -170,8 +181,7 @@ object PqSegments {
 
   /** TIERED compaction of an arbitrary contiguous range — the dense
     * family's twin of [[MinHashSegments.mergeSegsAt]], same positional
-    * algebra applied to BOTH per-row tables (cells and codes share the
-    * vec_id key, so one range's scoped union folds each): merged adds
+    * algebra applied to the per-row code table: merged adds
     * = the range's own scoped union over an empty base (within-range
     * delete-then-revise collapses to the revision), merged tombs = the
     * range's tomb union (at the range's slot they mask exactly what
@@ -190,12 +200,10 @@ object PqSegments {
     require(from >= 0 && k >= 2 && from + k <= snap.segs.size,
       s"PqSegments.mergeSegsAt: range [$from, ${from + k}) outside " +
         s"the snapshot's ${snap.segs.size} segments (k >= 2)")
+    checkFormat(s, root, snap)
     val range = snap.segs.slice(from, from + k)
     val segs = range.map { case (_, d, kd) => readSeg(s, root, d, kd) }
     val tombsSeq = segs.map(_.tombs)
-    val cellsM = SegmentOps.scopedUnion(
-      SegmentOps.emptyLike(segs.head.cellsAdd),
-      segs.map(_.cellsAdd), tombsSeq, "vec_id")
     val codesM = SegmentOps.scopedUnion(
       SegmentOps.emptyLike(segs.head.codesAdd),
       segs.map(_.codesAdd), tombsSeq, "vec_id")
@@ -205,7 +213,7 @@ object PqSegments {
       else if (kinds == Set('d')) 'd' else 'm'
     val name = s"seg=${range.last._1}-$kind-g${snap.version + 1}"
     SegmentOps.publishSegDir(s, root, name,
-      Seq("cells" -> cellsM, "codes" -> codesM, "tombs" -> tombsM))
+      Seq("codes" -> codesM, "tombs" -> tombsM))
     SegmentOps.flipMergedAt(s, root, snap, from, k, name)
     ()
   }
@@ -218,7 +226,7 @@ object PqSegments {
       fanout: Int = 4, ratio: Double = 1.5): Int =
     SegmentOps.tieredMaintainWith(s, root, minRun, fanout, ratio)(
       d => SegmentOps.footerRows(s,
-        Seq("cells", "codes", "tombs").map(t => s"$root/segs/$d/$t")),
+        Seq("codes", "tombs").map(t => s"$root/segs/$d/$t")),
       mergeSegsAt(s, root, _, _))
 
   /** Fold the segments into a fresh base at `outRoot` (the books and
@@ -234,7 +242,7 @@ object PqSegments {
   def compactInPlace(s: SparkSession, root: String): Unit = {
     val snap = SegmentOps.resolveSnapshot(s, root)
     val nb = SegmentOps.nextBaseDir(snap)
-    PqIndex.write(readSnap(s, root, snap), s"$root/$nb")
+    writeBase(readSnap(s, root, snap), s"$root/$nb")
     SegmentOps.flipCompacted(s, root, snap, nb)
     ()
   }

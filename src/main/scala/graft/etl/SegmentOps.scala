@@ -7,23 +7,27 @@ import org.apache.spark.sql.DataFrame
   * tombstones mask the base and additions j < i, never later ones, so
   * deleting a document and re-appending its revision in a later
   * segment is correct by construction (the delete-then-revise chain
-  * each family's spec pins). [[SparseSegments]] layers term-level
-  * repair on top; the dense ([[PqSegments]]) and MinHash
-  * ([[MinHashSegments]]) families' stored rows are per-document, so
-  * this rule alone IS their live view.
+  * each family's spec pins). [[SparseSegments]] also applies it keyed
+  * on the term, to its write-time-repaired posting lists; the dense
+  * ([[PqSegments]]) and MinHash ([[MinHashSegments]]) families' stored
+  * rows are per-document, so this rule alone IS their live view.
   */
 object SegmentOps {
 
   /** base ∪ adds(i), with tombs(i) masking base and adds(j < i) on
     * `key`. `adds` and `tombs` are parallel per-segment sequences (an
-    * append segment has empty tombs; a delete segment an empty add). */
+    * append segment has empty tombs; a delete segment an empty add).
+    * Each branch takes ONE anti-join against the union of the tombs
+    * that mask it, so the plan grows by one join per segment — linear
+    * in the segment count (statically-empty tombs drop out of the
+    * union, and an all-empty union elides its join). */
   def scopedUnion(base: DataFrame, adds: Seq[DataFrame],
       tombs: Seq[DataFrame], key: String): DataFrame = {
     require(adds.size == tombs.size,
       "scopedUnion: adds/tombs must be parallel per-segment sequences")
     def masked(df: DataFrame, ts: Seq[DataFrame]): DataFrame =
-      ts.foldLeft(df)((acc, t) =>
-        acc.join(t.select(key), Seq(key), "left_anti"))
+      ts.map(_.select(key)).reduceOption(_ unionByName _)
+        .fold(df)(m => df.join(m, Seq(key), "left_anti"))
     adds.zipWithIndex
       .map { case (a, i) => masked(a, tombs.drop(i + 1)) }
       .foldLeft(masked(base, tombs))(_ unionByName _)
@@ -195,20 +199,54 @@ object SegmentOps {
     * `meta`) on the driver — same value as
     * `spark.read.parquet(dir).select(field).head()`, zero jobs. */
   def readMetaInt(s: org.apache.spark.sql.SparkSession,
-      dirAbs: String, field: String): Int = {
+      dirAbs: String, field: String): Int =
+    readMetaIntOpt(s, dirAbs, field).getOrElse(throw
+      new IllegalArgumentException(
+        s"readMetaInt: no `$field` row under $dirAbs"))
+
+  /** [[readMetaInt]], or None when the table or the field is absent. */
+  def readMetaIntOpt(s: org.apache.spark.sql.SparkSession,
+      dirAbs: String, field: String): Option[Int] = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dirAbs)
     val fs = p.getFileSystem(conf)
-    val rows = parquetParts(fs, p).iterator.flatMap { f =>
+    if (!fs.exists(p)) return None
+    parquetParts(fs, p).iterator.flatMap { f =>
       val rdr = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example
           .GroupReadSupport(), f)
         .withConf(conf).build()
-      try Option(rdr.read()).map(_.getInteger(field, 0))
+      try Option(rdr.read())
+        .filter(_.getType.containsField(field))
+        .map(_.getInteger(field, 0))
       finally rdr.close()
-    }
-    require(rows.hasNext, s"readMetaInt: no rows under $dirAbs")
-    rows.next()
+    }.nextOption()
+  }
+
+  /** A 1-row table of INT fields — a layout's `meta`. A LocalRelation,
+    * so [[graft.sources.Sources.writeOrdered]] writes it on its
+    * zero-job driver-side path. */
+  def metaTable(s: org.apache.spark.sql.SparkSession,
+      fields: (String, Int)*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField,
+      StructType}
+    s.createDataFrame(
+      java.util.Collections.singletonList(
+        org.apache.spark.sql.Row(fields.map(_._2): _*)),
+      StructType(fields.map(f =>
+        StructField(f._1, IntegerType, nullable = false))))
+  }
+
+  /** Fail loudly unless the layout generation at `baseAbs` records
+    * layout format `format` in its `meta` table. A layout written
+    * before the format field existed reads as format 1. */
+  def requireFormat(s: org.apache.spark.sql.SparkSession,
+      baseAbs: String, family: String, format: Int): Unit = {
+    val found = readMetaIntOpt(s, s"$baseAbs/meta", "format").getOrElse(1)
+    require(found == format,
+      s"$family: layout $baseAbs is in layout format $found, but this " +
+        s"build reads format $format only — rebuild the layout from " +
+        "its source (init) to upgrade it")
   }
 
   // ------------------------------------------------------------------
@@ -562,8 +600,8 @@ object SegmentOps {
     * extra plan depth (linear, by the growth specs) and it is free to
     * read (one manifest line / directory listing; no data scanned).
     * Families with a data-dependent repair cost can OR in their own
-    * signal ([[SparseSegments.dirtyBucketFraction]] — the fraction of
-    * base-tf partitions the dirty-term re-truncation must rescan).
+    * signal ([[SparseSegments.shadowedListFraction]] — the fraction of
+    * the base's posting lists that segment lists replace at serve).
     * The nightly shape (w09): ingest via appendSeg/deleteSeg, serve
     * through the view, and when this fires run compactInPlace —
     * amortized write cost stays O(delta · maxSegs / maxSegs) per

@@ -13,18 +13,32 @@ import graft.etl.Checkpoints.CutOps
   * [[AnnIndex]] (x79) and the MinHash family's `NearDup.writeIndex`
   * (x82). A 100 TB deployment does not re-tokenize the corpus and
   * re-truncate its posting lists inside every query batch: the index is
-  * built once ([[build]]), persisted as five plain tables ([[write]]:
-  * `plist` — the impact-truncated posting lists, ≤ [[ImpactCap]] rows
-  * per term; `df` — FULL document frequency per term, pre-truncation,
-  * so idf never drifts as lists are capped; `dl` — document length, one
-  * row per doc; `stats` — the 1-row corpus card (n_docs, t_tokens);
-  * `tf` — the full pre-truncation term frequencies, the un-truncation
-  * source [[delete]] backfills capped lists from), and query batches
-  * are served from the loaded tables ([[serve]]) with zero index work
-  * in the query path. The maintenance lifecycle is complete in-family:
-  * [[append]] folds a disjoint shard in, [[delete]] retracts documents,
-  * and a revision is delete + append — each exact, each touching only
-  * the shard's/deletion's terms.
+  * built once ([[build]]), persisted as five plain tables ([[write]]),
+  * and query batches are served from the loaded tables ([[serve]]) with
+  * zero index work in the query path.
+  *
+  * Stored tables, each in the shape its reader scans:
+  *  - `plist` — the impact-truncated posting lists, ≤ [[ImpactCap]]
+  *    rows per term, each row `(doc_id, tok, tf, dl, df)`: the posting
+  *    carries its document's length and its term's FULL (pre-
+  *    truncation) document frequency, so a serve is one term-keyed
+  *    join and idf never drifts as lists are capped;
+  *  - `df` — full document frequency per term (the query-term choice
+  *    of the cards reads it; the serve does not);
+  *  - `dl` — document length, one row per doc;
+  *  - `stats` — the 1-row corpus card (n_docs, t_tokens);
+  *  - `tf` — the full pre-truncation term frequencies, the
+  *    un-truncation source [[delete]] re-truncates capped lists from.
+  * `dl` and `df` on a posting never go stale while the posting is
+  * stored: a document's length changes only through delete + append,
+  * and a delete re-truncates every term the document contained, so no
+  * stored list keeps a deleted document; a term's `df` changes only
+  * when an append or delete touches the term, which rebuilds its list.
+  *
+  * The maintenance lifecycle is complete in-family: [[append]] folds a
+  * disjoint shard in, [[delete]] retracts documents, and a revision is
+  * delete + append — each exact, each touching only the shard's/
+  * deletion's terms.
   *
   * [[append]] is the incremental path and is EXACT, not approximate:
   * for a delta shard whose doc_ids are disjoint from the indexed corpus
@@ -34,10 +48,11 @@ import graft.etl.Checkpoints.CutOps
   * monotonicity: any posting in top-cap(base ∪ delta) is either a delta
   * posting or already inside top-cap(base) — a base posting outside the
   * stored top-cap has ≥ cap base postings ahead of it in the
-  * (tf desc, doc_id) impact order, so it can never re-enter. df/dl/
-  * stats are plain additive unions. SparseIndexSpec pins both halves:
-  * write→read→serve ≡ the inline oracle-gated path, and
-  * append ≡ full rebuild on all four tables.
+  * (tf desc, doc_id) impact order, so it can never re-enter. A touched
+  * term's new df is its stored df plus the delta's postings of it;
+  * dl/stats are plain additive unions. SparseIndexSpec pins both
+  * halves: write→read→serve ≡ the inline oracle-gated path, and
+  * append ≡ full rebuild on every table.
   *
   * Scoring ([[serve]]) is x80's EXACT integer BM25 verbatim (k1 = 1.2,
   * b = 0.75, log-free rational idf in ppm, all fractions cleared, every
@@ -46,16 +61,17 @@ import graft.etl.Checkpoints.CutOps
   * so the persisted index inherits the oracle gate without a second
   * oracle (the AnnIndex pattern).
   *
-  * Scale: build cost is one tokenize scan + three keyed aggs + one
-  * per-term truncation window, amortized over every serve; serve cost
-  * is one term-keyed candidate join bounded ≤ cap rows per query term
-  * AT ANY CORPUS SIZE (the WAND/MaxScore discipline — the uncapped join
-  * was measured at 55M rows / 492 s at sf1 on this corpus's 31-token
-  * stop-word vocabulary) and one per-query fold that sums by doc and
-  * keeps the top-k — the same scan and fold the streaming twin
-  * ([[graft.streaming.SparseServeStream]]) runs; append touches the
-  * delta and the stored lists of the delta's terms only — never the
-  * rest of the index.
+  * Scale: build cost is one tokenize scan + the df agg + one per-doc
+  * length window (whose partitioning also yields `dl`) + one per-term
+  * truncation window, amortized over every serve; serve cost
+  * is one term-keyed join against `plist`, bounded ≤ cap rows per
+  * query term AT ANY CORPUS SIZE (the WAND/MaxScore discipline — the
+  * uncapped join was measured at 55M rows / 492 s at sf1 on this
+  * corpus's 31-token stop-word vocabulary) and one per-query fold that
+  * sums by doc and keeps the top-k — the same scan and fold the
+  * streaming twin ([[graft.streaming.SparseServeStream]]) runs; append
+  * touches the delta and the stored lists of the delta's terms only —
+  * never the rest of the index.
   */
 object SparseIndex {
 
@@ -63,17 +79,15 @@ object SparseIndex {
     * (tf desc, doc_id) — impact ordering. */
   val ImpactCap = 1000
 
-  /** The five index tables. `df` is FULL document frequency
-    * (pre-truncation); `plist` is capped; `stats` is 1 row; `tf` is the
-    * FULL pre-truncation term-frequency relation — the un-truncation
-    * source that makes [[delete]] exact (a deleted posting inside a
-    * term's top-cap is backfilled from `tf`, which the capped `plist`
-    * alone cannot do). The cap bounds SERVE cost, not storage: `tf` is
-    * the same rows the build already scanned once, kept instead of
-    * discarded — the standard forward-index trade for exact
-    * maintenance. */
+  /** The five index tables — see the class doc for each one's shape.
+    * The cap bounds SERVE cost, not storage: `tf` is the same rows the
+    * build already scanned once, kept instead of discarded — the
+    * standard forward-index trade for exact maintenance. */
   final case class Index(plist: DataFrame, df: DataFrame,
       dl: DataFrame, stats: DataFrame, tf: DataFrame)
+
+  /** The columns of a stored posting-list row. */
+  val PlistCols: Seq[String] = Seq("doc_id", "tok", "tf", "dl", "df")
 
   /** (doc_id, tok, tf) term frequencies from a documents table —
     * the tokenizer contract shared by build, append and the query
@@ -85,23 +99,78 @@ object SparseIndex {
       .filter(col("tok") =!= "")
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
 
-  /** Truncate a tf relation to the top-[[ImpactCap]] postings per term
-    * in impact order (tf desc, doc_id). */
-  private[etl] def truncate(tf: DataFrame, cap: Int): DataFrame =
-    tf.withColumn("prk", row_number().over(Window.partitionBy("tok")
-        .orderBy(col("tf").desc, col("doc_id"))))
-      .filter(col("prk") <= cap)
-      .select("doc_id", "tok", "tf")
+  /** Top-`cap` posting lists per term in impact order (tf desc,
+    * doc_id) of candidate rows (doc_id, tok, tf, df, ddf, ...): a term's
+    * new `df` is the largest `df` among its rows plus the sum of their
+    * `ddf`. A stored list row brings its term's df with ddf 0, a fresh
+    * posting df 0 with ddf 1, so one window both truncates and counts
+    * — the cap's monotonicity makes (stored top-cap ∪ fresh postings)
+    * enough for an append, and (every live posting) gives a rebuild.
+    * Only terms with a fresh posting get a list: a term whose rows are
+    * all stored keeps its stored list. Other columns pass through. */
+  private[etl] def lists(rows: DataFrame, cap: Int): DataFrame = {
+    val w = Window.partitionBy("tok")
+      .orderBy(col("tf").desc, col("doc_id"))
+    val all = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    rows.withColumn("prk", row_number().over(w))
+      .withColumn("fresh", sum("ddf").over(all))
+      .withColumn("df", max("df").over(all) + col("fresh"))
+      .filter(col("prk") <= cap && col("fresh") > 0)
+      .drop("prk", "ddf", "fresh")
+  }
+
+  /** Posting lists rebuilt from every live posting of their terms
+    * (doc_id, tok, tf), each row given its document's length from
+    * `dl`. */
+  private[etl] def relist(tf: DataFrame, dl: DataFrame, cap: Int)
+      : DataFrame =
+    lists(tf.select(col("doc_id"), col("tok"), col("tf"),
+        lit(0L).as("df"), lit(1L).as("ddf")), cap)
+      .join(dl, "doc_id")
+      .select(PlistCols.map(col): _*)
+
+  /** Postings (doc_id, tok, tf) with their document's length `dl`:
+    * one window over `doc_id`. Its output stays partitioned by
+    * `doc_id`, so the (doc_id, dl) table derives from it ([[dlOf]])
+    * without another exchange — the lists carry `dl` for the price of
+    * the `dl` aggregation they replace. */
+  private[etl] def withDl(tf: DataFrame): DataFrame =
+    tf.select("doc_id", "tok", "tf")
+      .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")))
+
+  /** The (doc_id, dl) table of a [[withDl]] relation. */
+  private[etl] def dlOf(tfDl: DataFrame): DataFrame =
+    tfDl.select("doc_id", "dl").distinct()
+
+  /** The new lists of the terms a disjoint delta (doc_id, tok, tf, dl)
+    * touches, from the stored lists `plist` and the delta's postings
+    * — no tf read (the class doc's monotonicity argument). The stored
+    * lists go into the one window whole rather than through a
+    * semi-join with the delta's term set: the window's exchange is
+    * paid either way, and the term set's aggregation and broadcast
+    * would be two more jobs in front of it. */
+  private[etl] def appendLists(plist: DataFrame, deltaDl: DataFrame,
+      cap: Int): DataFrame =
+    lists(plist.select(PlistCols.map(col) :+ lit(0L).as("ddf"): _*)
+        .unionByName(deltaDl.select(col("doc_id"), col("tok"),
+          col("tf"), col("dl"), lit(0L).as("df"), lit(1L).as("ddf"))),
+      cap)
+      .select(PlistCols.map(col): _*)
 
   /** Build the index from a tf relation ([[termFreqs]] output). The tf
     * input should be `.cut` by the caller when it has other consumers
     * (x80 also derives its query terms from it). */
   def build(tf: DataFrame, cap: Int = ImpactCap): Index = {
     val df = tf.groupBy("tok").agg(count(lit(1)).as("df")).cut(false)
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val tfDl = withDl(tf)
+    val dl = dlOf(tfDl)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
-    Index(truncate(tf, cap), df, dl, stats, tf)
+    Index(lists(tfDl.withColumn("df", lit(0L))
+        .withColumn("ddf", lit(1L)), cap)
+        .select(PlistCols.map(col): _*),
+      df, dl, stats, tf)
   }
 
   /** One (query, term, doc) BM25 contribution. */
@@ -111,14 +180,15 @@ object SparseIndex {
       score_ppm: Long, n_terms: Long)
 
   /** Per-(query, term, doc) contributions of a query-term relation
-    * (q_id, tok): term-keyed joins against `plist` (≤ cap rows per
-    * term), `df` and `dl`, self-matches (doc_id = q_id) excluded —
-    * x80's corpus-probe contract, a no-op for external query id
-    * spaces. The 1-row corpus card `stats` is collected in one job per
-    * call and bound into the scoring expressions as literals; the
-    * arithmetic is x80's exact integer BM25 verbatim (all products
-    * through DECIMAL(38,0), ppm fractions cleared with `div`).
-    * Stateless, so a streaming qterms frame may use it too. */
+    * (q_id, tok): ONE term-keyed join against `plist` (≤ cap rows per
+    * term, each carrying its `dl` and `df`), self-matches
+    * (doc_id = q_id) excluded — x80's corpus-probe contract, a no-op for
+    * external query id spaces. The 1-row corpus card `stats` is
+    * collected in one job per call and bound into the scoring
+    * expressions as literals; the arithmetic is x80's exact integer
+    * BM25 verbatim (all products through DECIMAL(38,0), ppm fractions
+    * cleared with `div`). Stateless, so a streaming qterms frame may
+    * use it too. */
   def contribs(qterms: DataFrame, idx: Index): Dataset[Contrib] = {
     import qterms.sparkSession.implicits._
     val st = idx.stats.select("n_docs", "t_tokens").collect()
@@ -128,8 +198,6 @@ object SparseIndex {
     qterms
       .join(idx.plist, "tok")
       .filter(col("doc_id") =!= col("q_id"))
-      .join(idx.df, "tok")
-      .join(idx.dl, "doc_id")
       .withColumn("idf_ppm", expr(
         s"CAST((CAST(1000000 AS DECIMAL(38,0)) * (2*($nDocs - df) + 1))" +
           " div (2*df + 1) AS BIGINT)"))
@@ -190,20 +258,19 @@ object SparseIndex {
     require(clash == 0L,
       "SparseIndex.append: delta doc_ids overlap the indexed corpus — " +
         "append is defined for disjoint shards (revise = delete + append)")
+    val delta = deltaTf.select("doc_id", "tok", "tf")
     val df2 = idx.df
-      .unionByName(deltaTf.groupBy("tok").agg(count(lit(1)).as("df")))
+      .unionByName(delta.groupBy("tok").agg(count(lit(1)).as("df")))
       .groupBy("tok").agg(sum("df").as("df"))
-    val dl2 = idx.dl.unionByName(
-      deltaTf.groupBy("doc_id").agg(sum("tf").as("dl")))
+    val deltaDl = withDl(delta)
+    val dl2 = idx.dl.unionByName(dlOf(deltaDl))
     val stats2 = dl2.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
-    val touched = deltaTf.select("tok").distinct()
-    val retruncated = truncate(
-      idx.plist.join(touched, Seq("tok"), "left_semi")
-        .unionByName(deltaTf.select("doc_id", "tok", "tf")), cap)
-    val untouched = idx.plist.join(touched, Seq("tok"), "left_anti")
-    Index(retruncated.unionByName(untouched), df2, dl2, stats2,
-      idx.tf.unionByName(deltaTf.select("doc_id", "tok", "tf")))
+    val untouched = idx.plist
+      .join(delta.select("tok").distinct(), Seq("tok"), "left_anti")
+    Index(appendLists(idx.plist, deltaDl, cap)
+        .unionByName(untouched),
+      df2, dl2, stats2, idx.tf.unionByName(delta))
   }
 
   /** Remove a set of documents from the index WITHOUT a rebuild —
@@ -239,8 +306,8 @@ object SparseIndex {
     val dl2 = idx.dl.join(del, Seq("doc_id"), "left_anti")
     val stats2 = dl2.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
-    val retruncated = truncate(
-      tf2.join(touched, Seq("tok"), "left_semi"), cap)
+    val retruncated = relist(
+      tf2.join(touched, Seq("tok"), "left_semi"), dl2, cap)
     val untouched = idx.plist.join(touched, Seq("tok"), "left_anti")
     Index(retruncated.unionByName(untouched), df2, dl2, stats2, tf2)
   }

@@ -18,72 +18,98 @@ import graft.etl.Checkpoints.CutOps
   * live view; a periodic [[compact]] folds accumulated segments into a
   * fresh base.
   *
-  * A segment carries exactly what its operation knew, each O(delta):
+  * A segment carries what its operation knew, computed against the
+  * live view at write time:
   *  - `tfAdd` — an appended shard's term frequencies (empty for a
   *    delete);
-  *  - `dfd` — SIGNED document-frequency deltas per term (+ for an
-  *    append, − for a delete, computed against the live view at write
-  *    time, so unioning all deltas telescopes to the live df);
+  *  - `dfd` — the segment's TERM SET with signed document-frequency
+  *    deltas (+ for an append, − for a delete): every term whose
+  *    posting list the operation replaced, kept even when its delta
+  *    telescopes to zero;
   *  - `dlAdd` — the shard's doc lengths;
   *  - `statsd` — a signed 1-row corpus-card delta;
-  *  - `tombs` — deleted doc_ids (empty for an append).
+  *  - `tombs` — deleted doc_ids (empty for an append);
+  *  - `plist` — the REPAIRED live posting lists, in the serve's row
+  *    shape (doc_id, tok, tf, dl, df), of every term in `dfd`. An
+  *    append re-truncates the previous live lists of its terms ∪ its
+  *    postings (the cap's monotonicity, [[SparseIndex]]'s class doc —
+  *    no tf read); a delete re-truncates its terms from the live tf
+  *    without the deleted docs, reading only the base tf buckets of
+  *    those terms (the static `tbk` partition filter); a merge keeps
+  *    the newest list per term across its range. A term whose df
+  *    drops to 0 has no rows, but its `dfd` row still shadows the
+  *    older list.
   *
   * The live [[view]] (same code for the in-memory composition x99
   * gates and the on-disk layout):
+  *  - `plist` = the base's lists with each term replaced by the newest
+  *    segment list that names it — [[SegmentOps.scopedUnion]] keyed on
+  *    `tok`, each segment's term set masking the base and the earlier
+  *    segments. No re-truncation, no df sum and no doc-keyed masking
+  *    runs at serve time: deleting a doc dirties every term it
+  *    contains, so no surviving list holds a deleted doc;
   *  - tombstones are SCOPED: a segment's tombs apply to the base and
   *    to EARLIER segments only, so deleting a doc and re-appending its
   *    revision in a later segment works (revise = deleteSeg +
   *    appendSeg, the family contract);
   *  - `df` = base ∪ signed deltas, summed per term, zero rows dropped;
   *  - `dl`/`tf` = scoped anti-joins + unions;
-  *  - `stats` = the 1-row sum of base ∪ deltas;
-  *  - `plist`: terms no segment touched keep the base's stored lists
-  *    VERBATIM (never re-read, never rewritten); dirty terms — the
-  *    union of the segments' dfd term sets, which covers both appended
-  *    and deleted postings — re-truncate from the live tf at read
-  *    time, bounded by the segments' churn, exactly the lazy
-  *    re-truncation [[SparseIndex.delete]] does eagerly.
+  *  - `stats` = the 1-row sum of base ∪ deltas.
+  * `df`, `dl`, `tf` and `stats` are read by deletes, CDC, compaction
+  * and the cards' query-term choice; a serve reads `plist` and the
+  * 1-row `stats` only.
   *
-  * Plan depth grows LINEARLY with the segment count — the deliberate
-  * LSM trade, pinned by SparseSegmentsSpec's growth test (the
-  * dirty-term set is cut once so it never re-inlines per consumer,
-  * and a segment's vacuous tables are statically-empty
-  * LocalRelations whose joins Catalyst elides); [[compact]] resets
-  * the depth and is proven serve-equivalent. On disk the base tf is
-  * partitioned by a 64-way token-hash bucket (`tbk`); the dirty
-  * BUCKET census (≤ 64 values by construction) is collected at view
-  * time and becomes a STATIC isin partition filter on the base tf
-  * scan — pruning guaranteed by the planner (PushdownAuditSpec
-  * asserts it), not left to DPP heuristics.
+  * Plan depth grows LINEARLY with the segment count — one union branch
+  * and one term-set anti-join per segment, the deliberate LSM trade,
+  * pinned by SparseSegmentsSpec's growth test (a segment's vacuous
+  * tables are statically-empty LocalRelations whose joins Catalyst
+  * elides); [[compact]] resets the depth and is proven
+  * serve-equivalent. On disk the base tf is partitioned by a 64-way
+  * token-hash bucket (`tbk`); a delete collects its terms' bucket
+  * census (≤ 64 values by construction) and reads the base tf through
+  * a STATIC isin partition filter — pruning guaranteed by the planner
+  * (PushdownAuditSpec asserts it), not left to DPP heuristics.
+  *
+  * The base's 1-row `meta` records the build cap and the layout
+  * [[Format]]; every entry point refuses a layout of another format.
   *
   * x99_segmented_serve gates the whole composition cross-engine
   * (Spark serves THROUGH a base+append-seg+delete-seg view; DuckDB
   * rebuilds the surviving corpus from scratch — hash-exact at low cap
-  * so dirty-term re-truncation is exercised corpus-wide);
-  * SparseSegmentsSpec pins the disk layout: segment writes leave base
-  * files untouched (the O(delta) claim as an mtime assertion),
-  * read ≡ in-memory view, compact ≡ segmented serve, and the
-  * delete-then-revise chain.
+  * so the list repair is exercised corpus-wide); SparseSegmentsSpec
+  * pins the disk layout: segment writes leave base files untouched
+  * (the O(delta) claim as an mtime assertion), read ≡ in-memory view,
+  * compact ≡ segmented, the delete-then-revise chain, and the live
+  * lists' golden digests.
   */
 object SparseSegments {
 
   /** Token-hash partition fan-out of the base tf relation. */
   val TokBuckets = 64
 
+  /** The on-disk layout format this build reads and writes: 2 = the
+    * posting lists carry `dl` and `df`, and every segment carries its
+    * repaired lists. (Layouts before the format field are format 1.) */
+  val Format = 2
+
   /** One maintenance operation's delta bundle — see the class doc. */
   final case class Seg(tfAdd: DataFrame, dfd: DataFrame,
-      dlAdd: DataFrame, statsd: DataFrame, tombs: DataFrame)
+      dlAdd: DataFrame, statsd: DataFrame, tombs: DataFrame,
+      plist: DataFrame)
 
   /** Build an APPEND segment against the live view: the shard's tf,
-    * +df deltas, doc lengths, +stats delta, no tombstones.
+    * +df deltas, doc lengths, +stats delta, no tombstones, and the
+    * repaired lists of its terms. `cap` must be the base's build cap.
     * Precondition (asserted): the shard's doc_ids are disjoint from
     * the LIVE corpus — a previously deleted id may be re-appended
     * (that is the revise path; tombstone scoping makes it correct). */
-  def appendSegOf(live: SparseIndex.Index, deltaTf: DataFrame): Seg = {
-    // the IN-MEMORY form keeps the eager check — an in-plan guard
-    // here would embed the live view in the segment's plan and a
-    // stacked in-memory chain would nest (the linear-plan-growth
-    // contract); the DISK path ([[appendSeg]]) guards in-plan.
+  def appendSegOf(live: SparseIndex.Index, deltaTf: DataFrame,
+      cap: Int): Seg = {
+    // the IN-MEMORY form keeps the eager check and cuts the tables
+    // that read the live view — otherwise a stacked in-memory chain
+    // would nest each earlier view into the next segment's plan (the
+    // linear-plan-growth contract); the DISK path ([[appendSeg]])
+    // guards in-plan and reads its segments back as plain rows.
     val clash = live.dl.select("doc_id")
       .join(deltaTf.select("doc_id").distinct(), "doc_id")
       .limit(1).count()
@@ -91,8 +117,12 @@ object SparseSegments {
       "SparseSegments append: delta doc_ids overlap the live " +
         "corpus — append segments are for disjoint shards (revise = " +
         "deleteSeg + appendSeg)")
-    mkAppendSeg(deltaTf)
+    cutSeg(mkAppendSeg(live.plist, deltaTf, cap))
   }
+
+  /** The in-memory segment with its term set and lists cut to leaves. */
+  private def cutSeg(seg: Seg): Seg =
+    seg.copy(dfd = seg.dfd.cut(false), plist = seg.plist.cut(false))
 
   /** Disjointness as an in-plan guard on the delta (fires at the
     * segment write; zero extra jobs — pre-r14 an eager count action
@@ -107,105 +137,95 @@ object SparseSegments {
         "corpus — append segments are for disjoint shards (revise = " +
         "deleteSeg + appendSeg)")
 
-  /** The append segment's tables — a pure function of the delta. The
+  /** The append segment's tables — the delta's own tables plus the
+    * repaired lists of its terms, from the live lists `livePlist`. The
     * vacuous tombstones are a statically-empty LocalRelation so the
     * optimizer elides every scoping anti-join they would feed
     * ([[SegmentOps.emptyLike]] — the append-only stacks stay linear). */
-  private def mkAppendSeg(deltaTf: DataFrame): Seg = {
-    val dlAdd = deltaTf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      .cut(false) // consumers: the segment write + statsd
+  private def mkAppendSeg(livePlist: DataFrame, deltaTf: DataFrame,
+      cap: Int): Seg = {
+    // consumers: the tf, dfd and plist writes and dlAdd — one guarded
+    // read of the delta, not one per table
+    val delta = deltaTf.select("doc_id", "tok", "tf").cut(false)
+    val deltaDl = SparseIndex.withDl(delta)
+    val dlAdd = SparseIndex.dlOf(deltaDl)
+      .cut(false) // consumers: the segment write and statsd
     Seg(
-      tfAdd = deltaTf.select("doc_id", "tok", "tf"),
-      dfd = deltaTf.groupBy("tok").agg(count(lit(1)).as("dfd")),
+      tfAdd = delta,
+      dfd = delta.groupBy("tok").agg(count(lit(1)).as("dfd")),
       dlAdd = dlAdd,
       statsd = dlAdd.agg(count(lit(1)).as("n_docs"),
         coalesce(sum("dl"), lit(0L)).as("t_tokens")),
-      tombs = SegmentOps.emptyLike(deltaTf.select("doc_id")))
+      tombs = SegmentOps.emptyLike(delta.select("doc_id")),
+      plist = SparseIndex.appendLists(livePlist, deltaDl, cap))
   }
 
   /** Build a DELETE segment against the live view: −df deltas from the
-    * deleted docs' live postings, a −stats delta, and the tombstones.
-    * Deleting an id absent from the live corpus is a no-op (zero
-    * deltas, a tombstone that anti-joins nothing). */
-  def deleteSegOf(live: SparseIndex.Index, docIds: DataFrame): Seg =
-    mkDeleteSeg(live.tf, live.dl, docIds)
+    * deleted docs' live postings, a −stats delta, the tombstones, and
+    * the deleted docs' terms re-truncated from the live tf. `cap` must
+    * be the base's build cap. Deleting an id absent from the live
+    * corpus is a no-op (zero deltas, no lists, a tombstone that
+    * anti-joins nothing). */
+  def deleteSegOf(live: SparseIndex.Index, docIds: DataFrame,
+      cap: Int): Seg =
+    cutSeg(mkDeleteSeg(live.tf, live.dl, docIds, cap,
+      touched => live.tf.join(touched, Seq("tok"), "left_semi")))
 
-  /** The delete segment's tables — needs only the live tf/dl
-    * relations, so the disk path composes them WITHOUT the full view
-    * (no plist work, no bucket census). */
+  /** The delete segment's tables. `termTf` gives the live tf of a set
+    * of terms (before the delete) — the disk path's form reads only
+    * those terms' base tf buckets. */
   private def mkDeleteSeg(liveTf: DataFrame, liveDl: DataFrame,
-      docIds: DataFrame): Seg = {
-    val del = docIds.select("doc_id").distinct().cut(false)
+      docIds: DataFrame, cap: Int,
+      termTf: DataFrame => DataFrame): Seg = {
+    // the tombstones are O(delete): broadcast, so neither the live tf
+    // nor the repaired terms' postings shuffle to meet them
+    val del = broadcast(docIds.select("doc_id").distinct().cut(false))
     val delTf = liveTf.join(del, Seq("doc_id"), "left_semi").cut(false)
     val delDl = liveDl.join(del, Seq("doc_id"), "left_semi")
       .cut(false)
+    val touched = delTf.select("tok").distinct()
     Seg(
       tfAdd = SegmentOps.emptyLike(delTf),
       dfd = delTf.groupBy("tok").agg((-count(lit(1))).as("dfd")),
       dlAdd = SegmentOps.emptyLike(delDl),
       statsd = delDl.agg((-count(lit(1))).as("n_docs"),
         (-coalesce(sum("dl"), lit(0L))).as("t_tokens")),
-      tombs = del)
+      tombs = del,
+      plist = SparseIndex.relist(
+        termTf(touched).join(del, Seq("doc_id"), "left_anti"), liveDl,
+        cap))
   }
 
-  /** Compose base + segments into the LIVE index view. `cap` must be
-    * the cap the base was built with. */
-  def view(base: SparseIndex.Index, segs: Seq[Seg], cap: Int)
+  /** Compose base + segments into the LIVE index view — see the class
+    * doc. */
+  def view(base: SparseIndex.Index, segs: Seq[Seg])
       : SparseIndex.Index = {
     if (segs.isEmpty) return base.copy(tf = baseTf(base))
     // tombstones scoped per SegmentOps.scopedUnion: segs(i) is masked
-    // by tombs of segs j > i, the base by all of them
-    val adds = segs.map(_.tfAdd.select("doc_id", "tok", "tf"))
+    // by tombs of segs j > i, the base by all of them; the lists are
+    // masked the same way by the segments' term sets
     val tombs = segs.map(_.tombs)
-    val tfLive = SegmentOps.scopedUnion(baseTf(base), adds, tombs,
-      "doc_id")
     val dfLive = segs.map(_.dfd)
       .foldLeft(base.df.select(col("tok"), col("df").as("dfd")))(
         _ unionByName _)
       .groupBy("tok").agg(sum("dfd").as("df"))
       .filter(col("df") > 0)
-    val dlLive = SegmentOps.scopedUnion(base.dl, segs.map(_.dlAdd),
-      tombs, "doc_id")
     // the 1-row card sums 1 + |segs| rows: one partition needs no
     // exchange, so a serve binds it as literals in one job, not two
     val statsLive = segs.map(_.statsd)
       .foldLeft(base.stats)(_ unionByName _)
       .coalesce(1)
       .agg(sum("n_docs").as("n_docs"), sum("t_tokens").as("t_tokens"))
-    // the dirty-term set is consumed by k+2 joins (clean's anti-join,
-    // baseDirty's semi-join, each segment add's semi-join) — cut it
-    // once or the k-way union re-inlines into every consumer and the
-    // view plan grows quadratically in the segment count (the
-    // linear-growth spec is the regression gate)
-    val dirty = segs.map(_.dfd.select("tok"))
-      .reduce(_ unionByName _).distinct().cut(false)
-    val clean = base.plist.join(dirty, Seq("tok"), "left_anti")
-      .select("doc_id", "tok", "tf")
-    // live tf restricted to dirty terms, built from PRUNED components:
-    // when the base tf carries the on-disk `tbk` partition column, the
-    // DIRTY BUCKET census (≤ TokBuckets values by construction — the
-    // same bounded-artifact trick PqIndex.serve plays with the coarse
-    // codebook) is collected at view time and becomes a STATIC
-    // partition filter on the base tf scan, so pruning is guaranteed
-    // by the planner rather than left to DPP heuristics
-    // (PushdownAuditSpec asserts PartitionFilters on the scan). The
-    // collect is one segment-sized job over the dfd term sets.
-    val baseDirty =
-      if (base.tf.columns.contains("tbk")) {
-        val dirtyBuckets = dirty
-          .select(pmod(hash(col("tok")), lit(TokBuckets)).as("tbk"))
-          .distinct().collect().map(_.getInt(0))
-        base.tf.filter(col("tbk").isin(dirtyBuckets.map(Int.box): _*))
-          .join(dirty, Seq("tok"), "left_semi")
-          .select("doc_id", "tok", "tf")
-      } else baseTf(base).join(dirty, Seq("tok"), "left_semi")
-    val tfDirty = SegmentOps.scopedUnion(baseDirty,
-      adds.map(_.join(dirty, Seq("tok"), "left_semi")
-        .select("doc_id", "tok", "tf")),
-      tombs, "doc_id")
-    val redone = SparseIndex.truncate(tfDirty, cap)
-    SparseIndex.Index(clean.unionByName(redone), dfLive, dlLive,
-      statsLive, tfLive)
+    SparseIndex.Index(
+      SegmentOps.scopedUnion(base.plist, segs.map(_.plist),
+        segs.map(_.dfd), "tok").select(SparseIndex.PlistCols.map(col): _*),
+      dfLive,
+      SegmentOps.scopedUnion(base.dl, segs.map(_.dlAdd), tombs,
+        "doc_id"),
+      statsLive,
+      SegmentOps.scopedUnion(baseTf(base),
+        segs.map(_.tfAdd.select("doc_id", "tok", "tf")), tombs,
+        "doc_id"))
   }
 
   /** The base tf without the storage-layout bucket column. */
@@ -215,17 +235,17 @@ object SparseSegments {
     else base.tf
 
   // ------------------------------------------------------------------
-  // Disk layout: root/base/{plist,df,dl,stats,tf(tbk-partitioned)},
-  // root/segs/seg=<n>/{tf,dfd,dl,statsd,tombs}
+  // Disk layout: root/base/{plist,df,dl,stats,meta,tf(tbk-partitioned)},
+  // root/segs/seg=<n>/{tf,dfd,dl,statsd,tombs,plist}
   // ------------------------------------------------------------------
 
   /** Write `idx` as the base generation of a segmented layout. The tf
     * relation is partitioned by the 64-way token-hash bucket — the
-    * partition key the dirty-term re-truncation prunes on. `cap` MUST
-    * be the cap `idx` was built with: it is persisted in the layout's
-    * 1-row `meta` table, and every later read/compact resolves it
-    * from there — a default-arg mismatch can no longer mix two caps
-    * in one plist. */
+    * partition key a delete's list repair prunes on. `cap` MUST be the
+    * cap `idx` was built with: it is persisted in the layout's 1-row
+    * `meta` table (with the layout [[Format]]), and every later
+    * read/segment/compact resolves it from there — a default-arg
+    * mismatch can no longer mix two caps in one plist. */
   def init(idx: SparseIndex.Index, root: String,
       cap: Int = SparseIndex.ImpactCap): Unit = {
     writeBase(idx, s"$root/base", cap)
@@ -240,17 +260,10 @@ object SparseSegments {
         "non-positive cap would persist an index whose every posting " +
         "list truncates to empty")
     graft.sources.Sources.writeOrdered(
-      Seq("plist" -> idx.plist, "df" -> idx.df, "dl" -> idx.dl,
-        "stats" -> idx.stats,
-        // LocalRelation, not range(1).select: takes writeOrdered's
-        // zero-job driver-side write path
-        "meta" -> idx.stats.sparkSession.createDataFrame(
-          java.util.Collections.singletonList(
-            org.apache.spark.sql.Row(cap)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cap",
-              org.apache.spark.sql.types.IntegerType,
-              nullable = false)))),
+      Seq("plist" -> idx.plist.select(SparseIndex.PlistCols.map(col): _*),
+        "df" -> idx.df, "dl" -> idx.dl, "stats" -> idx.stats,
+        "meta" -> SegmentOps.metaTable(idx.stats.sparkSession,
+          "cap" -> cap, "format" -> Format),
         // cluster rows by bucket before the partitioned write: without
         // it every write task emits one file per bucket it happens to
         // hold (tasks × TokBuckets small files — metadata poison at
@@ -262,12 +275,15 @@ object SparseSegments {
       dirAbs, partitions = Map("tf" -> Seq("tbk")))
   }
 
-  /** The layout's persisted build cap. When the caller asserts a
-    * `cap` too, they must agree — the silent-corruption guard. An
-    * `Option` rather than a magic 0 (ADVICE r10): an explicit-but-
-    * wrong value can never bypass the mismatch check. */
-  private def storedCapAt(s: SparkSession, baseAbs: String,
-      cap: Option[Int]): Int = {
+  /** The snapshot's persisted build cap, after checking the layout
+    * [[Format]]. When the caller asserts a `cap` too, they must agree
+    * — the silent-corruption guard. An `Option` rather than a magic 0
+    * (ADVICE r10): an explicit-but-wrong value can never bypass the
+    * mismatch check. */
+  private def layoutCap(s: SparkSession, root: String,
+      snap: SegmentOps.Snapshot, cap: Option[Int] = None): Int = {
+    val baseAbs = s"$root/${snap.baseDir}"
+    SegmentOps.requireFormat(s, baseAbs, "SparseSegments", Format)
     val stored = SegmentOps.readMetaInt(s, s"$baseAbs/meta", "cap")
     cap.foreach(c => require(c == stored,
       s"SparseSegments: layout $baseAbs was built at cap=$stored but " +
@@ -279,11 +295,12 @@ object SparseSegments {
   def listSegs(s: SparkSession, root: String): Seq[Int] =
     SegmentOps.listSegs(s, root)
 
-  private def writeSeg(s: SparkSession, seg: Seg, root: String,
-      n: Int, kind: Char, tag: Option[String]): Unit =
-    SegmentOps.publishSeg(s, root, n, kind,
-      Seq("tf" -> seg.tfAdd, "dfd" -> seg.dfd, "dl" -> seg.dlAdd,
-        "statsd" -> seg.statsd, "tombs" -> seg.tombs), tag)
+  private val segTables =
+    Seq("tf", "dfd", "dl", "statsd", "tombs", "plist")
+
+  private def tablesOf(seg: Seg): Seq[(String, DataFrame)] =
+    segTables.zip(Seq(seg.tfAdd, seg.dfd, seg.dlAdd, seg.statsd,
+      seg.tombs, seg.plist))
 
   /** Read one on-disk segment. The kind tag in the dir name tells the
     * reader which tables are vacuous BY CONSTRUCTION, so it rebuilds
@@ -302,7 +319,8 @@ object SparseSegments {
       dfd = t("dfd"),
       dlAdd = if (kind == 'd') emptyT("dl") else t("dl"),
       statsd = t("statsd"),
-      tombs = if (kind == 'a') emptyT("tombs") else t("tombs"))
+      tombs = if (kind == 'a') emptyT("tombs") else t("tombs"),
+      plist = t("plist"))
   }
 
   private def readSegs(s: SparkSession, root: String,
@@ -311,26 +329,15 @@ object SparseSegments {
       readSeg(s, root, dirName, kind)
     }
 
-  /** The live tf and dl relations alone — what segment BUILDERS need;
-    * composing them skips the view's plist work and its dirty-bucket
-    * census job entirely (a nightly appendSeg/deleteSeg never pays
-    * for a relation it doesn't read). */
-  private def liveParts(s: SparkSession, root: String)
-      : (DataFrame, DataFrame) = {
-    val snap = SegmentOps.resolveSnapshot(s, root)
-    val baseTfD = SegmentOps.readKnown(s,
-        s"$root/${snap.baseDir}/tf",
-        Seq("tbk" -> org.apache.spark.sql.types.IntegerType))
-      .select("doc_id", "tok", "tf")
-    val baseDl = SegmentOps.readKnown(s, s"$root/${snap.baseDir}/dl")
-    val segs = readSegs(s, root, snap)
-    val tombs = segs.map(_.tombs)
-    (SegmentOps.scopedUnion(baseTfD,
-        segs.map(_.tfAdd.select("doc_id", "tok", "tf")), tombs,
-        "doc_id"),
-      SegmentOps.scopedUnion(baseDl, segs.map(_.dlAdd), tombs,
-        "doc_id"))
-  }
+  private def readBase(s: SparkSession, baseAbs: String)
+      : SparseIndex.Index =
+    SparseIndex.Index(
+      SegmentOps.readKnown(s, s"$baseAbs/plist"),
+      SegmentOps.readKnown(s, s"$baseAbs/df"),
+      SegmentOps.readKnown(s, s"$baseAbs/dl"),
+      SegmentOps.readKnown(s, s"$baseAbs/stats"),
+      SegmentOps.readKnown(s, s"$baseAbs/tf",
+        Seq("tbk" -> org.apache.spark.sql.types.IntegerType)))
 
   /** Load the live view of a segmented layout. The cap comes from the
     * layout's meta table; pass `Some(cap)` only to ASSERT it. The
@@ -353,36 +360,52 @@ object SparseSegments {
   private def readSnap(s: SparkSession, root: String,
       snap: SegmentOps.Snapshot, cap: Option[Int])
       : SparseIndex.Index = {
-    val baseAbs = s"$root/${snap.baseDir}"
-    val rc = storedCapAt(s, baseAbs, cap)
-    val base = SparseIndex.Index(
-      SegmentOps.readKnown(s, s"$baseAbs/plist"),
-      SegmentOps.readKnown(s, s"$baseAbs/df"),
-      SegmentOps.readKnown(s, s"$baseAbs/dl"),
-      SegmentOps.readKnown(s, s"$baseAbs/stats"),
-      SegmentOps.readKnown(s, s"$baseAbs/tf",
-        Seq("tbk" -> org.apache.spark.sql.types.IntegerType)))
-    view(base, readSegs(s, root, snap), rc)
+    layoutCap(s, root, snap, cap)
+    view(readBase(s, s"$root/${snap.baseDir}"), readSegs(s, root, snap))
   }
 
   /** Append a disjoint shard as a new segment — an O(delta) write
     * published atomically; base files are never touched
-    * (SparseSegmentsSpec asserts it). */
+    * (SparseSegmentsSpec asserts it). The repaired lists ride in the
+    * same concurrent table write as the delta tables. */
   def appendSeg(s: SparkSession, root: String, deltaTf: DataFrame,
       tag: Option[String] = None): Unit = {
-    val (_, dl) = liveParts(s, root)
+    val snap = SegmentOps.resolveSnapshot(s, root)
+    val cap = layoutCap(s, root, snap)
+    val live = view(readBase(s, s"$root/${snap.baseDir}"),
+      readSegs(s, root, snap))
     val n = listSegs(s, root).lastOption.fold(0)(_ + 1)
-    writeSeg(s, mkAppendSeg(guardedDisjoint(dl, deltaTf)), root, n,
-      'a', tag)
+    SegmentOps.publishSeg(s, root, n, 'a', tablesOf(mkAppendSeg(
+      live.plist, guardedDisjoint(live.dl, deltaTf), cap)), tag)
   }
 
   /** Retract documents as a new segment — an O(delta) write published
-    * atomically. */
+    * atomically. The list repair reads the base tf of the deleted
+    * docs' terms only: their bucket census (≤ [[TokBuckets]] values,
+    * one small job) becomes a static partition filter on the scan. */
   def deleteSeg(s: SparkSession, root: String, docIds: DataFrame,
       tag: Option[String] = None): Unit = {
-    val (tf, dl) = liveParts(s, root)
+    val snap = SegmentOps.resolveSnapshot(s, root)
+    val cap = layoutCap(s, root, snap)
+    val base = readBase(s, s"$root/${snap.baseDir}")
+    val segs = readSegs(s, root, snap)
+    val live = view(base, segs)
+    val adds = segs.map(_.tfAdd.select("doc_id", "tok", "tf"))
+    val tombs = segs.map(_.tombs)
+    val termTf = (touched: DataFrame) => {
+      val buckets = touched
+        .select(pmod(hash(col("tok")), lit(TokBuckets)).as("tbk"))
+        .distinct().collect().map(r => Int.box(r.getInt(0)))
+      SegmentOps.scopedUnion(
+        base.tf.filter(col("tbk").isin(buckets.toIndexedSeq: _*))
+          .join(touched, Seq("tok"), "left_semi")
+          .select("doc_id", "tok", "tf"),
+        adds.map(_.join(touched, Seq("tok"), "left_semi")), tombs,
+        "doc_id")
+    }
     val n = listSegs(s, root).lastOption.fold(0)(_ + 1)
-    writeSeg(s, mkDeleteSeg(tf, dl, docIds), root, n, 'd', tag)
+    SegmentOps.publishSeg(s, root, n, 'd',
+      tablesOf(mkDeleteSeg(live.tf, live.dl, docIds, cap, termTf)), tag)
   }
 
   /** Snapshot CDC — the sparse family's twin of
@@ -411,15 +434,16 @@ object SparseSegments {
     * tables (tf, dl) fold by the same positional algebra (the range's
     * own scoped union over an empty base; merged tombs = the range's
     * tomb union, masking exactly base + every earlier position). The
-    * family's SIGNED tables fold by telescoping: merged dfd = the
-    * range's dfd summed per term — zero-sum rows are KEPT (a -1/+1
-    * cancellation means df is unchanged but the postings behind it
-    * changed doc identity, so the term must stay in the view's
-    * dirty-term set for re-truncation; dropping it would serve the
-    * base's stale stored plist) — and merged statsd = the 1-row sum.
-    * Crash-safe in two atomic steps ([[SegmentOps.publishSegDir]]
-    * then [[SegmentOps.flipMergedAt]]); a crash between them leaves
-    * vacuum-collectable debris. */
+    * lists fold by the same algebra keyed on `tok`: the newest list
+    * per term across the range (no window — each input list is
+    * already repaired). The merged term set names every term any
+    * input replaced: merged dfd = the range's dfd summed per term,
+    * zero-sum rows KEPT (a -1/+1 cancellation means df is unchanged
+    * but the postings behind it changed doc identity, so the merged
+    * list must still shadow the older one) — and merged statsd = the
+    * 1-row sum. Crash-safe in two atomic steps
+    * ([[SegmentOps.publishSegDir]] then [[SegmentOps.flipMergedAt]]);
+    * a crash between them leaves vacuum-collectable debris. */
   def mergeSegsAt(s: SparkSession, root: String, from: Int, k: Int)
       : Unit = {
     val snap = SegmentOps.resolveSnapshot(s, root)
@@ -430,43 +454,45 @@ object SparseSegments {
     require(from >= 0 && k >= 2 && from + k <= snap.segs.size,
       s"SparseSegments.mergeSegsAt: range [$from, ${from + k}) " +
         s"outside the snapshot's ${snap.segs.size} segments (k >= 2)")
+    layoutCap(s, root, snap)
     val range = snap.segs.slice(from, from + k)
     val segs = range.map { case (_, d, kd) => readSeg(s, root, d, kd) }
     val tombsSeq = segs.map(_.tombs)
-    val tfM = SegmentOps.scopedUnion(
-      SegmentOps.emptyLike(segs.head.tfAdd),
-      segs.map(_.tfAdd.select("doc_id", "tok", "tf")), tombsSeq,
-      "doc_id")
-    val dlM = SegmentOps.scopedUnion(
-      SegmentOps.emptyLike(segs.head.dlAdd),
-      segs.map(_.dlAdd), tombsSeq, "doc_id")
-    val dfdM = segs.map(_.dfd).reduce(_ unionByName _)
-      .groupBy("tok").agg(sum("dfd").as("dfd"))
-    val statsdM = segs.map(_.statsd).reduce(_ unionByName _)
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-        coalesce(sum("t_tokens"), lit(0L)).as("t_tokens"))
-    val tombsM = tombsSeq.reduce(_ unionByName _).distinct()
+    def fold(f: Seg => DataFrame, masks: Seq[DataFrame], key: String) =
+      SegmentOps.scopedUnion(SegmentOps.emptyLike(f(segs.head)),
+        segs.map(f), masks, key)
+    val merged = Seg(
+      tfAdd = fold(_.tfAdd.select("doc_id", "tok", "tf"), tombsSeq,
+        "doc_id"),
+      dfd = segs.map(_.dfd).reduce(_ unionByName _)
+        .groupBy("tok").agg(sum("dfd").as("dfd")),
+      dlAdd = fold(_.dlAdd, tombsSeq, "doc_id"),
+      statsd = segs.map(_.statsd).reduce(_ unionByName _)
+        .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
+          coalesce(sum("t_tokens"), lit(0L)).as("t_tokens")),
+      tombs = tombsSeq.reduce(_ unionByName _).distinct(),
+      plist = fold(_.plist, segs.map(_.dfd), "tok"))
     val kinds = range.map(_._3).toSet
     val kind = if (kinds == Set('a')) 'a'
       else if (kinds == Set('d')) 'd' else 'm'
     val name = s"seg=${range.last._1}-$kind-g${snap.version + 1}"
-    SegmentOps.publishSegDir(s, root, name,
-      Seq("tf" -> tfM, "dfd" -> dfdM, "dl" -> dlM,
-        "statsd" -> statsdM, "tombs" -> tombsM))
+    SegmentOps.publishSegDir(s, root, name, tablesOf(merged))
     SegmentOps.flipMergedAt(s, root, snap, from, k, name)
     ()
   }
 
   /** [[SegmentOps.tieredMaintainWith]] instantiated for this family:
     * the leveled schedule to quiescence, base never touched; pair
-    * with the [[dirtyBucketFraction]]-OR-[[SegmentOps.shouldCompact]]
+    * with the [[shadowedListFraction]]-OR-[[SegmentOps.shouldCompact]]
     * trigger + [[compactInPlace]] for the rare full fold. Returns the
-    * number of merges performed. */
+    * number of merges performed. A segment's size is its churn rows;
+    * its repaired lists (≤ terms × cap rows) are left out so they do
+    * not flatten the size ratios the geometric rule compares. */
   def tieredMaintain(s: SparkSession, root: String, minRun: Int = 2,
       fanout: Int = 4, ratio: Double = 1.5): Int =
     SegmentOps.tieredMaintainWith(s, root, minRun, fanout, ratio)(
-      d => SegmentOps.footerRows(s, Seq("tf", "dfd", "dl", "statsd",
-        "tombs").map(t => s"$root/segs/$d/$t")),
+      d => SegmentOps.footerRows(s, segTables.filterNot(_ == "plist")
+        .map(t => s"$root/segs/$d/$t")),
       mergeSegsAt(s, root, _, _))
 
   /** Fold the segments into a fresh base at `outRoot` — the periodic
@@ -478,25 +504,30 @@ object SparseSegments {
   def compact(s: SparkSession, root: String, outRoot: String): Unit = {
     val snap = SegmentOps.resolveSnapshot(s, root)
     init(readSnap(s, root, snap, None), outRoot,
-      storedCapAt(s, s"$root/${snap.baseDir}", None))
+      layoutCap(s, root, snap))
   }
 
   /** The sparse family's data-dependent compaction signal: the
-    * fraction of the base tf's [[TokBuckets]] partitions the current
-    * segments' dirty terms touch. The view rescans exactly these
-    * buckets on every read (the static isin filter), so this IS the
-    * family's read amplification: 0.2 means a fifth of the base tf is
-    * re-read per serve. One segment-sized job (the dfd term sets are
-    * O(churn)); OR it with [[SegmentOps.shouldCompact]]'s count
-    * trigger for the w09 nightly policy. */
-  def dirtyBucketFraction(s: SparkSession, root: String): Double = {
+    * fraction of the base's posting lists that the current segments
+    * shadow. A serve scans the base lists and every segment's lists
+    * and drops the shadowed base rows, so this IS the family's read
+    * amplification: 0.2 means a fifth of the base lists are read only
+    * to be replaced. Zero jobs for the base's term count (the `df`
+    * footer), one segment-sized job for the shadowed terms; OR it with
+    * [[SegmentOps.shouldCompact]]'s count trigger for the w09 nightly
+    * policy. */
+  def shadowedListFraction(s: SparkSession, root: String): Double = {
     val snap = SegmentOps.resolveSnapshot(s, root)
     if (snap.segs.isEmpty) return 0.0
-    val dirty = readSegs(s, root, snap).map(_.dfd.select("tok"))
-      .reduce(_ unionByName _)
-      .select(pmod(hash(col("tok")), lit(TokBuckets)).as("tbk"))
-      .distinct().count()
-    dirty.toDouble / TokBuckets
+    layoutCap(s, root, snap)
+    val baseAbs = s"$root/${snap.baseDir}"
+    val lists = SegmentOps.footerRows(s, Seq(s"$baseAbs/df"))
+    if (lists == 0L) return 0.0
+    val shadowed = SegmentOps.readKnown(s, s"$baseAbs/df")
+      .join(readSegs(s, root, snap).map(_.dfd.select("tok"))
+        .reduce(_ unionByName _), Seq("tok"), "left_semi")
+      .count()
+    shadowed.toDouble / lists
   }
 
   /** Fold the segments into a fresh base generation under the SAME
@@ -509,7 +540,7 @@ object SparseSegments {
     * creates the manifest). */
   def compactInPlace(s: SparkSession, root: String): Unit = {
     val snap = SegmentOps.resolveSnapshot(s, root)
-    val cap = storedCapAt(s, s"$root/${snap.baseDir}", None)
+    val cap = layoutCap(s, root, snap)
     val nb = SegmentOps.nextBaseDir(snap)
     writeBase(readSnap(s, root, snap, None), s"$root/$nb", cap)
     SegmentOps.flipCompacted(s, root, snap, nb)

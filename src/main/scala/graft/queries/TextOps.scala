@@ -2065,22 +2065,22 @@ object TextOps {
   // but persisting a fold-in still rewrites every table — at 100 TB the
   // nightly write must be O(delta), so graft.etl.SparseSegments keeps
   // the base immutable and stacks each night's operation as a segment
-  // (delta tf, SIGNED df deltas, tombstones), composing the live view
-  // at read time: scoped tombstone anti-joins, telescoping df sums,
-  // and lazy re-truncation of ONLY the segments' dirty terms (clean
-  // terms keep the base's stored lists verbatim — never re-read). The
+  // (delta tf, SIGNED df deltas, tombstones, and the posting lists of
+  // its terms repaired at write time), composing the live view at read
+  // time: each term's newest list replaces the base's, scoped
+  // tombstone anti-joins, telescoping df sums. The
   // Spark side serves THROUGH a base(⅔ corpus) + append-segment(⅓) +
   // delete-segment(doc_id%10=3) view at x96's LOW cap (every list
-  // overflows, so the dirty-term re-truncation is exercised
+  // overflows, so the write-time list repair is exercised
   // corpus-wide); the oracle is x80's serve chain verbatim over the
   // surviving corpus, built from scratch by an engine that has no
   // segments at all. Hash equality proves the whole LSM composition —
-  // scoping, telescoping, lazy re-truncation — END TO END at the
+  // scoping, telescoping, list repair — END TO END at the
   // number a user sees. SparseSegmentsSpec pins the disk half (O(delta)
   // segment writes leave base files untouched; compact ≡ segmented).
-  // Scale: view cost = base plist for clean terms + a re-truncation
-  // bounded by segment churn; plan depth grows with the segment count
-  // (the LSM trade) and compact() resets it.
+  // Scale: view cost = the base lists + each segment's repaired lists
+  // of its terms, one term-set anti-join per segment; plan depth grows
+  // with the segment count (the LSM trade) and compact() resets it.
   // ---------------------------------------------------------------------
   private def x99(s: SparkSession, d: String): DataFrame = {
     import graft.etl.{SparseIndex, SparseSegments}
@@ -2089,12 +2089,12 @@ object TextOps {
     val base = SparseIndex.build(tf.filter(col("doc_id") % 3 =!= 0),
       X96Cap)
     val seg1 = SparseSegments.appendSegOf(base,
-      tf.filter(col("doc_id") % 3 === 0))
-    val live1 = SparseSegments.view(base, Seq(seg1), X96Cap)
+      tf.filter(col("doc_id") % 3 === 0), X96Cap)
+    val live1 = SparseSegments.view(base, Seq(seg1))
     val del = tf.select("doc_id").distinct()
       .filter(col("doc_id") % 10 === 3)
-    val seg2 = SparseSegments.deleteSegOf(live1, del)
-    val idx = SparseSegments.view(base, Seq(seg1, seg2), X96Cap)
+    val seg2 = SparseSegments.deleteSegOf(live1, del, X96Cap)
+    val idx = SparseSegments.view(base, Seq(seg1, seg2))
     // kept corpus probes only (doc_id % 100 = 0 never hits the
     // tombstoned %10=3 class)
     val qterms = tf.filter(col("doc_id") % 100 === 0)
@@ -2117,7 +2117,7 @@ object TextOps {
   // path; nothing decided WHEN to compact). Four "nights" against one
   // on-disk layout rooted in a fresh temp dir:
   //   init   — base generation = doc_id % 3 = 1 at x96's LOW cap
-  //            (every list overflows → dirty-term re-truncation is
+  //            (every list overflows → the write-time list repair is
   //            exercised corpus-wide);
   //   n1/n2  — appendSeg the % 3 = 2 and % 3 = 0 shards (each an
   //            O(delta) atomic segment publication + manifest bump);
@@ -2133,12 +2133,12 @@ object TextOps {
   // rebuilt from scratch by an engine with no segments, no manifest,
   // no compaction — hash equality proves the WHOLE lifecycle (policy
   // trigger, in-place fold, pointer flip, post-compaction tombstone
-  // scoping, dirty-bucket-pruned re-truncation) at the number a user
+  // scoping, bucket-pruned write-time list repair) at the number a user
   // sees. Scale: every night's write is O(delta); the compaction is
   // the amortized O(base) fold the policy schedules (here: segment
-  // count, OR the dirtyBucketFraction read-amplification signal —
-  // SegmentReadAmpSpec prices that curve); serve reads clean posting
-  // lists verbatim + re-truncates only the delete's dirty terms.
+  // count, OR the shadowedListFraction read-amplification signal —
+  // SegmentReadAmpSpec prices that curve); serve reads the base lists
+  // and the delete segment's write-time-repaired lists verbatim.
   // ---------------------------------------------------------------------
   private def w09(s: SparkSession, d: String): DataFrame = {
     import graft.etl.{SegmentOps, SparseIndex, SparseSegments}
@@ -2157,7 +2157,7 @@ object TextOps {
     // certified script exercises a mid-script compaction flip, which
     // the measured default would never fire at 2 batches (x105)
     if (SegmentOps.shouldCompact(s, root, maxSegs = 2) ||
-        SparseSegments.dirtyBucketFraction(s, root) >= 0.5)
+        SparseSegments.shadowedListFraction(s, root) >= 0.5)
       SparseSegments.compactInPlace(s, root)
     SparseSegments.deleteSeg(s, root,
       tf.select("doc_id").distinct().filter(col("doc_id") % 10 === 3))

@@ -21,10 +21,12 @@ import graft.etl.{PqIndex, SparseIndex}
   * Composition, all streaming-legal with ONE stateful operator:
   *  - the sparse leg is [[SparseServeStream.queryTerms]] (row-local) →
   *    [[graft.etl.SparseIndex.contribs]] (the batch serve's scan:
-  *    stream-static plist/df/dl joins, literal corpus card);
+  *    one stream-static term-keyed join against `plist`, whose rows
+  *    carry `dl` and `df`, literal corpus card);
   *  - the dense leg is [[graft.etl.PqIndex.candidates]] (the batch
   *    serve's scan: row-local probe selection from the literal coarse
-  *    codebook, stream-static cluster-keyed code join, literal-book
+  *    codebook, stream-static cluster-keyed join against the code rows
+  *    that carry their cell, literal-book
   *    ADC);
   *  - the two legs UNION as tagged rows (legal: both derive from the
   *    same input stream via stateless ops) and ONE

@@ -12,8 +12,9 @@ import graft.etl.PqIndex
   *
   * The scan is the batch serve's own: [[graft.etl.PqIndex.candidates]]
   * (row-local probe choice over the literal coarse codebook, the
-  * stream-static cluster-keyed join against cells⋈codes, the
-  * literal-book ADC expression) is stateless, so it runs unchanged on
+  * stream-static cluster-keyed join against the stored inverted lists
+  * `codes`, whose rows carry their cell, the literal-book ADC
+  * expression) is stateless, so it runs unchanged on
   * a streaming frame. What this module adds is the stateful form of
   * the batch fold: ONE flatMapGroupsWithState per q_id running
   * [[graft.etl.PqIndex.topK]] (or [[graft.etl.PqIndex.topKRefined]]).

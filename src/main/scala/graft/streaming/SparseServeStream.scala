@@ -13,9 +13,9 @@ import graft.etl.SparseIndex
   * loaded once — what a retrieval endpoint actually runs).
   *
   * The scan is the batch serve's own: [[graft.etl.SparseIndex.contribs]]
-  * (stream-static term-keyed joins against `plist` — ≤ cap rows per
-  * term AT ANY CORPUS SIZE — then `df` and `dl`, with the 1-row corpus
-  * card bound as literals) is stateless, so it runs unchanged on a
+  * (ONE stream-static term-keyed join against `plist` — ≤ cap rows per
+  * term AT ANY CORPUS SIZE, each row carrying its `dl` and `df` — with
+  * the 1-row corpus card bound as literals) is stateless, so it runs unchanged on a
   * streaming frame. Query tokenization ([[queryTerms]]) is row-local
   * under the same token contract as
   * [[graft.etl.SparseIndex.termFreqs]] (the spec asserts it). What

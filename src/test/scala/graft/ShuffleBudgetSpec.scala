@@ -251,15 +251,17 @@ class ShuffleBudgetSpec extends SparkSpec {
     // window and final sort — everything after the retrievers is
     // <= 10 rows/query
     "w07_rag_funnel" -> 16,
-    "w07b_rag_funnel_pq" -> 10,
-    "x93c_funnel_pq_recall" -> 14,
+    // w07b/x93c/w12/w10: the PQ scan joins the code rows on their
+    // stored cell — the vec_id -> cell join is gone
+    "w07b_rag_funnel_pq" -> 8,
+    "x93c_funnel_pq_recall" -> 12,
     "x105_compaction_policy" -> 1,
     "x107_tiered_compaction" -> 1,
     "x108_leveled_compaction" -> 1,
     "x109_geometric_schedule" -> 1,
     "x110_snapshot_cdc" -> 1,
     "w13_cdc_dedup_sync" -> 1,
-    "w12_online_funnel" -> 10,
+    "w12_online_funnel" -> 6,
     // w07's 18 audited stages + x05's truth slice + the per-query
     // eval join/agg over two <= 10-rows/query relations + final sort
     "x93_funnel_recall" -> 20,
@@ -283,10 +285,13 @@ class ShuffleBudgetSpec extends SparkSpec {
     // (43 -> 32); steady sf0.1 cost measured flat (5.6 s vs 5.5 r9).
     // 32 -> 43 (r10b): the FOURTH family landed — the shard through
     // PqIndex build(base)/append/delete with frozen base-trained books
-    // (4 subspace Lloyd aggs + the code-census agg; the coarse/cells
-    // subtrees stay lazy — the census reads codes only); steady 9.9 s
-    // at sf0.1, the full four-family nightly
-    "w08_nightly_ingest" -> 39, // r14: PQ base codes cut once (was 43)
+    // (4 subspace Lloyd aggs + the code-census agg); steady 9.9 s at
+    // sf0.1, the full four-family nightly. r14: PQ base codes cut once
+    // (43 -> 39). 39 -> 44: the code rows carry their coarse cell, so
+    // the census over `codes` now runs the coarse training and
+    // assignment the stored cell costs (it stayed lazy while `cells`
+    // was a table of its own), and the sparse lists carry `dl`
+    "w08_nightly_ingest" -> 44,
     // x97's audited IVFPQ compose + one bounded candidate join per
     // refine config (3 configs share ONE ADC pass; each tail is
     // ≤ k'·EvalK rows keyed back to the vector relation) + the
@@ -296,7 +301,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     // the nightly writes run eagerly before this plan exists (w09's
     // shape, dense family): row-local probes + the cluster-keyed scan
     // join + one top-k fold over parquet the compaction already folded
-    "w10_pq_lifecycle" -> 4,
+    "w10_pq_lifecycle" -> 2,
     // the serve plan over the minhash lifecycle's MATERIALIZED
     // layout: band-key candidate join + the two signature verify
     // joins over the parquet the compaction already folded
@@ -305,10 +310,9 @@ class ShuffleBudgetSpec extends SparkSpec {
     // nightly writes (init, 2 appends, policy-fired compaction, a
     // delete segment) run eagerly before this plan exists, so the
     // counted plan is one post-compaction snapshot view: base scans +
-    // the delete's dirty-term re-truncation + x80's serve joins.
-    // Flatter than x99's 17 BY CONSTRUCTION: compaction folded the
-    // append segments into parquet the serve just scans
-    "w09_segment_lifecycle" -> 5,
+    // the delete segment's term-set anti-join + x80's serve scan and
+    // fold (the lists were repaired when the segment was written)
+    "w09_segment_lifecycle" -> 2,
     // x05b's audited candidate plan + the two sliced-embedding joins,
     // the per-query rerank window and the final sort
     "x83_maxsim_rerank" -> 10,
@@ -336,23 +340,24 @@ class ShuffleBudgetSpec extends SparkSpec {
     // x88's build stages on the base split + the delta's tf/df/dl
     // union aggs + the touched-term re-truncation window + the census
     // — the append theorem gated against the full-rebuild oracle
-    "x92_sparse_index_append" -> 11,
+    "x92_sparse_index_append" -> 10,
     // full build stages (tf agg + df/dl/stats + truncation window) +
     // the delete's touched-term split and re-truncation window + the
     // census agg/sort; the deleted-doc tf and the 1-row stats ride
     // broadcasts
-    "x96_index_delete" -> 10,
+    // 10 -> 12: the repaired lists join the surviving doc lengths, so
+    // each posting carries its `dl`
+    "x96_index_delete" -> 12,
     // x96's build+delete stages + the rare-term query selection window
     // + the serve's candidate join and one per-query top-k fold
-    "x98_delete_serve" -> 10,
-    // base build + the append/delete segment derivations (df deltas,
-    // doc lengths), the scoped tombstone anti-joins and telescoping
-    // df sum of the LIVE VIEW, the dirty-term re-truncation window,
-    // then x80's serve tail — structural count over one base + two
-    // segments (23 → 17 when the dirty-term set gained its cut and
-    // stopped re-inlining into every consumer; growth per segment is
-    // LINEAR, pinned by SparseSegmentsSpec, and compact() resets it)
-    "x99_segmented_serve" -> 11,
+    "x98_delete_serve" -> 12, // 10 -> 12 with x96
+    // base build + the live lists: each segment's repaired lists are
+    // cut leaves, so the view is the base lists, their term-set
+    // anti-join and the union, then x80's serve scan and fold (11 -> 5
+    // when the lists moved to write time: no re-truncation window or
+    // df sum at serve; growth per segment is LINEAR, pinned by
+    // SparseSegmentsSpec, and compact() resets it)
+    "x99_segmented_serve" -> 5,
     // per-source prefix-sum window + the (source, shard) census agg
     // — packing is per-source streams, never one global ordering
     "x100_sequence_pack" -> 2,

@@ -68,8 +68,13 @@ class PqIndexSpec extends SparkSpec {
       .filter(col("vec_id") % 3 === 0))
     assert(afterDelta == expectDelta, "delta codes drifted from the " +
       "frozen-book encode")
-    // cells grew by exactly the delta, against frozen coarse cells
-    assert(appended.cells.count() == idx.cells.count() + delta.count())
+    // delta rows sit in their frozen-coarse-codebook cells
+    def cellKey(df: DataFrame) =
+      df.select("vec_id", "cluster").collect().map(_.toSeq).toSet
+    assert(cellKey(appended.codes.filter(col("vec_id") % 3 === 0)) ==
+      cellKey(AnnIndex.assign(delta, idx.coarse)),
+      "delta cells drifted from the frozen coarse assignment")
+    assert(appended.codes.count() == idx.codes.count() + delta.count())
   }
 
   test("delete serves exactly the remaining corpus under frozen codebooks") {
@@ -78,7 +83,7 @@ class PqIndexSpec extends SparkSpec {
     val del = ev.filter(col("vec_id") % 4 === 1).select("vec_id")
     assert(del.count() > 0)
     val deleted = PqIndex.delete(idx, del)
-    // codes/cells are exactly the anti-joined sets
+    // codes are exactly the anti-joined set
     assert(codesKey(deleted.codes) ==
       codesKey(idx.codes.join(del, Seq("vec_id"), "left_anti")))
     // served results never contain a deleted vector, and equal the
@@ -86,8 +91,7 @@ class PqIndexSpec extends SparkSpec {
     val served = PqIndex.serve(queries(ev), deleted)
     assert(served.join(del.withColumnRenamed("vec_id", "v2"),
       col("vec_id") === col("v2")).count() == 0)
-    val rebuilt = PqIndex.Index(idx.coarse,
-      idx.cells.join(del, Seq("vec_id"), "left_anti"), idx.books,
+    val rebuilt = PqIndex.Index(idx.coarse, idx.books,
       idx.codes.join(del, Seq("vec_id"), "left_anti"))
     assert(servedKey(served) == servedKey(PqIndex.serve(queries(ev),
       rebuilt)))

@@ -22,7 +22,6 @@ class PqSegmentsSpec extends SparkSpec {
 
   private def assertSameIndex(a: PqIndex.Index,
       b: PqIndex.Index): Unit = {
-    assert(tableKey(a.cells) == tableKey(b.cells), "cells drifted")
     assert(tableKey(a.codes) == tableKey(b.codes), "codes drifted")
     assert(tableKey(a.coarse) == tableKey(b.coarse), "coarse drifted")
     (0 until PqIndex.Sub).foreach(i =>

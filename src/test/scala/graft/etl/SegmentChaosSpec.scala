@@ -129,7 +129,7 @@ class SegmentChaosSpec extends SparkSpec {
       PqSegments.deleteSeg(spark, root, delVecIds, tag = tag)
     def layoutKey(root: String): Set[Seq[Any]] = {
       val idx = PqSegments.read(spark, root)
-      tableKey(idx.cells) ++ tableKey(idx.codes)
+      tableKey(idx.codes)
     }
     // the dense oracle is the FOLD-IN chain on the same frozen books
     // (a from-scratch rebuild would retrain them — PqSegmentsSpec's
@@ -139,7 +139,7 @@ class SegmentChaosSpec extends SparkSpec {
       var idx = PqIndex.build(embCls(0))
       appended.foreach(i => idx = PqIndex.append(idx, embCls(i)))
       if (deleted) idx = PqIndex.delete(idx, delVecIds)
-      tableKey(idx.cells) ++ tableKey(idx.codes)
+      tableKey(idx.codes)
     }
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * folded base with zero segments, and [[SegmentOps.vacuum]] is the
   * explicit release that finally drops the superseded generation.
   * Plus the compaction TRIGGER (segment-count policy + the sparse
-  * family's dirty-bucket-fraction signal) and the fail-loud contracts
+  * family's shadowed-list-fraction signal) and the fail-loud contracts
   * from ADVICE r10 (stray segment debris, non-positive build params).
   */
 class SegmentManifestSpec extends SparkSpec {
@@ -94,20 +94,20 @@ class SegmentManifestSpec extends SparkSpec {
       SparseIndex.build(t.filter(col("doc_id") % 3 =!= 0), cap), root,
       cap)
     assert(!SegmentOps.shouldCompact(spark, root, 1))
-    assert(SparseSegments.dirtyBucketFraction(spark, root) == 0.0)
+    assert(SparseSegments.shadowedListFraction(spark, root) == 0.0)
 
     SparseSegments.appendSeg(spark, root,
       t.filter(col("doc_id") % 3 === 0))
     assert(SegmentOps.shouldCompact(spark, root, 1))
     assert(!SegmentOps.shouldCompact(spark, root, 2))
-    val frac = SparseSegments.dirtyBucketFraction(spark, root)
-    assert(frac > 0.0 && frac <= 1.0, s"dirty fraction out of range: $frac")
+    val frac = SparseSegments.shadowedListFraction(spark, root)
+    assert(frac > 0.0 && frac <= 1.0, s"shadowed fraction out of range: $frac")
 
     // the w09 nightly shape: policy fires -> compact -> signals reset
     if (SegmentOps.shouldCompact(spark, root, 1))
       SparseSegments.compactInPlace(spark, root)
     assert(!SegmentOps.shouldCompact(spark, root, 1))
-    assert(SparseSegments.dirtyBucketFraction(spark, root) == 0.0)
+    assert(SparseSegments.shadowedListFraction(spark, root) == 0.0)
   }
 
   test("pq + minhash: in-place compaction flips the pointer and serves identically") {

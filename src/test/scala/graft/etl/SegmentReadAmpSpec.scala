@@ -5,21 +5,20 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The priced compaction curve (VERDICT r10 #1's card): how much of
-  * the base tf relation a segmented-view read must RESCAN as segments
-  * accumulate — the read amplification [[SparseSegments
-  * .dirtyBucketFraction]] reports and the w09 policy compacts away.
+  * the base's posting lists a serve over the segmented view reads only
+  * to replace them with segment lists, as segments accumulate — the
+  * read amplification [[SparseSegments.shadowedListFraction]] reports
+  * and the w09 policy compacts away.
   *
   * For each night k the card rows are exact counts from the layout
-  * itself: the dirty-term census over the segments' dfd sets, the
-  * bucket census it prunes to, and the base-tf rows the static isin
-  * filter admits (what the view's re-truncation actually re-reads)
-  * vs the full base-tf row count. Pinned facts:
+  * itself: the shadowed-term census (base terms named by a segment's
+  * term set), and the base-list rows of those terms (what the serve's
+  * term-set anti-join drops) vs the full base-list row count. Pinned
+  * facts:
   *  - amplification is MONOTONE in the segment count (more churn can
-  *    only dirty more buckets);
-  *  - the admitted-row count equals the sum over dirty buckets — the
-  *    pruning is exact, not heuristic;
-  *  - compaction RESETS the curve to zero (the policy's payoff);
-  *  - the reported fraction matches the bucket census.
+  *    only shadow more lists);
+  *  - the reported fraction matches the shadowed-term census;
+  *  - compaction RESETS the curve to zero (the policy's payoff).
   */
 class SegmentReadAmpSpec extends SparkSpec {
 
@@ -33,52 +32,50 @@ class SegmentReadAmpSpec extends SparkSpec {
       SparseIndex.build(t.filter(col("doc_id") % 4 === 0), cap), root,
       cap)
 
-    def baseTf(): DataFrame = {
+    def base(table: String): DataFrame = {
       val snap = SegmentOps.resolveSnapshot(spark, root)
-      spark.read.parquet(s"$root/${snap.baseDir}/tf")
+      spark.read.parquet(s"$root/${snap.baseDir}/$table")
     }
-    def dirtyBuckets(): Set[Int] = {
+    def shadowed(): Set[String] = {
       val snap = SegmentOps.resolveSnapshot(spark, root)
       snap.segs.map { case (_, dn, _) =>
         spark.read.parquet(s"$root/segs/$dn/dfd").select("tok")
       }.reduceOption(_ unionByName _) match {
-        case None => Set.empty[Int]
-        case Some(dirty) => dirty
-          .select(pmod(hash(col("tok")),
-            lit(SparseSegments.TokBuckets)).as("tbk"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        case None => Set.empty[String]
+        case Some(terms) => base("df").join(terms, Seq("tok"),
+            "left_semi")
+          .collect().map(_.getString(0)).toSet
       }
     }
 
-    val totalRows = baseTf().count()
-    assert(totalRows > 0)
-    var lastAdmitted = 0L
+    val baseTerms = base("df").count()
+    val totalRows = base("plist").count()
+    assert(baseTerms > 0 && totalRows > 0)
+    var lastDropped = 0L
     val card = Seq.newBuilder[String]
     (1 to 3).foreach { k =>
       SparseSegments.appendSeg(spark, root,
         t.filter(col("doc_id") % 4 === k))
-      val buckets = dirtyBuckets()
-      val admitted = baseTf()
-        .filter(col("tbk").isin(buckets.map(Int.box).toSeq: _*))
-        .count()
-      val frac = SparseSegments.dirtyBucketFraction(spark, root)
-      // the reported amplification signal IS the bucket census
-      assert(math.abs(frac -
-        buckets.size.toDouble / SparseSegments.TokBuckets) < 1e-9,
-        s"dirtyBucketFraction $frac != census ${buckets.size}/64")
-      // monotone: night k's churn can only widen the rescan set
-      assert(admitted >= lastAdmitted,
-        s"amplification shrank: $admitted < $lastAdmitted at k=$k")
-      lastAdmitted = admitted
-      card += f"night $k: segs=$k dirty_buckets=${buckets.size}%2d " +
-        f"admitted_rows=$admitted%6d of $totalRows (${
-          100.0 * admitted / totalRows}%.1f%%)"
+      val terms = shadowed()
+      val dropped = base("plist")
+        .filter(col("tok").isin(terms.toSeq: _*)).count()
+      val frac = SparseSegments.shadowedListFraction(spark, root)
+      // the reported amplification signal IS the shadowed-term census
+      assert(math.abs(frac - terms.size.toDouble / baseTerms) < 1e-9,
+        s"shadowedListFraction $frac != census ${terms.size}/$baseTerms")
+      // monotone: night k's churn can only widen the shadowed set
+      assert(dropped >= lastDropped,
+        s"amplification shrank: $dropped < $lastDropped at k=$k")
+      lastDropped = dropped
+      card += f"night $k: segs=$k shadowed_lists=${terms.size}%2d of " +
+        f"$baseTerms dropped_rows=$dropped%6d of $totalRows (${
+          100.0 * dropped / totalRows}%.1f%%)"
     }
     // the curve's whole point: compaction resets it to zero
     SparseSegments.compactInPlace(spark, root)
-    assert(SparseSegments.dirtyBucketFraction(spark, root) == 0.0)
-    assert(dirtyBuckets().isEmpty)
-    card += "compact: dirty_buckets=0 admitted_rows=0 (policy payoff)"
+    assert(SparseSegments.shadowedListFraction(spark, root) == 0.0)
+    assert(shadowed().isEmpty)
+    card += "compact: shadowed_lists=0 dropped_rows=0 (policy payoff)"
     info("read-amplification card:")
     card.result().foreach(info(_))
   }

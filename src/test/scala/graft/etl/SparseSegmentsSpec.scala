@@ -36,13 +36,13 @@ class SparseSegmentsSpec extends SparkSpec {
     val t = tf
     val base = SparseIndex.build(t.filter(col("doc_id") % 3 =!= 0), cap)
     val seg1 = SparseSegments.appendSegOf(base,
-      t.filter(col("doc_id") % 3 === 0))
-    val live1 = SparseSegments.view(base, Seq(seg1), cap)
+      t.filter(col("doc_id") % 3 === 0), cap)
+    val live1 = SparseSegments.view(base, Seq(seg1))
     val del = t.select("doc_id").distinct()
       .filter(col("doc_id") % 10 === 3)
     assert(del.count() > 0)
-    val seg2 = SparseSegments.deleteSegOf(live1, del)
-    val live2 = SparseSegments.view(base, Seq(seg1, seg2), cap)
+    val seg2 = SparseSegments.deleteSegOf(live1, del, cap)
+    val live2 = SparseSegments.view(base, Seq(seg1, seg2))
     val rebuilt = SparseIndex.build(
       t.filter(col("doc_id") % 10 =!= 3), cap)
     assertSameIndex(live2, rebuilt)
@@ -56,10 +56,10 @@ class SparseSegmentsSpec extends SparkSpec {
     assert(revisedIds.count() > 0)
     val revisedTf = t.join(revisedIds, Seq("doc_id"), "left_semi")
       .withColumn("tf", col("tf") + 1L)
-    val seg1 = SparseSegments.deleteSegOf(base, revisedIds)
-    val live1 = SparseSegments.view(base, Seq(seg1), cap)
-    val seg2 = SparseSegments.appendSegOf(live1, revisedTf)
-    val live2 = SparseSegments.view(base, Seq(seg1, seg2), cap)
+    val seg1 = SparseSegments.deleteSegOf(base, revisedIds, cap)
+    val live1 = SparseSegments.view(base, Seq(seg1))
+    val seg2 = SparseSegments.appendSegOf(live1, revisedTf, cap)
+    val live2 = SparseSegments.view(base, Seq(seg1, seg2))
     val rebuilt = SparseIndex.build(
       t.join(revisedIds, Seq("doc_id"), "left_anti")
         .unionByName(revisedTf), cap)
@@ -71,10 +71,10 @@ class SparseSegmentsSpec extends SparkSpec {
     val base = SparseIndex.build(t, cap)
     val ghosts = spark.range(900000, 900005)
       .select(col("id").as("doc_id"))
-    val seg = SparseSegments.deleteSegOf(base, ghosts)
+    val seg = SparseSegments.deleteSegOf(base, ghosts, cap)
     // a ghost delete touches no terms — the view keeps every stored
     // list verbatim and only the (empty) delta unions differ
-    val live = SparseSegments.view(base, Seq(seg), cap)
+    val live = SparseSegments.view(base, Seq(seg))
     assertSameIndex(live, base)
   }
 
@@ -84,22 +84,24 @@ class SparseSegmentsSpec extends SparkSpec {
     val shards = (1 to 3).map(i => t.filter(col("doc_id") % 4 === i))
     var live = base
     var segs = Vector.empty[SparseSegments.Seg]
+    // joins in the optimized plan of the serve's table: one term-set
+    // anti-join per segment on top of the base's own
+    def joins(df: DataFrame): Int = df.queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical
+        .Join => j }.size
     val costs = scala.collection.mutable.ArrayBuffer[Int]()
     for (sh <- shards) {
-      segs = segs :+ SparseSegments.appendSegOf(live, sh)
-      live = SparseSegments.view(base, segs, cap)
-      costs += graft.ShuffleCount.shuffles(
-        live.plist.queryExecution.executedPlan.toString)
+      segs = segs :+ SparseSegments.appendSegOf(live, sh, cap)
+      live = SparseSegments.view(base, segs)
+      costs += joins(live.plist)
     }
     val d1 = costs(1) - costs(0)
     val d2 = costs(2) - costs(1)
     assert(d1 == d2, s"view growth is not linear in segments: $costs")
-    assert(d1 <= 8, s"per-segment plan cost too high: $costs")
+    assert(d1 <= 2, s"per-segment plan cost too high: $costs")
     // and the cost is REAL — a fresh (compacted) build plans flatter,
     // which is exactly why compact() exists
-    val flat = graft.ShuffleCount.shuffles(
-      SparseIndex.build(t, cap).plist
-        .queryExecution.executedPlan.toString)
+    val flat = joins(SparseIndex.build(t, cap).plist)
     assert(costs.last > flat, s"stack $costs vs flat $flat")
   }
 
@@ -108,10 +110,11 @@ class SparseSegmentsSpec extends SparkSpec {
     // deltas: delete base docs, re-append their exact TEXTS under NEW
     // ids — every touched term's dfd sums to 0 across the range, but
     // the postings behind it changed doc identity, so the base's
-    // stored plist rows (old ids) are stale and the term MUST stay in
-    // the view's dirty-term set for re-truncation. cap=5 overflows
-    // every list at sf0.001, so serving a stale plist would surface
-    // as plist drift against the from-scratch rebuild.
+    // stored plist rows (old ids) are stale and the merged segment
+    // MUST still name every term either input replaced, or its lists
+    // would not shadow the base's. cap=5 overflows every list at
+    // sf0.001, so serving a stale plist would surface as plist drift
+    // against the from-scratch rebuild.
     val t = tf
     val root = java.nio.file.Files
       .createTempDirectory("sparse_merge_zero").toString
@@ -124,17 +127,24 @@ class SparseSegmentsSpec extends SparkSpec {
       .withColumn("doc_id", col("doc_id") + maxId + 1)
     SparseSegments.deleteSeg(spark, root, delIds)
     SparseSegments.appendSeg(spark, root, clonesTf)
+    def terms(dir: String): Set[String] = spark.read
+      .parquet(s"$root/segs/$dir/dfd").select("tok").collect()
+      .map(_.getString(0)).toSet
+    val replaced = SegmentOps.resolveSnapshot(spark, root).segs
+      .map(x => terms(x._2)).reduce(_ ++ _)
     SparseSegments.mergeSegs(spark, root, 2)
     val snap = SegmentOps.resolveSnapshot(spark, root)
     assert(snap.segs.map(x => (x._1, x._3)) == Seq((1, 'm')),
       s"unexpected layout ${snap.segs}")
-    // the merged dfd must retain the cancelled terms as (tok, 0) rows
+    assert(terms(snap.segs.head._2) == replaced,
+      "the merged segment's term set differs from its inputs' union")
+    // the cancelled terms are kept as (tok, 0) rows
     val dfdM = spark.read
       .parquet(s"$root/segs/${snap.segs.head._2}/dfd")
     val zeroRows = dfdM.filter(col("dfd") === 0L).count()
     assert(zeroRows > 0,
-      "merged dfd dropped its zero-sum terms — the dirty set lost " +
-        "terms whose postings changed doc identity")
+      "merged dfd dropped its zero-sum terms — the merged term set " +
+        "lost terms whose postings changed doc identity")
     val rebuilt = SparseIndex.build(
       t.join(delIds, Seq("doc_id"), "left_anti")
         .unionByName(clonesTf), cap)
@@ -295,5 +305,45 @@ class SparseSegmentsSpec extends SparkSpec {
     val compacted = SparseSegments.read(spark, outRoot, Some(cap))
     assert(SparseSegments.listSegs(spark, outRoot).isEmpty)
     assertSameIndex(compacted, rebuilt)
+  }
+
+  /** (row count, SHA-256 of the sorted rendered rows) of the live
+    * posting lists — every column a serve reads from them. */
+  private def listDigest(idx: SparseIndex.Index): (Long, String) = {
+    val rows = idx.plist.select(SparseIndex.PlistCols.map(col): _*)
+      .collect().map(_.toSeq.map(String.valueOf).mkString("\t")).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (rows.length.toLong, md.digest(rows.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString)
+  }
+
+  test("live lists of maintained layouts match their golden digests") {
+    val t = tf
+    val a = java.nio.file.Files.createTempDirectory("lists_adm").toString
+    SparseSegments.init(
+      SparseIndex.build(t.filter(col("doc_id") % 3 =!= 0), cap), a, cap)
+    SparseSegments.appendSeg(spark, a, t.filter(col("doc_id") % 3 === 0))
+    SparseSegments.deleteSeg(spark, a,
+      t.select("doc_id").distinct().filter(col("doc_id") % 10 === 3))
+    assert(SparseSegments.tieredMaintain(spark, a) == 1)
+    val b = java.nio.file.Files.createTempDirectory("lists_dtr").toString
+    SparseSegments.init(SparseIndex.build(t, cap), b, cap)
+    val revised = t.filter(col("doc_id") % 7 === 2).select("doc_id")
+      .distinct()
+    SparseSegments.deleteSeg(spark, b, revised)
+    SparseSegments.appendSeg(spark, b,
+      t.join(revised, Seq("doc_id"), "left_semi")
+        .withColumn("tf", col("tf") + 1L))
+    val got = Seq(
+      "append_delete_maintain" -> listDigest(SparseSegments.read(spark, a)),
+      "delete_then_revise" -> listDigest(SparseSegments.read(spark, b)))
+    val golden = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/list_golden.tsv"), "UTF-8")
+      .getLines().filterNot(_.startsWith("#")).map(_.split("\t"))
+      .map(r => r(0) -> (r(1).toLong, r(2))).toMap
+    val drift = got.filterNot { case (n, v) => golden.get(n).contains(v) }
+    assert(drift.isEmpty, "live-list digests drifted from " +
+      "list_golden.tsv:\n" + drift.map { case (n, (c, h)) =>
+        s"$n\t$c\t$h" }.mkString("\n"))
   }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * CONTINUOUS serving — the online hybrid endpoint reads the
   * segmented live views directly, no compaction required first. The
   * static side of the stream-static joins is now a multi-segment
-  * composition (scoped anti-joins, telescoping df sums, lazy
-  * re-truncation), so this also pins that the whole view plan is
+  * composition (scoped tombstone anti-joins, and each term's newest
+  * write-time-repaired posting list shadowing the base's), so this also pins that the whole view plan is
   * legal and bit-exact as a streaming join side. Equivalence chain:
   * chunked stream over segmented views ≡ fuseBatch over the same
   * views ≡ fuseBatch over fold-in indexes (the segment specs' view ≡
