@@ -43,11 +43,16 @@ import graft.functions.DotProduct
   * append is exactly the frozen-codebook encode of the new rows —
   * codebooks drift only at the next offline rebuild, the standard IVF
   * trade), and [[delete]] retracts vectors by keyed anti-join (exact
-  * by the same row-locality; a revision is delete + append).
+  * by the same row-locality; a revision is delete + append). The
+  * shard encode ([[encodeShard]]) binds the frozen codebooks as
+  * literals, as a serve does, so it is one projection over the
+  * shard's rows: no join and no shuffle.
   *
   * Scale: build is the two trainings (bounded codebooks, broadcast-
-  * safe forever) + per-row encodes; append/delete touch only the
-  * shard's rows. Serve is ONE scan, shared by every serve form here
+  * safe forever) + per-row encodes, its code rows cut once so every
+  * consumer scans rows instead of re-running the trainings;
+  * append/delete touch only the shard's rows. Serve is ONE scan,
+  * shared by every serve form here
   * and by the streaming twins ([[graft.streaming.PqServeStream]],
   * [[graft.streaming.FusedServeStream]]): the coarse codebook and
   * the PQ books (≤ 16 + 4×8 rows by construction) are collected in
@@ -127,10 +132,14 @@ object PqIndex {
   def build(e: DataFrame): Index = {
     val coarse = AnnIndex.train(e).cut(false) // assignment + every probe
     val subs = (0 until Sub).map(i => subspace(e, i))
+    // cut: the code rows embed both trainings and the cell assignment,
+    // and a consumer that reads only vec_ids (append's disjointness
+    // check, a census) must not re-run them
     val codes = subs.zipWithIndex
       .map { case ((c, _), i) => c.select(col("vec_id"), col(s"code$i")) }
       .foldLeft(AnnIndex.assign(e, coarse).select("vec_id", "cluster"))(
         (a, b) => a.join(b, Seq("vec_id")))
+      .cut(false)
     Index(coarse, subs.map(_._2), codes)
   }
 
@@ -177,23 +186,29 @@ object PqIndex {
     (c, (0 until Sub).map(i => byTable.getOrElse(i, Nil)))
   }
 
+  /** A row's (dist, c_id) to every entry of a literal codebook, in
+    * (dist asc, c_id) order — the ranking of [[AnnIndex.assign]] and
+    * [[encode]], computed row-locally by one array sort. */
+  private def ranked(book: Seq[Centroid])(dist: Centroid => Column)
+      : Column =
+    sort_array(array(book.map(c =>
+      struct(dist(c).as("dist"), lit(c._1).as("c_id"))): _*))
+
+  /** Cosine distance of the row's (emb, norm) to a coarse centroid —
+    * [[AnnIndex.assign]]'s expression with the centroid as literals. */
+  private def coarseDist(c: Centroid): Column =
+    lit(1.0) - DotProduct(col("emb"), typedLit(c._2)) /
+      (col("norm") * lit(c._3))
+
   /** Row-local probe choice: each query row ranks its distances to the
-    * literal coarse centroids in an array sort and explodes its
-    * `nprobe` nearest cells — zero shuffle. The struct field order
-    * (dist, c_id) is the (dist asc, c_id) probe ranking. */
+    * literal coarse centroids and explodes its `nprobe` nearest cells
+    * — zero shuffle. */
   private def probe(queries: DataFrame, coarse: Seq[Centroid],
-      nprobe: Int): DataFrame = {
-    val dists = coarse.map { case (cid, cemb, cnorm) =>
-      struct(
-        (lit(1.0) - DotProduct(col("emb"), typedLit(cemb)) /
-          (col("norm") * lit(cnorm))).as("dist"),
-        lit(cid).as("c_id"))
-    }
+      nprobe: Int): DataFrame =
     queries
       .withColumn("probe", explode(functions.slice(
-        sort_array(array(dists: _*)), 1, nprobe)))
+        ranked(coarse)(coarseDist), 1, nprobe)))
       .select(col("q_id"), col("emb"), col("probe.c_id").as("cluster"))
-  }
 
   /** The one scan behind every serve: probed (q_id, cluster, ...)
     * rows join the stored inverted lists `codes` on `cluster` — only
@@ -370,13 +385,30 @@ object PqIndex {
 
   /** Frozen-codebook encode of a shard into code rows (vec_id, cluster,
     * code0..code3) — the per-row kernel [[append]] folds in and
-    * [[graft.etl.PqSegments]] persists as an O(delta) segment. */
-  def encodeShard(idx: Index, eNew: DataFrame): DataFrame =
-    (0 until Sub)
-      .map(i => encode(slice(eNew, i), idx.books(i))
-        .select(col("vec_id"), col("cluster").as(s"code$i")))
-      .foldLeft(AnnIndex.assign(eNew, idx.coarse)
-        .select("vec_id", "cluster"))((a, b) => a.join(b, Seq("vec_id")))
+    * [[graft.etl.PqSegments]] persists as an O(delta) segment. The
+    * frozen codebooks are bound as literals ([[bind]], one job), so
+    * the cell and every code are row-local expressions: the coarse
+    * cell by [[AnnIndex.assign]]'s cosine distance, code i by
+    * [[encode]]'s squared L2, both tie-broken on c_id — the same
+    * arithmetic on the same operands, so the same rows. */
+  def encodeShard(idx: Index, eNew: DataFrame): DataFrame = {
+    val (coarse, books) = bind(idx, withCoarse = true)
+    def nearest(book: Seq[Centroid])(dist: Centroid => Column): Column =
+      element_at(ranked(book)(dist), 1).getField("c_id")
+    // each subspace slice and its squared norm once per row, not once
+    // per codebook entry
+    val sliced = (0 until Sub).foldLeft(eNew) { (df, i) =>
+      df.withColumn(s"v$i", expr(s"slice(emb, ${Dims * i + 1}, $Dims)"))
+        .withColumn(s"vv$i", DotProduct(col(s"v$i"), col(s"v$i")))
+    }
+    val codes = books.zipWithIndex.map { case (book, i) =>
+      nearest(book)(c => col(s"vv$i") -
+        lit(2.0) * DotProduct(col(s"v$i"), typedLit(c._2)) + lit(c._3))
+        .as(s"code$i")
+    }
+    sliced.select(col("vec_id") +:
+      nearest(coarse)(coarseDist).as("cluster") +: codes: _*)
+  }
 
   /** Retract vectors — one keyed anti-join on `codes`, exact by
     * row-locality under the frozen codebooks (the same argument as

@@ -27,8 +27,10 @@ import graft.etl.Checkpoints.CutOps
   *    of the cards reads it; the serve does not);
   *  - `dl` — document length, one row per doc;
   *  - `stats` — the 1-row corpus card (n_docs, t_tokens);
-  *  - `tf` — the full pre-truncation term frequencies, the
-  *    un-truncation source [[delete]] re-truncates capped lists from.
+  *  - `tf` — the full pre-truncation term frequencies, each row
+  *    `(doc_id, tok, tf, dl)`: the un-truncation source [[delete]]
+  *    re-truncates capped lists from, carrying the document length
+  *    so a re-truncated list needs no join to get it.
   * `dl` and `df` on a posting never go stale while the posting is
   * stored: a document's length changes only through delete + append,
   * and a delete re-truncates every term the document contained, so no
@@ -62,8 +64,9 @@ import graft.etl.Checkpoints.CutOps
   * oracle (the AnnIndex pattern).
   *
   * Scale: build cost is one tokenize scan + the df agg + one per-doc
-  * length window (whose partitioning also yields `dl`) + one per-term
-  * truncation window, amortized over every serve; serve cost
+  * length window (whose partitioning also yields `dl` and the stored
+  * `tf`) + one per-term truncation window, amortized over every serve;
+  * serve cost
   * is one term-keyed join against `plist`, bounded ≤ cap rows per
   * query term AT ANY CORPUS SIZE (the WAND/MaxScore discipline — the
   * uncapped join was measured at 55M rows / 492 s at sf1 on this
@@ -88,6 +91,9 @@ object SparseIndex {
 
   /** The columns of a stored posting-list row. */
   val PlistCols: Seq[String] = Seq("doc_id", "tok", "tf", "dl", "df")
+
+  /** The columns of a stored term-frequency row. */
+  val TfCols: Seq[String] = Seq("doc_id", "tok", "tf", "dl")
 
   /** (doc_id, tok, tf) term frequencies from a documents table —
     * the tokenizer contract shared by build, append and the query
@@ -120,21 +126,18 @@ object SparseIndex {
       .drop("prk", "ddf", "fresh")
   }
 
-  /** Posting lists rebuilt from every live posting of their terms
-    * (doc_id, tok, tf), each row given its document's length from
-    * `dl`. */
-  private[etl] def relist(tf: DataFrame, dl: DataFrame, cap: Int)
-      : DataFrame =
-    lists(tf.select(col("doc_id"), col("tok"), col("tf"),
-        lit(0L).as("df"), lit(1L).as("ddf")), cap)
-      .join(dl, "doc_id")
+  /** Posting lists rebuilt from every live posting (doc_id, tok, tf,
+    * dl) of their terms. */
+  private[etl] def relist(tf: DataFrame, cap: Int): DataFrame =
+    lists(tf.select(TfCols.map(col) ++
+        Seq(lit(0L).as("df"), lit(1L).as("ddf")): _*), cap)
       .select(PlistCols.map(col): _*)
 
-  /** Postings (doc_id, tok, tf) with their document's length `dl`:
-    * one window over `doc_id`. Its output stays partitioned by
-    * `doc_id`, so the (doc_id, dl) table derives from it ([[dlOf]])
-    * without another exchange — the lists carry `dl` for the price of
-    * the `dl` aggregation they replace. */
+  /** Postings (doc_id, tok, tf) with their document's length `dl` —
+    * the stored `tf` row shape: one window over `doc_id`. Its output
+    * stays partitioned by `doc_id`, so the (doc_id, dl) table derives
+    * from it ([[dlOf]]) without another exchange — the lists carry
+    * `dl` for the price of the `dl` aggregation they replace. */
   private[etl] def withDl(tf: DataFrame): DataFrame =
     tf.select("doc_id", "tok", "tf")
       .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")))
@@ -143,18 +146,20 @@ object SparseIndex {
   private[etl] def dlOf(tfDl: DataFrame): DataFrame =
     tfDl.select("doc_id", "dl").distinct()
 
-  /** The new lists of the terms a disjoint delta (doc_id, tok, tf, dl)
-    * touches, from the stored lists `plist` and the delta's postings
-    * — no tf read (the class doc's monotonicity argument). The stored
-    * lists go into the one window whole rather than through a
-    * semi-join with the delta's term set: the window's exchange is
-    * paid either way, and the term set's aggregation and broadcast
-    * would be two more jobs in front of it. */
-  private[etl] def appendLists(plist: DataFrame, deltaDl: DataFrame,
-      cap: Int): DataFrame =
-    lists(plist.select(PlistCols.map(col) :+ lit(0L).as("ddf"): _*)
-        .unionByName(deltaDl.select(col("doc_id"), col("tok"),
-          col("tf"), col("dl"), lit(0L).as("df"), lit(1L).as("ddf"))),
+  /** The new lists of the terms `terms` that a disjoint delta
+    * (doc_id, tok, tf, dl) touches, from the stored lists `plist` and
+    * the delta's postings — no tf read (the class doc's monotonicity
+    * argument). Only the stored lists of those terms are read: the
+    * cost is O(delta terms × cap), whatever the vocabulary. The term
+    * set is O(delta), so it is broadcast and the stored lists stream
+    * past it without a shuffle. */
+  private[etl] def appendLists(plist: DataFrame, terms: DataFrame,
+      deltaDl: DataFrame, cap: Int): DataFrame =
+    lists(plist.join(broadcast(terms.select("tok")), Seq("tok"),
+        "left_semi")
+        .select(PlistCols.map(col) :+ lit(0L).as("ddf"): _*)
+        .unionByName(deltaDl.select(TfCols.map(col) ++
+          Seq(lit(0L).as("df"), lit(1L).as("ddf")): _*)),
       cap)
       .select(PlistCols.map(col): _*)
 
@@ -167,10 +172,7 @@ object SparseIndex {
     val dl = dlOf(tfDl)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
-    Index(lists(tfDl.withColumn("df", lit(0L))
-        .withColumn("ddf", lit(1L)), cap)
-        .select(PlistCols.map(col): _*),
-      df, dl, stats, tf)
+    Index(relist(tfDl, cap), df, dl, stats, tfDl)
   }
 
   /** One (query, term, doc) BM25 contribution. */
@@ -266,11 +268,15 @@ object SparseIndex {
     val dl2 = idx.dl.unionByName(dlOf(deltaDl))
     val stats2 = dl2.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
-    val untouched = idx.plist
-      .join(delta.select("tok").distinct(), Seq("tok"), "left_anti")
-    Index(appendLists(idx.plist, deltaDl, cap)
+    // the delta's term set is O(delta): broadcast past the stored
+    // lists, and cut once for its two consumers (the repaired and the
+    // untouched lists)
+    val touched = delta.select("tok").distinct().cut(false)
+    val untouched = idx.plist.join(broadcast(touched), Seq("tok"),
+      "left_anti")
+    Index(appendLists(idx.plist, touched, deltaDl, cap)
         .unionByName(untouched),
-      df2, dl2, stats2, idx.tf.unionByName(delta))
+      df2, dl2, stats2, idx.tf.unionByName(deltaDl))
   }
 
   /** Remove a set of documents from the index WITHOUT a rebuild —
@@ -307,7 +313,7 @@ object SparseIndex {
     val stats2 = dl2.agg(count(lit(1)).as("n_docs"),
       sum("dl").as("t_tokens"))
     val retruncated = relist(
-      tf2.join(touched, Seq("tok"), "left_semi"), dl2, cap)
+      tf2.join(touched, Seq("tok"), "left_semi"), cap)
     val untouched = idx.plist.join(touched, Seq("tok"), "left_anti")
     Index(retruncated.unionByName(untouched), df2, dl2, stats2, tf2)
   }

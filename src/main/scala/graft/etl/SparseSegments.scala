@@ -20,7 +20,8 @@ import graft.etl.Checkpoints.CutOps
   *
   * A segment carries what its operation knew, computed against the
   * live view at write time:
-  *  - `tfAdd` — an appended shard's term frequencies (empty for a
+  *  - `tfAdd` — an appended shard's term frequencies with their doc
+  *    lengths, (doc_id, tok, tf, dl) like the base `tf` (empty for a
   *    delete);
   *  - `dfd` — the segment's TERM SET with signed document-frequency
   *    deltas (+ for an append, − for a delete): every term whose
@@ -34,11 +35,14 @@ import graft.etl.Checkpoints.CutOps
   *    append re-truncates the previous live lists of its terms ∪ its
   *    postings (the cap's monotonicity, [[SparseIndex]]'s class doc —
   *    no tf read); a delete re-truncates its terms from the live tf
-  *    without the deleted docs, reading only the base tf buckets of
-  *    those terms (the static `tbk` partition filter); a merge keeps
-  *    the newest list per term across its range. A term whose df
-  *    drops to 0 has no rows, but its `dfd` row still shadows the
-  *    older list.
+  *    without the deleted docs (whose rows carry `dl`, so no join),
+  *    reading only the base tf buckets of those terms (the static
+  *    `tbk` partition filter); a merge keeps the newest list per term
+  *    across its range. A term whose df drops to 0 has no rows, but
+  *    its `dfd` row still shadows the older list. The repair rides in
+  *    the segment's concurrent table write (a delete first collects
+  *    its bucket census, below): an append reads only the live lists
+  *    and doc lengths, a delete only the live tf.
   *
   * The live [[view]] (same code for the in-memory composition x99
   * gates and the on-disk layout):
@@ -88,8 +92,9 @@ object SparseSegments {
   val TokBuckets = 64
 
   /** The on-disk layout format this build reads and writes: 2 = the
-    * posting lists carry `dl` and `df`, and every segment carries its
-    * repaired lists. (Layouts before the format field are format 1.) */
+    * posting lists carry `dl` and `df`, the tf rows carry `dl`, and
+    * every segment carries its repaired lists. (Layouts before the
+    * format field are format 1.) */
   val Format = 2
 
   /** One maintenance operation's delta bundle — see the class doc. */
@@ -120,9 +125,11 @@ object SparseSegments {
     cutSeg(mkAppendSeg(live.plist, deltaTf, cap))
   }
 
-  /** The in-memory segment with its term set and lists cut to leaves. */
+  /** The in-memory segment with the tables that read the live view
+    * or the caller's id plan cut to leaves. */
   private def cutSeg(seg: Seg): Seg =
-    seg.copy(dfd = seg.dfd.cut(false), plist = seg.plist.cut(false))
+    seg.copy(dfd = seg.dfd.cut(false), tombs = seg.tombs.cut(false),
+      plist = seg.plist.cut(false))
 
   /** Disjointness as an in-plan guard on the delta (fires at the
     * segment write; zero extra jobs — pre-r14 an eager count action
@@ -144,21 +151,31 @@ object SparseSegments {
     * ([[SegmentOps.emptyLike]] — the append-only stacks stay linear). */
   private def mkAppendSeg(livePlist: DataFrame, deltaTf: DataFrame,
       cap: Int): Seg = {
-    // consumers: the tf, dfd and plist writes and dlAdd — one guarded
-    // read of the delta, not one per table
-    val delta = deltaTf.select("doc_id", "tok", "tf").cut(false)
-    val deltaDl = SparseIndex.withDl(delta)
+    // every table reads the delta: one guarded read and one
+    // doc-length window, not one per table. The tables' own small
+    // aggregations stay uncut, so they run inside the concurrent
+    // write rather than one after another before it.
+    val deltaDl = SparseIndex.withDl(deltaTf).cut(false)
     val dlAdd = SparseIndex.dlOf(deltaDl)
-      .cut(false) // consumers: the segment write and statsd
     Seg(
-      tfAdd = delta,
-      dfd = delta.groupBy("tok").agg(count(lit(1)).as("dfd")),
+      tfAdd = deltaDl,
+      dfd = deltaDl.groupBy("tok").agg(count(lit(1)).as("dfd")),
       dlAdd = dlAdd,
       statsd = dlAdd.agg(count(lit(1)).as("n_docs"),
         coalesce(sum("dl"), lit(0L)).as("t_tokens")),
-      tombs = SegmentOps.emptyLike(delta.select("doc_id")),
-      plist = SparseIndex.appendLists(livePlist, deltaDl, cap))
+      tombs = SegmentOps.emptyLike(deltaDl.select("doc_id")),
+      plist = asClustered(SparseIndex.appendLists(livePlist,
+        deltaDl.select("tok").distinct(), deltaDl, cap)))
   }
+
+  /** Repaired lists as their window's `tok` exchange partitioned
+    * them. That exchange is already sized by adaptive execution, so
+    * the segment write keeps its partitions (a no-op coalesce marks
+    * the layout explicit for [[graft.sources.Sources.writeOrdered]])
+    * instead of adding a rebalance stage after the window. */
+  private def asClustered(lists: DataFrame): DataFrame =
+    lists.coalesce(lists.sparkSession.sessionState.conf
+      .numShufflePartitions)
 
   /** Build a DELETE segment against the live view: −df deltas from the
     * deleted docs' live postings, a −stats delta, the tombstones, and
@@ -168,39 +185,41 @@ object SparseSegments {
     * anti-joins nothing). */
   def deleteSegOf(live: SparseIndex.Index, docIds: DataFrame,
       cap: Int): Seg =
-    cutSeg(mkDeleteSeg(live.tf, live.dl, docIds, cap,
+    cutSeg(mkDeleteSeg(live.tf, docIds, cap,
       touched => live.tf.join(touched, Seq("tok"), "left_semi")))
 
   /** The delete segment's tables. `termTf` gives the live tf of a set
     * of terms (before the delete) — the disk path's form reads only
-    * those terms' base tf buckets. */
-  private def mkDeleteSeg(liveTf: DataFrame, liveDl: DataFrame,
-      docIds: DataFrame, cap: Int,
-      termTf: DataFrame => DataFrame): Seg = {
+    * those terms' base tf buckets. The deleted docs' lengths come
+    * from their tf rows, so the live `dl` is never read. */
+  private def mkDeleteSeg(liveTf: DataFrame, docIds: DataFrame,
+      cap: Int, termTf: DataFrame => DataFrame): Seg = {
     // the tombstones are O(delete): broadcast, so neither the live tf
     // nor the repaired terms' postings shuffle to meet them
-    val del = broadcast(docIds.select("doc_id").distinct().cut(false))
+    val del = broadcast(docIds.select("doc_id").distinct())
     val delTf = liveTf.join(del, Seq("doc_id"), "left_semi").cut(false)
-    val delDl = liveDl.join(del, Seq("doc_id"), "left_semi")
+    val delDl = SparseIndex.dlOf(delTf)
+    // the term set: written, and the repair's term filter (O(delete),
+    // so broadcast past the live tf)
+    val dfd = delTf.groupBy("tok").agg((-count(lit(1))).as("dfd"))
       .cut(false)
-    val touched = delTf.select("tok").distinct()
+    val touched = broadcast(dfd.select("tok"))
     Seg(
       tfAdd = SegmentOps.emptyLike(delTf),
-      dfd = delTf.groupBy("tok").agg((-count(lit(1))).as("dfd")),
+      dfd = dfd,
       dlAdd = SegmentOps.emptyLike(delDl),
       statsd = delDl.agg((-count(lit(1))).as("n_docs"),
         (-coalesce(sum("dl"), lit(0L))).as("t_tokens")),
       tombs = del,
-      plist = SparseIndex.relist(
-        termTf(touched).join(del, Seq("doc_id"), "left_anti"), liveDl,
-        cap))
+      plist = asClustered(SparseIndex.relist(
+        termTf(touched).join(del, Seq("doc_id"), "left_anti"), cap)))
   }
 
   /** Compose base + segments into the LIVE index view — see the class
     * doc. */
   def view(base: SparseIndex.Index, segs: Seq[Seg])
       : SparseIndex.Index = {
-    if (segs.isEmpty) return base.copy(tf = baseTf(base))
+    if (segs.isEmpty) return base.copy(tf = baseTf(base.tf))
     // tombstones scoped per SegmentOps.scopedUnion: segs(i) is masked
     // by tombs of segs j > i, the base by all of them; the lists are
     // masked the same way by the segments' term sets
@@ -216,23 +235,34 @@ object SparseSegments {
       .foldLeft(base.stats)(_ unionByName _)
       .coalesce(1)
       .agg(sum("n_docs").as("n_docs"), sum("t_tokens").as("t_tokens"))
-    SparseIndex.Index(
-      SegmentOps.scopedUnion(base.plist, segs.map(_.plist),
-        segs.map(_.dfd), "tok").select(SparseIndex.PlistCols.map(col): _*),
-      dfLive,
-      SegmentOps.scopedUnion(base.dl, segs.map(_.dlAdd), tombs,
-        "doc_id"),
-      statsLive,
-      SegmentOps.scopedUnion(baseTf(base),
-        segs.map(_.tfAdd.select("doc_id", "tok", "tf")), tombs,
-        "doc_id"))
+    SparseIndex.Index(liveLists(base.plist, segs), dfLive,
+      liveDocs(base.dl, segs), statsLive,
+      liveTf(base.tf, segs.map(_.tfAdd), tombs))
   }
 
-  /** The base tf without the storage-layout bucket column. */
-  private def baseTf(base: SparseIndex.Index): DataFrame =
-    if (base.tf.columns.contains("tbk"))
-      base.tf.select("doc_id", "tok", "tf")
-    else base.tf
+  /** The live lists: the base's, each term replaced by the newest
+    * segment list that names it. */
+  private def liveLists(basePlist: DataFrame, segs: Seq[Seg])
+      : DataFrame =
+    SegmentOps.scopedUnion(basePlist, segs.map(_.plist),
+      segs.map(_.dfd), "tok").select(SparseIndex.PlistCols.map(col): _*)
+
+  /** The live doc lengths: scoped anti-joins + union. */
+  private def liveDocs(baseDl: DataFrame, segs: Seq[Seg]): DataFrame =
+    SegmentOps.scopedUnion(baseDl, segs.map(_.dlAdd),
+      segs.map(_.tombs), "doc_id")
+
+  /** The live tf from the base tf and the segments' added tf and
+    * tombstones, without the storage-layout bucket column. */
+  private def liveTf(base: DataFrame, adds: Seq[DataFrame],
+      tombs: Seq[DataFrame]): DataFrame =
+    SegmentOps.scopedUnion(baseTf(base), adds.map(baseTf), tombs,
+      "doc_id")
+
+  /** A tf relation in the stored column order, without the
+    * storage-layout bucket column. */
+  private def baseTf(tf: DataFrame): DataFrame =
+    tf.select(SparseIndex.TfCols.map(col): _*)
 
   // ------------------------------------------------------------------
   // Disk layout: root/base/{plist,df,dl,stats,meta,tf(tbk-partitioned)},
@@ -329,6 +359,15 @@ object SparseSegments {
       readSeg(s, root, dirName, kind)
     }
 
+  /** One segment's (tf, tombs) — all a delete and the CDC read. */
+  private def readSegTf(s: SparkSession, root: String, dirName: String,
+      kind: Char): (DataFrame, DataFrame) = {
+    def t(name: String) =
+      SegmentOps.readKnown(s, s"$root/segs/$dirName/$name")
+    (if (kind == 'd') SegmentOps.emptyLike(t("tf")) else t("tf"),
+      if (kind == 'a') SegmentOps.emptyLike(t("tombs")) else t("tombs"))
+  }
+
   private def readBase(s: SparkSession, baseAbs: String)
       : SparseIndex.Index =
     SparseIndex.Index(
@@ -336,8 +375,12 @@ object SparseSegments {
       SegmentOps.readKnown(s, s"$baseAbs/df"),
       SegmentOps.readKnown(s, s"$baseAbs/dl"),
       SegmentOps.readKnown(s, s"$baseAbs/stats"),
-      SegmentOps.readKnown(s, s"$baseAbs/tf",
-        Seq("tbk" -> org.apache.spark.sql.types.IntegerType)))
+      readBaseTf(s, baseAbs))
+
+  /** The base tf with its `tbk` bucket partition column. */
+  private def readBaseTf(s: SparkSession, baseAbs: String): DataFrame =
+    SegmentOps.readKnown(s, s"$baseAbs/tf",
+      Seq("tbk" -> org.apache.spark.sql.types.IntegerType))
 
   /** Load the live view of a segmented layout. The cap comes from the
     * layout's meta table; pass `Some(cap)` only to ASSERT it. The
@@ -367,45 +410,48 @@ object SparseSegments {
   /** Append a disjoint shard as a new segment — an O(delta) write
     * published atomically; base files are never touched
     * (SparseSegmentsSpec asserts it). The repaired lists ride in the
-    * same concurrent table write as the delta tables. */
+    * same concurrent table write as the delta tables. Reads the live
+    * lists and doc lengths only — never the tf. */
   def appendSeg(s: SparkSession, root: String, deltaTf: DataFrame,
       tag: Option[String] = None): Unit = {
     val snap = SegmentOps.resolveSnapshot(s, root)
     val cap = layoutCap(s, root, snap)
-    val live = view(readBase(s, s"$root/${snap.baseDir}"),
-      readSegs(s, root, snap))
+    val baseAbs = s"$root/${snap.baseDir}"
+    val segs = readSegs(s, root, snap)
+    val liveDl = liveDocs(SegmentOps.readKnown(s, s"$baseAbs/dl"), segs)
     val n = listSegs(s, root).lastOption.fold(0)(_ + 1)
     SegmentOps.publishSeg(s, root, n, 'a', tablesOf(mkAppendSeg(
-      live.plist, guardedDisjoint(live.dl, deltaTf), cap)), tag)
+      liveLists(SegmentOps.readKnown(s, s"$baseAbs/plist"), segs),
+      guardedDisjoint(liveDl, deltaTf), cap)), tag)
   }
 
   /** Retract documents as a new segment — an O(delta) write published
-    * atomically. The list repair reads the base tf of the deleted
-    * docs' terms only: their bucket census (≤ [[TokBuckets]] values,
-    * one small job) becomes a static partition filter on the scan. */
+    * atomically. Reads the live tf only. The list repair reads the
+    * base tf of the deleted docs' terms only: their bucket census
+    * (≤ [[TokBuckets]] values, one single-stage job over the term set
+    * the segment writes anyway) becomes a static partition filter on
+    * the scan. */
   def deleteSeg(s: SparkSession, root: String, docIds: DataFrame,
       tag: Option[String] = None): Unit = {
+    import s.implicits._
     val snap = SegmentOps.resolveSnapshot(s, root)
     val cap = layoutCap(s, root, snap)
-    val base = readBase(s, s"$root/${snap.baseDir}")
-    val segs = readSegs(s, root, snap)
-    val live = view(base, segs)
-    val adds = segs.map(_.tfAdd.select("doc_id", "tok", "tf"))
-    val tombs = segs.map(_.tombs)
+    val baseTfB = readBaseTf(s, s"$root/${snap.baseDir}")
+    val (adds, tombs) = snap.segs.map { case (_, d, k) =>
+      readSegTf(s, root, d, k) }.unzip
     val termTf = (touched: DataFrame) => {
+      // each partition's distinct buckets, so ≤ TokBuckets values per
+      // partition reach the driver and no shuffle stage runs
       val buckets = touched
-        .select(pmod(hash(col("tok")), lit(TokBuckets)).as("tbk"))
-        .distinct().collect().map(r => Int.box(r.getInt(0)))
-      SegmentOps.scopedUnion(
-        base.tf.filter(col("tbk").isin(buckets.toIndexedSeq: _*))
-          .join(touched, Seq("tok"), "left_semi")
-          .select("doc_id", "tok", "tf"),
-        adds.map(_.join(touched, Seq("tok"), "left_semi")), tombs,
-        "doc_id")
+        .select(pmod(hash(col("tok")), lit(TokBuckets))).as[Int]
+        .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+      liveTf(baseTfB.filter(col("tbk").isin(buckets.map(Int.box): _*))
+          .join(touched, Seq("tok"), "left_semi"),
+        adds.map(_.join(touched, Seq("tok"), "left_semi")), tombs)
     }
     val n = listSegs(s, root).lastOption.fold(0)(_ + 1)
-    SegmentOps.publishSeg(s, root, n, 'd',
-      tablesOf(mkDeleteSeg(live.tf, live.dl, docIds, cap, termTf)), tag)
+    SegmentOps.publishSeg(s, root, n, 'd', tablesOf(mkDeleteSeg(
+      liveTf(baseTfB, adds, tombs), docIds, cap, termTf)), tag)
   }
 
   /** Snapshot CDC — the sparse family's twin of
@@ -419,8 +465,8 @@ object SparseSegments {
       toV: Int): DataFrame =
     SegmentOps.changesBetweenWith(s, root, fromV, toV, "doc_id")(
       { case (_, d, k) =>
-        val seg = readSeg(s, root, d, k)
-        (seg.tfAdd.select("doc_id", "tok", "tf"), seg.tombs) },
+        val (tf, tombs) = readSegTf(s, root, d, k)
+        (tf.select("doc_id", "tok", "tf"), tombs) },
       snap => readSnap(s, root, snap, None).tf
         .select("doc_id", "tok", "tf"))
 
@@ -462,8 +508,8 @@ object SparseSegments {
       SegmentOps.scopedUnion(SegmentOps.emptyLike(f(segs.head)),
         segs.map(f), masks, key)
     val merged = Seg(
-      tfAdd = fold(_.tfAdd.select("doc_id", "tok", "tf"), tombsSeq,
-        "doc_id"),
+      tfAdd = fold(_.tfAdd.select(SparseIndex.TfCols.map(col): _*),
+        tombsSeq, "doc_id"),
       dfd = segs.map(_.dfd).reduce(_ unionByName _)
         .groupBy("tok").agg(sum("dfd").as("dfd")),
       dlAdd = fold(_.dlAdd, tombsSeq, "doc_id"),

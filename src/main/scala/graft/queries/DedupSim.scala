@@ -2102,15 +2102,11 @@ object DedupSim {
     // pq: the FOURTH family — the shard through the compressed index's
     // full lifecycle (build on the base, append the shard against the
     // FROZEN base-trained books, retract the revision set); the census
-    // reads only the codes table, so the coarse/cells subtrees the
-    // dense leg already covers stay lazy and never execute here
-    val pqBase0 = PqIndex.build(e.filter(col("vec_id") % 3 =!= 0))
-    // cut the base codes: append's disjointness check is a separate
-    // action over the SAME codes subtree the final census reads — the
-    // base encode chain (train + 4 subspace encodes + 3 joins) would
-    // otherwise execute twice (the x58/plist lesson, r14 profiling:
-    // the check alone was 9 jobs / up to 18 s summed task time)
-    val pqBase = pqBase0.copy(codes = pqBase0.codes.cut(false))
+    // reads only the codes table. build cuts its code rows, so
+    // append's disjointness check and the census read them once (the
+    // x58/plist lesson, r14 profiling: an uncut check was 9 jobs / up
+    // to 18 s summed task time)
+    val pqBase = PqIndex.build(e.filter(col("vec_id") % 3 =!= 0))
     val pqApp = PqIndex.append(pqBase, e.filter(col("vec_id") % 3 === 0))
     val pqRet = PqIndex.delete(pqApp,
       e.select("vec_id").filter(col("vec_id") % 10 === 4))

@@ -224,8 +224,9 @@ class ShuffleBudgetSpec extends SparkSpec {
     // plan shows the delta split + final sort only
     "x102_incremental_cc" -> 2,
     // x97's audited serve tail behind the adaptive probe relation
-    // (+1: the probe census agg joined into the card)
-    "x103_adaptive_probes" -> 37,
+    // (+1: the probe census agg joined into the card). 37 -> 22 with
+    // x97: the built code rows are a cut leaf
+    "x103_adaptive_probes" -> 22,
     // 0 — the whole point: both scans are bucketed on the join key,
     // the aggregate reuses the layout, and the top-100 plans as
     // TakeOrderedAndProject. The one-time layout shuffle happens at
@@ -287,11 +288,11 @@ class ShuffleBudgetSpec extends SparkSpec {
     // PqIndex build(base)/append/delete with frozen base-trained books
     // (4 subspace Lloyd aggs + the code-census agg); steady 9.9 s at
     // sf0.1, the full four-family nightly. r14: PQ base codes cut once
-    // (43 -> 39). 39 -> 44: the code rows carry their coarse cell, so
-    // the census over `codes` now runs the coarse training and
-    // assignment the stored cell costs (it stayed lazy while `cells`
-    // was a table of its own), and the sparse lists carry `dl`
-    "w08_nightly_ingest" -> 44,
+    // (43 -> 39). 39 -> 35: the shard encode binds the frozen
+    // codebooks as literals, so the appended code rows (cell + 4
+    // codes) are one projection — the four encode aggregations and
+    // their joins are gone
+    "w08_nightly_ingest" -> 35,
     // x97's audited IVFPQ compose + one bounded candidate join per
     // refine config (3 configs share ONE ADC pass; each tail is
     // ≤ k'·EvalK rows keyed back to the vector relation) + the
@@ -340,17 +341,21 @@ class ShuffleBudgetSpec extends SparkSpec {
     // x88's build stages on the base split + the delta's tf/df/dl
     // union aggs + the touched-term re-truncation window + the census
     // — the append theorem gated against the full-rebuild oracle
-    "x92_sparse_index_append" -> 10,
+    // 11 -> 9: the delta's term set is cut once for its two
+    // consumers (the repaired lists' semi-join, the untouched lists'
+    // anti-join) and broadcast past the stored lists
+    "x92_sparse_index_append" -> 9,
     // full build stages (tf agg + df/dl/stats + truncation window) +
     // the delete's touched-term split and re-truncation window + the
     // census agg/sort; the deleted-doc tf and the 1-row stats ride
     // broadcasts
-    // 10 -> 12: the repaired lists join the surviving doc lengths, so
-    // each posting carries its `dl`
-    "x96_index_delete" -> 12,
+    // (the stored tf rows carry `dl`, so the re-truncated lists need
+    // no doc-length join)
+    "x96_index_delete" -> 10,
     // x96's build+delete stages + the rare-term query selection window
-    // + the serve's candidate join and one per-query top-k fold
-    "x98_delete_serve" -> 12, // 10 -> 12 with x96
+    // + the serve's candidate join and one per-query top-k fold.
+    // 10 -> 9: the serve reads `dl` and `df` off the posting rows
+    "x98_delete_serve" -> 9,
     // base build + the live lists: each segment's repaired lists are
     // cut leaves, so the view is the base lists, their term-set
     // anti-join and the union, then x80's serve scan and fold (11 -> 5
@@ -417,7 +422,10 @@ class ShuffleBudgetSpec extends SparkSpec {
     // an outer cut-on-cut was measured SLOWER, 9.7 s, and reverted).
     // 37 -> 33: serve is one scan (codebooks bound as literals, one
     // top-k fold) — no LUT joins, rank window or scan census join.
-    "x97_ivfpq_serve" -> 33,
+    // 33 -> 18: PqIndex.build cuts its code rows (cell + 4 codes), so
+    // the serve and the census scan them instead of re-planning the
+    // assignment and the four encode chains per consumer.
+    "x97_ivfpq_serve" -> 18,
     // 3 groupBy-on-dst iteration shuffles + the top-20 sort + one
     // visible join-side exchange; the pairs-distinct and deg aggs sit
     // behind lazy cuts

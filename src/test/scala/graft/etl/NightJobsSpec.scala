@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 class NightJobsSpec extends SparkSpec {
 
-  private val ceilings = Map("bm25" -> 54, "pq" -> 26, "minhash" -> 12)
+  private val ceilings = Map("bm25" -> 58, "pq" -> 13, "minhash" -> 12)
 
   /** Jobs started while `f` runs (the bus drained on both sides). */
   private def jobsOf(f: => Unit): Int = {
