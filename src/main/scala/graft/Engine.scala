@@ -32,7 +32,7 @@ package graft
   * | Streaming | `Engine.Sessionize`, `Engine.StreamDedup`, `Engine.CdcMerge`, `Engine.EventStream`, `Engine.TopKStream`, `Engine.StreamJoin`, `Engine.Enrich`, `Engine.Changepoint`, `Engine.NearDupStream`, `Engine.FunnelStream`, `Engine.SlidingKmv` | watermark-bounded state; batch ≡ stream parity-tested |
   * | Online serving | `Engine.PqServeStream` (ADC), `Engine.SparseServeStream` (BM25), `Engine.FusedServeStream` (hybrid RRF) | query streams served from loaded indexes by the batch serves' own scan (`PqIndex.candidates`, `SparseIndex.contribs`); ONE stateful fold each |
   * | Persisted indexes | `Engine.AnnIndex` (IVF), `Engine.PqIndex` (IVFPQ compressed layout), `Engine.NearDup.writeIndex/incrementalEdges/deleteFromIndex`, `Engine.SparseIndex` (BM25) | build once, serve/append/DELETE forever; round trips + exact append/delete spec-proven in all four families |
-  * | Segmented (LSM) layouts | `Engine.SparseSegments`, `Engine.PqSegments`, `Engine.MinHashSegments` (+ `Engine.SegmentOps`) | O(delta) nightly maintenance WRITES — base files immutable, scoped tombstones make revise correct, compact() folds segments (fire at `SegmentOps.DefaultMaxSegs`, the x105-priced default); each family's `mergeSegsAt` is the TIERED move — fold any contiguous segment range at O(delta) cost, the base never rewritten for churn (priced by x107) — and `tieredMaintain` runs `SegmentOps.tieredPlan`'s LEVELED schedule (nightly fresh-run folds that never re-absorb a standing merged segment + the geometric >= fanout similar-size rule; priced vs naive tiered by x108, geometric fire by x109); each family's `changesBetween` is snapshot CDC — state-diff rows (added/removed/updated) between two retained versions at the family's content grain (signatures / BM25 tf / frozen-book codes), O(delta) fast path when no fold crossed the window, content-diff fallback proven cell-identical (x110); the shared row diff is symmetric, so multi-row content (sparse tf) reports grown as well as shrunk docs; manifest CAS multi-writer safe, orphan claims stolen after `graft.manifest.claimTtlMs`; view ≡ rebuild/fold-in spec-proven, x99 serve-gated cross-engine |
+  * | Segmented (LSM) layouts | `Engine.SparseSegments`, `Engine.PqSegments`, `Engine.MinHashSegments` (+ `Engine.SegmentOps`); the lifecycle below is written once in `etl.SegmentFamily` | O(delta) nightly maintenance WRITES — base files immutable, scoped tombstones make revise correct, compact() folds segments (fire at `SegmentOps.DefaultMaxSegs`, the x105-priced default); `mergeSegsAt` is the TIERED move — fold any contiguous segment range at O(delta) cost, the base never rewritten for churn (priced by x107) — and `tieredMaintain` runs `SegmentOps.tieredPlan`'s LEVELED schedule (nightly fresh-run folds that never re-absorb a standing merged segment + the geometric >= fanout similar-size rule; priced vs naive tiered by x108, geometric fire by x109); `changesBetween` is snapshot CDC — state-diff rows (added/removed/updated) between two retained versions at the family's content grain (signatures / BM25 tf / frozen-book codes), O(delta) fast path when no fold crossed the window, content-diff fallback proven cell-identical (x110); the shared row diff is symmetric, so multi-row content (sparse tf) reports grown as well as shrunk docs; manifest CAS multi-writer safe, orphan claims stolen after `graft.manifest.claimTtlMs`; view ≡ rebuild/fold-in spec-proven, x99 serve-gated cross-engine |
   * | Online index ingest | `Engine.SegmentIngest.once` | batchId-keyed exactly-once foreachBatch sink over any segmented layout; tagged publications self-heal BOTH crash windows; markers bounded (64-batch retention); chaos-gated (21 seeded kill schedules) |
   * | Tokenizer training | `Engine.BpeTrain.train/applyMerge` | K-merge BPE under iterate-with-cut; constant plan depth in K |
   * | Graph ranking | `Engine.PageRank.runFixed/runConverged` | exact BIGINT ranks; iterate-with-cut keeps plan depth constant |

@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+
+import graft.etl.SegmentFamily.{Add, Tomb}
 
 /** LOG-STRUCTURED persistence for the MinHash family's signature
   * index ([[NearDup.writeIndex]]) — the third leg of the O(delta)
@@ -13,292 +14,53 @@ import org.apache.spark.sql.functions.{col, lit}
   * is the one x02/x82's oracles gate; MinHashSegmentsSpec pins
   * view ≡ re-signing the surviving corpus, delete-then-revise
   * scoping, O(delta) disk writes, and compact ≡ segmented.
+  *
+  * Disk layout: root/base/{minhash_index,meta},
+  * root/segs/seg=<n>/{sigs,tombs}. The base's `meta` records the
+  * signature length `k` every later delta is signed at, so two
+  * incomparable signature spaces can never mix in one index. The CDC
+  * grain is the signature row: signatures are content fingerprints, so
+  * sig-row inequality is the change test.
   */
-object MinHashSegments {
+object MinHashSegments extends SegmentFamily[DataFrame] {
 
-  /** One maintenance operation's delta bundle. */
-  final case class Seg(sigsAdd: DataFrame, tombs: DataFrame)
+  /** The on-disk layout format this build reads and writes: 1 = one
+    * signature row per document. (Layouts before the format field are
+    * format 1.) */
+  val Format = 1
 
-  /** Build an APPEND segment: the delta docs' signatures.
-    * Precondition (asserted): delta doc_ids are disjoint from the
-    * LIVE index — a previously deleted id may be re-appended (the
-    * revise path; tombstone scoping makes it correct). */
-  def appendSegOf(liveSigs: DataFrame, deltaDocs: DataFrame,
-      k: Int = NearDup.DefaultConfig.k): Seg = {
-    // the IN-MEMORY form keeps the eager check: an in-plan guard here
-    // would embed the live VIEW in the segment's own plan, and a
-    // stacked in-memory append chain would nest quadratically (the
-    // linear-plan-growth spec is the gate). The DISK path
-    // ([[appendSeg]]) guards in-plan instead — its segment plan is
-    // executed once by the write and read back as plain rows.
-    val deltaSigs = NearDup.signatures(deltaDocs, k)
-    val clash = liveSigs.select("doc_id")
-      .join(deltaSigs.select("doc_id"), "doc_id").limit(1).count()
-    require(clash == 0L,
-      "MinHashSegments.appendSegOf: delta doc_ids overlap the live " +
-        "index — append segments are for disjoint shards (revise = " +
-        "deleteSeg + appendSeg)")
-    Seg(deltaSigs,
-      SegmentOps.emptyLike(deltaSigs.select("doc_id")))
-  }
+  protected val segTables = Seq("sigs" -> Add, "tombs" -> Tomb)
+  protected val idCol = "doc_id"
+  protected val buildParam = Some("k" -> NearDup.DefaultConfig.k)
+  protected val cdcTable = "sigs"
 
-  /** Build a DELETE segment: tombstones only (the vacuous signature
-    * additions are statically-empty LocalRelations so the view's
-    * unions elide them). Deleting an absent id is a no-op. */
-  def deleteSegOf(liveSigs: DataFrame, docIds: DataFrame): Seg =
-    Seg(SegmentOps.emptyLike(liveSigs),
-      docIds.select("doc_id").distinct())
+  protected def baseTables(sigs: DataFrame): Seq[(String, DataFrame)] =
+    Seq("minhash_index" -> sigs)
 
-  /** Compose base + segments into the LIVE signature index. */
+  protected def readBase(s: SparkSession, baseAbs: String): DataFrame =
+    SegmentOps.readKnown(s, s"$baseAbs/minhash_index")
+
   def view(baseSigs: DataFrame, segs: Seq[Seg]): DataFrame =
-    SegmentOps.scopedUnion(baseSigs, segs.map(_.sigsAdd),
-      segs.map(_.tombs), "doc_id")
+    SegmentOps.scopedUnion(baseSigs, segs.map(_("sigs")),
+      segs.map(_("tombs")), "doc_id")
 
-  // ------------------------------------------------------------------
-  // Disk layout: root/base/minhash_index,
-  // root/segs/seg=<n>/{sigs,tombs}
-  // ------------------------------------------------------------------
+  protected def liveIds(liveSigs: DataFrame): DataFrame =
+    liveSigs.select("doc_id")
 
-  /** Write a signature relation as the base generation. `k` MUST be
-    * the signature length `sigs` was signed with: it is persisted in
-    * the layout's 1-row `meta` table, and appendSeg signs every later
-    * delta at the STORED k — two incomparable signature spaces can no
-    * longer mix in one index. */
-  def init(sigs: DataFrame, root: String,
-      k: Int = NearDup.DefaultConfig.k): Unit = {
-    writeBase(sigs, s"$root/base", k)
-    SegmentOps.publishManifest(sigs.sparkSession, root, "base",
-      Seq.empty)
-  }
+  /** The delta documents signed at `k`. */
+  override protected def deltaRows(deltaDocs: DataFrame, k: Int)
+      : DataFrame = NearDup.signatures(deltaDocs, k)
 
-  private def writeBase(sigs: DataFrame, dirAbs: String, k: Int)
-      : Unit = {
-    require(k > 0,
-      s"MinHashSegments: signature length k must be positive, got $k")
-    // meta as a LocalRelation (not range(1).select — a Range plan
-    // would pay a Spark write job; a LocalRelation takes the
-    // driver-side write path in writeOrdered)
-    graft.sources.Sources.writeOrdered(
-      Seq("minhash_index" -> sigs,
-        "meta" -> sigs.sparkSession.createDataFrame(
-          java.util.Collections.singletonList(
-            org.apache.spark.sql.Row(k)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.IntegerType,
-              nullable = false))))),
-      dirAbs)
-  }
+  protected def appendSegFrom(liveSigs: DataFrame, deltaSigs: DataFrame,
+      k: Int): Seg =
+    Map("sigs" -> deltaSigs,
+      "tombs" -> SegmentOps.emptyLike(deltaSigs.select("doc_id")))
 
-  /** The layout's persisted signature length; an asserted `k` must
-    * agree. An `Option` rather than a magic 0 (ADVICE r10): an
-    * explicit-but-wrong value can never bypass the mismatch check. */
-  private def storedKAt(s: SparkSession, baseAbs: String,
-      k: Option[Int]): Int = {
-    val stored = SegmentOps.readMetaInt(s, s"$baseAbs/meta", "k")
-    k.foreach(c => require(c == stored,
-      s"MinHashSegments: layout $baseAbs was signed at k=$stored but " +
-        s"k=$c was passed — the signature lengths must agree"))
-    stored
-  }
+  /** Tombstones only (the vacuous signature additions are
+    * statically-empty LocalRelations so the view's unions elide them). */
+  def deleteSegOf(liveSigs: DataFrame, docIds: DataFrame, k: Int): Seg =
+    Map("sigs" -> SegmentOps.emptyLike(liveSigs),
+      "tombs" -> docIds.select("doc_id").distinct())
 
-  private def storedK(s: SparkSession, root: String,
-      k: Option[Int]): Int =
-    storedKAt(s,
-      s"$root/${SegmentOps.resolveSnapshot(s, root).baseDir}", k)
-
-  private def writeSeg(s: SparkSession, seg: Seg, root: String,
-      n: Int, kind: Char, tag: Option[String]): Unit =
-    SegmentOps.publishSeg(s, root, n, kind,
-      Seq("sigs" -> seg.sigsAdd, "tombs" -> seg.tombs), tag)
-
-  /** Read one on-disk segment; the kind tag rebuilds the vacuous
-    * table as a statically-empty LocalRelation (join elision — see
-    * SegmentOps.emptyLike). */
-  private def readSeg(s: SparkSession, root: String, dirName: String,
-      kind: Char): Seg = {
-    def t(name: String) =
-      SegmentOps.readKnown(s, s"$root/segs/$dirName/$name")
-    def emptyT(name: String) = SegmentOps.emptyLike(t(name))
-    Seg(
-      sigsAdd = if (kind == 'd') emptyT("sigs") else t("sigs"),
-      tombs = if (kind == 'a') emptyT("tombs") else t("tombs"))
-  }
-
-  /** Load the live signature index of a segmented layout. The
-    * snapshot (manifest) is resolved ONCE here — the returned lazy
-    * view keeps serving that snapshot's bytes across a later
-    * compaction flip. */
-  def read(s: SparkSession, root: String): DataFrame =
-    readSnap(s, root, SegmentOps.resolveSnapshot(s, root))
-
-  /** Snapshot time travel: the live index AS OF manifest `version`. */
-  def readAt(s: SparkSession, root: String, version: Int): DataFrame =
-    readSnap(s, root, SegmentOps.resolveSnapshotAt(s, root, version))
-
-  private def readSnap(s: SparkSession, root: String,
-      snap: SegmentOps.Snapshot): DataFrame = {
-    val base =
-      SegmentOps.readKnown(s, s"$root/${snap.baseDir}/minhash_index")
-    val segs = snap.segs.map { case (_, d, k) => readSeg(s, root, d, k) }
-    if (segs.isEmpty) base else view(base, segs)
-  }
-
-  /** STATE-DIFF CDC between two retained snapshots: one row per
-    * changed doc_id with `op` ∈ added / removed / updated — the
-    * incremental-consumption primitive (re-embed, re-shard or
-    * re-audit ONLY what changed since the last run, instead of
-    * diffing two 100 TB corpus states). Semantics are state diff,
-    * not operation log: a delete-then-reappend of IDENTICAL content
-    * reports nothing, a revise reports `updated` (signatures are
-    * content fingerprints, so sig-row inequality is the change test).
-    *
-    * Cost: when no compaction or merge crossed the window (`toV`'s
-    * segment list extends `fromV`'s over the same base), the FAST
-    * path reads only the window's segments plus ONE semi-join of the
-    * old snapshot against the window's tombstones (broadcast-sized at
-    * the nightly grain; output is delta-sized) — O(delta), never a
-    * two-state diff. When a fold DID cross the window the fast
-    * decomposition no longer exists and the fallback computes the
-    * honest O(live) content diff — same answer, priced differently
-    * (x110's card proves the two paths cell-identical). Both
-    * snapshots must still be retained (vacuum keepLast covers the
-    * consumer's lag window). */
-  def changesBetween(s: SparkSession, root: String, fromV: Int,
-      toV: Int): DataFrame =
-    SegmentOps.changesBetweenWith(s, root, fromV, toV, "doc_id")(
-      { case (_, d, k) =>
-        val seg = readSeg(s, root, d, k); (seg.sigsAdd, seg.tombs) },
-      snap => readSnap(s, root, snap))
-
-  /** Append a disjoint shard as a new segment — an O(delta) write
-    * published atomically; the delta is signed at the layout's STORED
-    * k (pass `Some(k)` only to assert it); base files are never
-    * touched (MinHashSegmentsSpec asserts it). */
-  def appendSeg(s: SparkSession, root: String, deltaDocs: DataFrame,
-      k: Option[Int] = None, tag: Option[String] = None): Unit = {
-    val n = SegmentOps.listSegs(s, root).lastOption.fold(0)(_ + 1)
-    // disjointness rides IN the segment write's plan — zero extra
-    // jobs (pre-r14: an eager count action per append). Safe on the
-    // disk path only: the guarded plan is executed once by the write
-    // and the segment is read back as plain rows, so the live view
-    // never nests into later plans (see appendSegOf's note).
-    val deltaSigs = SegmentOps.guardDisjoint(
-      NearDup.signatures(deltaDocs, storedK(s, root, k)),
-      read(s, root).select("doc_id"), "doc_id",
-      "MinHashSegments.appendSeg: delta doc_ids overlap the live " +
-        "index — append segments are for disjoint shards (revise = " +
-        "deleteSeg + appendSeg)")
-    writeSeg(s,
-      Seg(deltaSigs, SegmentOps.emptyLike(deltaSigs.select("doc_id"))),
-      root, n, 'a', tag)
-  }
-
-  /** Retract documents as a new segment — an O(delta) write published
-    * atomically. */
-  def deleteSeg(s: SparkSession, root: String, docIds: DataFrame,
-      tag: Option[String] = None): Unit = {
-    val n = SegmentOps.listSegs(s, root).lastOption.fold(0)(_ + 1)
-    writeSeg(s, deleteSegOf(read(s, root), docIds), root, n, 'd', tag)
-  }
-
-  /** TIERED compaction: fold the `k` OLDEST segments of the current
-    * snapshot into ONE merged segment — cost O(sum of the folded
-    * segments' rows), never O(live). This is the LSM move that makes
-    * full base folds RARE at scale: a 100 TB base is never rewritten
-    * for nightly churn; only the young deltas merge. Soundness of the
-    * range-merge algebra (TieredMergeSpec pins each clause):
-    *
-    *  - merged adds = the range's own scoped union over an EMPTY base
-    *    (segment i's tombs mask range adds j < i — delete-then-revise
-    *    WITHIN the range collapses to the revision);
-    *  - merged tombs = the union of the range's tombs (each masked
-    *    base + earlier-range adds; the latter is baked into the adds,
-    *    so at the merged segment's position — FIRST, before every
-    *    survivor — they mask exactly the base, as before);
-    *  - survivors keep their numbers and positions: their tombs still
-    *    mask base + merged adds, their adds still win over merged
-    *    tombs (scoping is positional and the merged segment reuses
-    *    the range's HIGHEST number, so number-sorted reads place it
-    *    exactly at the range's slot).
-    *
-    * Publication is crash-safe in two atomic steps: the merged bundle
-    * lands under `seg=<n>-m-g<v>` WITHOUT a manifest record
-    * ([[SegmentOps.publishSegDir]]), then one CAS flip swaps the
-    * folded prefix for it ([[SegmentOps.flipMerged]] — concurrent
-    * appends carry, concurrent folds fail loud). A crash between the
-    * two leaves an unreferenced dir that [[SegmentOps.vacuum]]
-    * collects; the folded originals stay on disk (old snapshots keep
-    * replaying) until vacuum releases them with their versions. */
-  def mergeSegs(s: SparkSession, root: String, k: Int = 2): Unit =
-    mergeSegsAt(s, root, 0, k)
-
-  /** TIERED compaction of an ARBITRARY contiguous range: fold the `k`
-    * segments starting at snapshot position `from` into one merged
-    * segment. The range-merge algebra is positional ([[mergeSegs]]'s
-    * doc; [[SegmentOps.flipMergedAt]] for why any contiguous range is
-    * sound): survivors on BOTH sides keep their positions, so a later
-    * survivor's tombs still mask merged adds and merged tombs still
-    * mask everything before the range. The mid-range form is what
-    * lets [[SegmentOps.tieredPlan]]'s schedule skip a standing merged
-    * segment and fold only the young churn behind it. */
-  def mergeSegsAt(s: SparkSession, root: String, from: Int, k: Int)
-      : Unit = {
-    val snap = SegmentOps.resolveSnapshot(s, root)
-    require(snap.version > 0,
-      "MinHashSegments.mergeSegsAt: tiered merge requires a manifest " +
-        "(directory-enumeration layouts cannot hold two dirs per " +
-        "segment number)")
-    require(from >= 0 && k >= 2 && from + k <= snap.segs.size,
-      s"MinHashSegments.mergeSegsAt: range [$from, ${from + k}) " +
-        s"outside the snapshot's ${snap.segs.size} segments (k >= 2)")
-    val range = snap.segs.slice(from, from + k)
-    val segs = range.map { case (_, d, kd) => readSeg(s, root, d, kd) }
-    val addsM = SegmentOps.scopedUnion(
-      SegmentOps.emptyLike(segs.head.sigsAdd),
-      segs.map(_.sigsAdd), segs.map(_.tombs), "doc_id")
-    val tombsM = segs.map(_.tombs)
-      .reduce(_ unionByName _).distinct()
-    // keep the vacuous-table elision for uniform ranges: an all-append
-    // range's merged tombs are provably empty, so publish it as kind
-    // 'a' and readers rebuild them as a statically-empty
-    // LocalRelation (join elision) instead of scanning a 0-row file
-    val kinds = range.map(_._3).toSet
-    val kind = if (kinds == Set('a')) 'a'
-      else if (kinds == Set('d')) 'd' else 'm'
-    val name = s"seg=${range.last._1}-$kind-g${snap.version + 1}"
-    SegmentOps.publishSegDir(s, root, name,
-      Seq("sigs" -> addsM, "tombs" -> tombsM))
-    SegmentOps.flipMergedAt(s, root, snap, from, k, name)
-    ()
-  }
-
-  /** [[SegmentOps.tieredMaintainWith]] instantiated for this family:
-    * the leveled schedule to quiescence, base never touched; pair
-    * with [[SegmentOps.shouldCompact]] + [[compactInPlace]] for the
-    * rare full fold. Returns the number of merges performed. */
-  def tieredMaintain(s: SparkSession, root: String, minRun: Int = 2,
-      fanout: Int = 4, ratio: Double = 1.5): Int =
-    SegmentOps.tieredMaintainWith(s, root, minRun, fanout, ratio)(
-      d => SegmentOps.footerRows(s,
-        Seq(s"$root/segs/$d/sigs", s"$root/segs/$d/tombs")),
-      mergeSegsAt(s, root, _, _))
-
-  /** Fold the segments into a fresh base at `outRoot`; the signature
-    * length carries over from the layout's meta table. */
-  def compact(s: SparkSession, root: String, outRoot: String): Unit =
-    init(read(s, root), outRoot, storedK(s, root, None))
-
-  /** In-place compaction: fold into a fresh base generation under the
-    * SAME root and flip the manifest pointer. Readers that resolved a
-    * snapshot before the flip keep serving the old generation until
-    * [[SegmentOps.vacuum]]. */
-  def compactInPlace(s: SparkSession, root: String): Unit = {
-    val snap = SegmentOps.resolveSnapshot(s, root)
-    val k = storedKAt(s, s"$root/${snap.baseDir}", None)
-    val nb = SegmentOps.nextBaseDir(snap)
-    writeBase(readSnap(s, root, snap), s"$root/$nb", k)
-    SegmentOps.flipCompacted(s, root, snap, nb)
-    ()
-  }
+  protected def cdcState(liveSigs: DataFrame): DataFrame = liveSigs
 }

@@ -517,6 +517,34 @@ object SegmentOps {
 
   private val CasAttempts = 100
 
+  /** The manifest CAS loop: re-resolve the current snapshot and try to
+    * publish `next(current)` (base dir, segment names) on it, until one
+    * publish lands; returns its version. A lost race backs off briefly
+    * before re-resolving — the winner may hold the claim but not have
+    * renamed yet, and its version is invisible until the rename.
+    * `doing` names the operation in the give-up message. */
+  private def casPublish(s: org.apache.spark.sql.SparkSession,
+      root: String, doing: String)(
+      next: Snapshot => (String, Seq[String])): Int = {
+    var attempt = 0
+    var lastV = -1
+    while (attempt < CasAttempts) {
+      attempt += 1
+      val cur = resolveSnapshot(s, root)
+      lastV = cur.version + 1
+      val (baseDir, segNames) = next(cur)
+      tryPublishManifest(s, root, cur.version, baseDir, segNames) match {
+        case Some(v) => return v
+        case None => Thread.sleep(10)
+      }
+    }
+    throw new IllegalStateException(
+      s"SegmentOps: gave up $doing under $root after $CasAttempts " +
+        "manifest CAS attempts — livelocked writers, or a crashed " +
+        s"claimant's $root/manifest/claim_$lastV awaiting its steal TTL " +
+        "(graft.manifest.claimTtlMs)")
+  }
+
   /** Record a just-published segment in the manifest (no-op unless the
     * layout already carries one — pre-manifest layouts keep their
     * directory-enumeration semantics untouched). CAS retry loop:
@@ -534,24 +562,8 @@ object SegmentOps {
       root: String, segName: String): Unit = {
     val (dir, fs) = manifestFs(s, root)
     if (manifestVersions(fs, dir).isEmpty) return
-    var attempt = 0
-    var lastV = -1
-    while (attempt < CasAttempts) {
-      attempt += 1
-      val snap = resolveSnapshot(s, root)
-      lastV = snap.version + 1
-      if (tryPublishManifest(s, root, snap.version, snap.baseDir,
-          snap.segs.map(_._2) :+ segName).isDefined) return
-      // the winner may hold the claim but not have renamed yet — its
-      // version is invisible until the rename, so back off briefly
-      // before re-resolving
-      Thread.sleep(10)
-    }
-    throw new IllegalStateException(
-      s"SegmentOps: gave up recording $segName under $root after " +
-        s"$CasAttempts manifest CAS attempts — livelocked writers, " +
-        s"or a crashed claimant's $dir/claim_$lastV awaiting its " +
-        "steal TTL (graft.manifest.claimTtlMs)")
+    casPublish(s, root, s"recording $segName")(cur =>
+      (cur.baseDir, cur.segs.map(_._2) :+ segName))
   }
 
   /** Flip the manifest to a freshly-compacted base generation: CAS on
@@ -566,28 +578,14 @@ object SegmentOps {
   def flipCompacted(s: org.apache.spark.sql.SparkSession,
       root: String, fromSnap: Snapshot, newBaseDir: String): Int = {
     val folded = fromSnap.segs.map(_._2).toSet
-    var attempt = 0
-    var lastV = -1
-    while (attempt < CasAttempts) {
-      attempt += 1
-      val cur = resolveSnapshot(s, root)
-      lastV = cur.version + 1
+    casPublish(s, root, s"flipping to $newBaseDir") { cur =>
       require(cur.baseDir == fromSnap.baseDir,
         s"SegmentOps: concurrent compaction detected under $root — " +
           s"the base flipped from ${fromSnap.baseDir} to " +
           s"${cur.baseDir} while this fold ran; only one compactor " +
           "may run per layout")
-      val carry = cur.segs.map(_._2).filterNot(folded)
-      tryPublishManifest(s, root, cur.version, newBaseDir, carry) match {
-        case Some(v) => return v
-        case None => Thread.sleep(10) // see recordSegInManifest
-      }
+      (newBaseDir, cur.segs.map(_._2).filterNot(folded))
     }
-    throw new IllegalStateException(
-      s"SegmentOps: gave up flipping $root to $newBaseDir after " +
-        s"$CasAttempts manifest CAS attempts — livelocked writers, " +
-        s"or a crashed claimant's $root/manifest/claim_$lastV " +
-        "awaiting its steal TTL (graft.manifest.claimTtlMs)")
   }
 
   /** Next unused base-generation dir name (`base` for v1, `base-g<v>`
@@ -709,43 +707,21 @@ object SegmentOps {
       tables: Seq[(String, org.apache.spark.sql.DataFrame)],
       tag: Option[String] = None): Unit = {
     val name = s"seg=$n-$kind"
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/segs/_tmp_$name")
     val fin = new org.apache.hadoop.fs.Path(s"$root/segs/$name")
     val fs = fin.getFileSystem(s.sparkContext.hadoopConfiguration)
     require(!fs.exists(fin), s"segment $n already published")
     require(listSegEntries(s, root).forall(_._1 != n),
       s"segment number $n already published under another kind")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // a dead writer's debris
-    graft.sources.Sources.writeOrdered(tables, tmp.toString)
     // the tag file rides INSIDE the bundle, so it publishes atomically
     // with the rename — present iff the segment is (the self-healing
-    // retry detector, [[taggedSeg]])
-    tag.foreach { t =>
-      fs.create(new org.apache.hadoop.fs.Path(tmp, tagFile(t)), true)
-        .close()
-    }
-    require(fs.rename(tmp, fin),
-      s"failed to publish segment $n (rename $tmp -> $fin)")
-    // lost-race detector (see the class doc): a rename into an
-    // ALREADY-PUBLISHED destination nests the source under its own
-    // basename — the loser's bundle lands at fin/_tmp_<name>, so the
-    // published dir's direct children must be EXACTLY the expected
-    // entries (table dirs + the optional tag file; dot-files are the
-    // FS's checksum siblings)
-    val children = fs.listStatus(fin).toSeq.map(_.getPath.getName)
-      .filterNot(_.startsWith(".")).toSet
-    val expected = tables.map(_._1).toSet ++ tag.map(tagFile)
-    require(children == expected,
-      s"segment $n publication raced another writer — $fin holds " +
-        s"${children.mkString("{", ", ", "}")} instead of " +
-        s"${expected.mkString("{", ", ", "}")} (concurrent " +
-        "publishers violate the single-writer contract)")
+    // retry detector, [[taggedSegs]])
+    renameBundle(s, root, name, tables, tag.map(tagFile).toSeq)
     recordSegInManifest(s, root, name)
   }
 
   /** Publish a segment bundle under an EXPLICIT dir name WITHOUT
     * recording it in the manifest — the first half of a tiered merge
-    * ([[flipMerged]] is the atomic second half; until that CAS lands
+    * ([[flipMergedAt]] is the atomic second half; until that CAS lands
     * the dir is invisible to every manifest reader, and a crash in
     * between leaves pure debris that [[vacuum]] collects because no
     * retained version ever names it). Same tmp+rename atomicity and
@@ -768,7 +744,6 @@ object SegmentOps {
       name: String,
       tables: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
     parseSegName(name, root) // fail loud on a malformed name
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/segs/_tmp_$name")
     val fin = new org.apache.hadoop.fs.Path(s"$root/segs/$name")
     val fs = fin.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(fin)) {
@@ -777,23 +752,35 @@ object SegmentOps {
           "retained manifest version")
       fs.delete(fin, true) // a crashed predecessor's orphan bundle
     }
+    renameBundle(s, root, name, tables, Nil)
+  }
+
+  /** Write `tables` and the empty files `markers` under
+    * `segs/_tmp_<name>`, publish them with one rename, and check that
+    * the published dir holds exactly those entries — [[publishSeg]]'s
+    * lost-race detector (dot-files are the FS's checksum siblings). */
+  private def renameBundle(s: org.apache.spark.sql.SparkSession,
+      root: String, name: String,
+      tables: Seq[(String, org.apache.spark.sql.DataFrame)],
+      markers: Seq[String]): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(s"$root/segs/_tmp_$name")
+    val fin = new org.apache.hadoop.fs.Path(s"$root/segs/$name")
+    val fs = fin.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(tmp)) fs.delete(tmp, true) // a dead writer's debris
     graft.sources.Sources.writeOrdered(tables, tmp.toString)
+    markers.foreach(m =>
+      fs.create(new org.apache.hadoop.fs.Path(tmp, m), true).close())
     require(fs.rename(tmp, fin),
       s"failed to publish segment $name (rename $tmp -> $fin)")
     val children = fs.listStatus(fin).toSeq.map(_.getPath.getName)
       .filterNot(_.startsWith(".")).toSet
-    require(children == tables.map(_._1).toSet,
+    val expected = tables.map(_._1).toSet ++ markers
+    require(children == expected,
       s"segment $name publication raced another writer — $fin holds " +
         s"${children.mkString("{", ", ", "}")} instead of " +
-        s"${tables.map(_._1).toSet.mkString("{", ", ", "}")}")
+        s"${expected.mkString("{", ", ", "}")} (concurrent " +
+        "publishers violate the single-writer contract)")
   }
-
-  /** Flip the manifest after a TIERED MERGE of the `rangeLen` oldest
-    * segments — the prefix special case of [[flipMergedAt]]. */
-  def flipMerged(s: org.apache.spark.sql.SparkSession, root: String,
-      fromSnap: Snapshot, rangeLen: Int, mergedName: String): Int =
-    flipMergedAt(s, root, fromSnap, 0, rangeLen, mergedName)
 
   /** Flip the manifest after a TIERED MERGE: replace the `rangeLen`
     * segments of `fromSnap` starting at position `from` (the exact
@@ -818,12 +805,7 @@ object SegmentOps {
       s"flipMergedAt: range [$from, ${from + rangeLen}) outside the " +
         s"snapshot's ${fromSnap.segs.size} segments (rangeLen >= 2)")
     val range = fromSnap.segs.slice(from, from + rangeLen).map(_._2)
-    var attempt = 0
-    var lastV = -1
-    while (attempt < CasAttempts) {
-      attempt += 1
-      val cur = resolveSnapshot(s, root)
-      lastV = cur.version + 1
+    casPublish(s, root, s"flipping merge $mergedName") { cur =>
       require(cur.baseDir == fromSnap.baseDir,
         s"SegmentOps: concurrent compaction detected under $root — " +
           s"the base flipped from ${fromSnap.baseDir} to " +
@@ -833,95 +815,15 @@ object SegmentOps {
           s"folded range ${range.mkString(", ")} no longer sits at " +
           s"positions [$from, ${from + rangeLen}); only one merger " +
           "may run per layout")
-      val segs = (cur.segs.take(from).map(_._2) :+ mergedName) ++
-        cur.segs.drop(from + rangeLen).map(_._2)
-      tryPublishManifest(s, root, cur.version, cur.baseDir, segs) match {
-        case Some(v) => return v
-        case None => Thread.sleep(10) // see recordSegInManifest
-      }
+      (cur.baseDir, (cur.segs.take(from).map(_._2) :+ mergedName) ++
+        cur.segs.drop(from + rangeLen).map(_._2))
     }
-    throw new IllegalStateException(
-      s"SegmentOps: gave up flipping merge $mergedName under $root " +
-        s"after $CasAttempts manifest CAS attempts — livelocked " +
-        s"writers, or a crashed claimant's $root/manifest/claim_$lastV " +
-        "awaiting its steal TTL (graft.manifest.claimTtlMs)")
   }
 
   /** True iff a segment dir name is a MERGED segment (published by a
     * tiered merge — the `-g<v>` third component). */
   def isMergedName(dirName: String): Boolean =
     dirName.stripPrefix("seg=").split("-").length == 3
-
-  /** Generic snapshot CDC — the shared engine behind each family's
-    * `changesBetween` ([[MinHashSegments.changesBetween]] for the
-    * semantics and cost contract). One row per changed `idCol` with
-    * `op` ∈ added / removed / updated, STATE-DIFF semantics at the
-    * family's content grain: `segTables` maps one window segment to
-    * its (content adds, tombstones) pair, `stateRows` composes a
-    * snapshot's full live content relation. The row diff is
-    * SYMMETRIC (A∖B ∪ B∖A per id): a family whose content is
-    * multi-row per id (sparse tf) can change by rows GROWING as well
-    * as shrinking, and a one-direction except would miss pure
-    * growth. Fast path iff `toV`'s segment list extends `fromV`'s
-    * over the same base — window segments + one semi-join of the old
-    * state against the window's tombstones; O(live) two-state
-    * content diff otherwise. */
-  def changesBetweenWith(s: org.apache.spark.sql.SparkSession,
-      root: String, fromV: Int, toV: Int, idCol: String)(
-      segTables: ((Int, String, Char)) =>
-        (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
-      stateRows: Snapshot => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(fromV <= toV,
-      s"SegmentOps.changesBetweenWith: fromV $fromV > toV $toV")
-    val a = resolveSnapshotAt(s, root, fromV)
-    val b = resolveSnapshotAt(s, root, toV)
-    def tagged(df: org.apache.spark.sql.DataFrame, op: String) =
-      df.select(col(idCol), lit(op).as("op"))
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select(idCol).distinct()
-    val fast = a.baseDir == b.baseDir &&
-      b.segs.take(a.segs.size) == a.segs
-    val (added, removed, updated) =
-      if (fast) {
-        val news = b.segs.drop(a.segs.size).map(segTables)
-        if (news.isEmpty)
-          return s.range(0).select(col("id").as(idCol),
-            lit("").as("op"))
-        // content that survives WITHIN the window (scoped: a later
-        // tomb masks an earlier window add; re-adds win)
-        val adds = scopedUnion(emptyLike(news.head._1),
-          news.map(_._1), news.map(_._2), idCol)
-        val tombs = news.map(_._2).reduce(_ unionByName _).distinct()
-        // the ONE pass over the old state: which tombed ids were
-        // actually live at fromV (delta-sized output)
-        val tombedLiveA = stateRows(a)
-          .join(tombs, Seq(idCol), "left_semi")
-        val tombedIds = ids(tombedLiveA)
-        val addsIds = ids(adds)
-        val updCand = adds.join(tombedIds, Seq(idCol), "left_semi")
-        val oldRe = tombedLiveA.join(addsIds, Seq(idCol), "left_semi")
-        (addsIds.join(tombedIds, Seq(idCol), "left_anti"),
-          tombedIds.join(addsIds, Seq(idCol), "left_anti"),
-          ids(updCand.except(oldRe).select(idCol)
-            .unionByName(oldRe.except(updCand).select(idCol))))
-      } else {
-        val va = stateRows(a)
-        val vb = stateRows(b)
-        val vaIds = ids(va)
-        val vbIds = ids(vb)
-        (vbIds.join(vaIds, Seq(idCol), "left_anti"),
-          vaIds.join(vbIds, Seq(idCol), "left_anti"),
-          ids(va.except(vb).select(idCol)
-              .unionByName(vb.except(va).select(idCol)))
-            .join(vaIds, Seq(idCol), "left_semi")
-            .join(vbIds, Seq(idCol), "left_semi"))
-      }
-    tagged(added, "added")
-      .unionByName(tagged(removed, "removed"))
-      .unionByName(tagged(updated, "updated"))
-  }
 
   /** One segment's planning stats: whether it was produced by a
     * tiered merge, and its total row count (adds + tombs). `rows` is
@@ -955,44 +857,6 @@ object SegmentOps {
     * ([[shouldCompact]] + compactInPlace, priced by x105) remains the
     * separate escape hatch for when accumulated merged churn
     * approaches base size. */
-  /** Run [[tieredPlan]]'s schedule to quiescence for ANY segment
-    * family: merge whatever the planner picks, re-plan, repeat until
-    * it returns None (a nightly fresh-run fold can complete a merged
-    * run the geometric rule then folds — the cascade IS the
-    * schedule). `rowsOf` counts one segment dir's total rows (the
-    * family knows its table names) and is consulted ONLY when a
-    * contiguous merged run of >= `fanout` exists — the nightly rule
-    * is structural and costs one manifest read. `mergeAt` is the
-    * family's range fold ([[MinHashSegments.mergeSegsAt]] et al.).
-    * Returns the number of merges performed. */
-  def tieredMaintainWith(s: org.apache.spark.sql.SparkSession,
-      root: String, minRun: Int, fanout: Int, ratio: Double)(
-      rowsOf: String => Long, mergeAt: (Int, Int) => Unit): Int = {
-    var merges = 0
-    var planned = true
-    while (planned) {
-      val snap = resolveSnapshot(s, root)
-      val merged = snap.segs.map(e => isMergedName(e._2))
-      val needRows = {
-        var run = 0
-        var any = false
-        merged.foreach { m =>
-          run = if (m) run + 1 else 0
-          if (run >= fanout) any = true
-        }
-        any
-      }
-      val stats = snap.segs.zip(merged).map { case ((_, d, _), m) =>
-        SegStat(m, if (needRows && m) rowsOf(d) else 0L)
-      }
-      tieredPlan(stats, minRun, fanout, ratio) match {
-        case Some((from, len)) => mergeAt(from, len); merges += 1
-        case None => planned = false
-      }
-    }
-    merges
-  }
-
   def tieredPlan(segs: Seq[SegStat], minRun: Int = 2, fanout: Int = 4,
       ratio: Double = 1.5): Option[(Int, Int)] = {
     require(minRun >= 2, s"tieredPlan: minRun $minRun must be >= 2")

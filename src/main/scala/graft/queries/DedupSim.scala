@@ -4099,13 +4099,10 @@ object DedupSim {
 
   private def x105(s: SparkSession, d: String): DataFrame = {
     import graft.etl.{MinHashSegments, NearDup, SegmentOps}
-    // EAGER cut (not lazy): the shared input must be fully
-    // materialized BEFORE the per-config thread pool below spawns —
-    // three driver threads racing the first materialization of one
-    // lazy localCheckpoint (layered under the harness's own 8-way
-    // query concurrency) is the one structural hazard this query had,
-    // and the suspected cause of the r12 driver-row hash flake
-    // (VERDICT r12 #1). DeterminismSpec's stress test pins the fix.
+    // EAGER cut (not lazy): the shared input is materialized once,
+    // here, before the per-config thread pool below starts, so every
+    // config thread reads the same checkpointed rows and none of them
+    // computes the input again
     val docs = Tables.fanout(Tables.documents(s, d))
       .select("doc_id", "text")
       .cut() // 3 configs × (1 init + 5 append shards) + delete ids
@@ -5005,10 +5002,9 @@ object DedupSim {
       .createTempDirectory("graft_w12_sp").toString
     val proot = java.nio.file.Files
       .createTempDirectory("graft_w12_pq").toString
-    // EAGER cuts: all three shared inputs materialize BEFORE par()'s
-    // thread pairs touch them — same determinism-under-concurrency
-    // hardening as x105 (VERDICT r12 #1; this query shares the
-    // pool-over-lazy-cut pattern that flaked there)
+    // EAGER cuts: all three shared inputs are materialized once, here,
+    // before par()'s thread pairs start, so no thread computes them
+    // again
     val docs = Tables.fanout(Tables.documents(s, d)).cut()
     val tf = SparseIndex.termFreqs(docs).cut()
     val e = AnnIndex.prep(Tables.fanout(Tables.embeddings(s, d)))

@@ -3,13 +3,14 @@ package graft.etl
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-/** Layout format versions: the sparse and PQ segmented layouts record
-  * their format in the base's 1-row `meta`, and every entry point
-  * refuses a layout written in an older shape with a message that
-  * names both formats — instead of serving wrong rows or failing deep
-  * in a plan on a missing column. The old shapes are built by hand:
-  * a sparse base whose `meta` holds only the cap and whose `plist`
-  * lacks `dl`/`df`; a PQ base with a `cells` table and no `meta`.
+/** Layout format versions: every segmented layout records its format
+  * in the base's 1-row `meta`, and every entry point refuses a layout
+  * written in another shape with a message that names both formats —
+  * instead of serving wrong rows or failing deep in a plan on a missing
+  * column. The other shapes are built by hand: a sparse base whose
+  * `meta` holds only the cap and whose `plist` lacks `dl`/`df`; a PQ
+  * base with a `cells` table and no `meta`; a MinHash base whose
+  * `meta` records a format this build does not write.
   */
 class LayoutFormatSpec extends SparkSpec {
 
@@ -23,12 +24,13 @@ class LayoutFormatSpec extends SparkSpec {
 
   /** Every layout entry point on `root`, each expected to refuse. */
   private def assertRefused(family: String,
-      ops: Seq[(String, () => Unit)]): Unit =
+      ops: Seq[(String, () => Unit)], found: Int = 1,
+      reads: Int = 2): Unit =
     ops.foreach { case (name, op) =>
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains(s"$family: layout") &&
-          e.getMessage.contains("layout format 1") &&
-          e.getMessage.contains("format 2"),
+          e.getMessage.contains(s"layout format $found") &&
+          e.getMessage.contains(s"reads format $reads"),
         s"$family.$name: unexpected message ${e.getMessage}")
     }
 
@@ -98,6 +100,46 @@ class LayoutFormatSpec extends SparkSpec {
       "compact" -> (() => PqSegments.compact(spark, root,
         tmp("format_pq_out"))),
       "compactInPlace" -> (() => PqSegments.compactInPlace(spark, root))))
+    assert(SegmentOps.resolveSnapshot(spark, root).version == v)
+  }
+
+  test("MinHash layouts of another format fail loudly on every entry point") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
+    val root = tmp("format_minhash")
+    MinHashSegments.init(
+      NearDup.signatures(docs.filter(col("doc_id") % 3 =!= 0)), root)
+    MinHashSegments.appendSeg(spark, root,
+      docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0))
+    MinHashSegments.appendSeg(spark, root,
+      docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 1))
+    val base = s"$root/base"
+    assert(SegmentOps.readMetaInt(spark, s"$base/meta", "format") == 1)
+    val k = SegmentOps.readMetaInt(spark, s"$base/meta", "k")
+    val live = MinHashSegments.read(spark, root).count()
+    // a layout written before the format field reads as format 1
+    rm(s"$base/meta")
+    graft.sources.Sources.writeOrdered(Seq(
+      "meta" -> SegmentOps.metaTable(spark, "k" -> k)), base)
+    assert(MinHashSegments.read(spark, root).count() == live)
+    // another format is refused
+    rm(s"$base/meta")
+    graft.sources.Sources.writeOrdered(Seq(
+      "meta" -> SegmentOps.metaTable(spark, "k" -> k, "format" -> 2)), base)
+    val v = SegmentOps.resolveSnapshot(spark, root).version
+    assertRefused("MinHashSegments", Seq(
+      "read" -> (() => MinHashSegments.read(spark, root)),
+      "readAt" -> (() => MinHashSegments.readAt(spark, root, v)),
+      "appendSeg" -> (() => MinHashSegments.appendSeg(spark, root,
+        docs.filter(col("doc_id") === -1L))),
+      "deleteSeg" -> (() => MinHashSegments.deleteSeg(spark, root,
+        docs.select("doc_id").filter(col("doc_id") === 3L))),
+      "mergeSegsAt" -> (() =>
+        MinHashSegments.mergeSegsAt(spark, root, 0, 2)),
+      "compact" -> (() => MinHashSegments.compact(spark, root,
+        tmp("format_minhash_out"))),
+      "compactInPlace" -> (() =>
+        MinHashSegments.compactInPlace(spark, root))),
+      found = 2, reads = 1)
     assert(SegmentOps.resolveSnapshot(spark, root).version == v)
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** The Spark jobs of one nightly maintenance round — `appendSeg` +
   * `deleteSeg` + `tieredMaintain` — per segment family at sf0.001,
-  * counted by a job listener. A night's wall is set by the per-job
+  * counted by a job listener, and of what follows a night: the
+  * night's `changesBetween` (collected) and a `compactInPlace`. A night's wall is set by the per-job
   * floor, not by its data volume, so a change that adds jobs to the
   * write path (the BM25 write-time list repair, say) shows here as a
   * gated number. Pinned as ceilings: a plan that gets cheaper passes,
@@ -18,6 +19,8 @@ import org.apache.spark.sql.functions._
 class NightJobsSpec extends SparkSpec {
 
   private val ceilings = Map("bm25" -> 58, "pq" -> 13, "minhash" -> 12)
+  private val cdcCeilings = Map("bm25" -> 13, "pq" -> 13, "minhash" -> 13)
+  private val compactCeilings = Map("bm25" -> 14, "pq" -> 13, "minhash" -> 3)
 
   /** Jobs started while `f` runs (the bus drained on both sides). */
   private def jobsOf(f: => Unit): Int = {
@@ -37,7 +40,9 @@ class NightJobsSpec extends SparkSpec {
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
 
-  test("one night's jobs per family stay within their pins") {
+  /** The three layouts after one night, with the night's jobs per
+    * family and each layout's manifest version before the night. */
+  private lazy val night = {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
       .cache()
     val tf = SparseIndex.termFreqs(docs).cache()
@@ -53,6 +58,9 @@ class NightJobsSpec extends SparkSpec {
     PqSegments.init(PqIndex.build(live(e, "vec_id")), pq)
     val mh = tmp("night_mh")
     MinHashSegments.init(NearDup.signatures(live(docs, "doc_id")), mh)
+    val roots = Map("bm25" -> sp, "pq" -> pq, "minhash" -> mh)
+    val before = roots.map { case (f, r) =>
+      f -> SegmentOps.resolveSnapshot(spark, r).version }
 
     val got = Map(
       "bm25" -> jobsOf {
@@ -70,9 +78,44 @@ class NightJobsSpec extends SparkSpec {
         MinHashSegments.deleteSeg(spark, mh, dels(docs, "doc_id"))
         assert(MinHashSegments.tieredMaintain(spark, mh) == 1)
       })
-    info(s"night jobs: $got")
-    val over = got.filter { case (f, n) => n > ceilings(f) }
-    assert(over.isEmpty, s"night jobs over their pins: $over " +
-      s"(pins $ceilings)")
+    (roots, before, got)
+  }
+
+  private def assertPinned(what: String, got: Map[String, Int],
+      pins: Map[String, Int]): Unit = {
+    info(s"$what jobs: $got")
+    val over = got.filter { case (f, n) => n > pins(f) }
+    assert(over.isEmpty, s"$what jobs over their pins: $over " +
+      s"(pins $pins)")
+  }
+
+  test("one night's jobs per family stay within their pins") {
+    assertPinned("night", night._3, ceilings)
+  }
+
+  test("a night's CDC and an in-place compaction stay within their pins") {
+    val (roots, before, _) = night
+    val sp = roots("bm25")
+    val pq = roots("pq")
+    val mh = roots("minhash")
+    def now(root: String) = SegmentOps.resolveSnapshot(spark, root).version
+    // the CDC of the whole night: a fast-path window over the merged
+    // segment, consumed the way a downstream job reads it
+    val cdc = Map(
+      "bm25" -> jobsOf {
+        SparseSegments.changesBetween(spark, sp, before("bm25"), now(sp))
+          .collect() },
+      "pq" -> jobsOf {
+        PqSegments.changesBetween(spark, pq, before("pq"), now(pq))
+          .collect() },
+      "minhash" -> jobsOf {
+        MinHashSegments.changesBetween(spark, mh, before("minhash"),
+          now(mh)).collect() })
+    assertPinned("cdc", cdc, cdcCeilings)
+    val compaction = Map(
+      "bm25" -> jobsOf(SparseSegments.compactInPlace(spark, sp)),
+      "pq" -> jobsOf(PqSegments.compactInPlace(spark, pq)),
+      "minhash" -> jobsOf(MinHashSegments.compactInPlace(spark, mh)))
+    assertPinned("compaction", compaction, compactCeilings)
   }
 }

@@ -284,11 +284,11 @@ class SparseSegmentsSpec extends SparkSpec {
       t.select("doc_id").distinct().filter(col("doc_id") % 10 === 3))
     assert(baseFiles() == before,
       "segment maintenance rewrote base files — the O(delta) claim")
-    assert(SparseSegments.listSegs(spark, root) == Seq(0, 1))
+    assert(SegmentOps.listSegs(spark, root) == Seq(0, 1))
     // an in-flight (unpublished) segment is invisible to readers
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$root/segs/_tmp_seg=2"))
-    assert(SparseSegments.listSegs(spark, root) == Seq(0, 1))
+    assert(SegmentOps.listSegs(spark, root) == Seq(0, 1))
     // the persisted cap is asserted against an explicit mismatch
     intercept[IllegalArgumentException] {
       SparseSegments.read(spark, root, Some(cap + 1))
@@ -303,7 +303,7 @@ class SparseSegmentsSpec extends SparkSpec {
       .createTempDirectory("sparse_segs_c").toString
     SparseSegments.compact(spark, root, outRoot)
     val compacted = SparseSegments.read(spark, outRoot, Some(cap))
-    assert(SparseSegments.listSegs(spark, outRoot).isEmpty)
+    assert(SegmentOps.listSegs(spark, outRoot).isEmpty)
     assertSameIndex(compacted, rebuilt)
   }
 

@@ -128,14 +128,14 @@ class TieredMergeSpec extends SparkSpec {
     val from = SegmentOps.resolveSnapshot(spark, root)
     // an append lands between the fold and the flip
     SegmentOps.recordSegInManifest(spark, root, "seg=3-a")
-    val v = SegmentOps.flipMerged(spark, root, from, 2, "seg=1-a-g2")
+    val v = SegmentOps.flipMergedAt(spark, root, from, 0, 2, "seg=1-a-g2")
     val snap = SegmentOps.resolveSnapshotAt(spark, root, v)
     assert(snap.segs.map(_._2) == Seq("seg=1-a-g2", "seg=2-a", "seg=3-a"),
       s"carry failed: ${snap.segs.map(_._2)}")
     // a second merger that folded the SAME prefix must refuse — the
     // prefix no longer heads the snapshot
     val e = intercept[IllegalArgumentException](
-      SegmentOps.flipMerged(spark, root, from, 2, "seg=1-a-g9"))
+      SegmentOps.flipMergedAt(spark, root, from, 0, 2, "seg=1-a-g9"))
     assert(e.getMessage.contains("concurrent merge"))
   }
 
