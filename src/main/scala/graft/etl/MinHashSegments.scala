@@ -44,23 +44,25 @@ object MinHashSegments extends SegmentFamily[DataFrame] {
     SegmentOps.scopedUnion(baseSigs, segs.map(_("sigs")),
       segs.map(_("tombs")), "doc_id")
 
-  protected def liveIds(liveSigs: DataFrame): DataFrame =
-    liveSigs.select("doc_id")
-
   /** The delta documents signed at `k`. */
   override protected def deltaRows(deltaDocs: DataFrame, k: Int)
       : DataFrame = NearDup.signatures(deltaDocs, k)
+
+  /** [[init]] at signature length `k`. */
+  def init(sigs: DataFrame, root: String, k: Int): Unit = initAt(sigs, root, k)
+
+  /** An APPEND segment of the delta documents signed at `k`. */
+  def appendSegOf(liveSigs: DataFrame, deltaDocs: DataFrame,
+      k: Int = NearDup.DefaultConfig.k): Seg =
+    appendChecked(liveSigs, deltaDocs, k)
 
   protected def appendSegFrom(liveSigs: DataFrame, deltaSigs: DataFrame,
       k: Int): Seg =
     Map("sigs" -> deltaSigs,
       "tombs" -> SegmentOps.emptyLike(deltaSigs.select("doc_id")))
 
-  /** Tombstones only (the vacuous signature additions are
-    * statically-empty LocalRelations so the view's unions elide them). */
-  def deleteSegOf(liveSigs: DataFrame, docIds: DataFrame, k: Int): Seg =
-    Map("sigs" -> SegmentOps.emptyLike(liveSigs),
-      "tombs" -> docIds.select("doc_id").distinct())
+  def deleteSegOf(liveSigs: DataFrame, docIds: DataFrame): Seg =
+    deleteSegFrom(liveSigs, docIds, 0)
 
   protected def cdcState(liveSigs: DataFrame): DataFrame = liveSigs
 }

@@ -52,21 +52,17 @@ object PqSegments extends SegmentFamily[PqIndex.Index] {
     base.copy(codes = SegmentOps.scopedUnion(base.codes,
       segs.map(_("codes")), segs.map(_("tombs")), "vec_id"))
 
-  protected def liveIds(live: PqIndex.Index): DataFrame =
-    live.codes.select("vec_id")
+  /** An APPEND segment: the shard's frozen-book encode. */
+  def appendSegOf(live: PqIndex.Index, eNew: DataFrame): Seg =
+    appendChecked(live, eNew, 0)
 
-  /** The shard's frozen-book encode. */
   protected def appendSegFrom(live: PqIndex.Index, eNew: DataFrame,
       param: Int): Seg =
     Map("codes" -> PqIndex.encodeShard(live, eNew),
       "tombs" -> SegmentOps.emptyLike(eNew.select("vec_id")))
 
-  /** Tombstones only (the vacuous additions are statically-empty
-    * LocalRelations so the view's unions elide them). */
-  def deleteSegOf(live: PqIndex.Index, vecIds: DataFrame, param: Int)
-      : Seg =
-    Map("codes" -> SegmentOps.emptyLike(live.codes),
-      "tombs" -> vecIds.select("vec_id").distinct())
+  def deleteSegOf(live: PqIndex.Index, vecIds: DataFrame): Seg =
+    deleteSegFrom(live, vecIds, 0)
 
   protected def cdcState(live: PqIndex.Index): DataFrame = live.codes
 }

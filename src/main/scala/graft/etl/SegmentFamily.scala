@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * `root/manifest/v=<v>`; [[SegmentOps]] owns the names, the manifest
   * and its CAS. The base's 1-row `meta` records the build parameter
   * and the layout [[Format]]; every entry point refuses a layout of
-  * another format, or whose stored parameter disagrees with an asserted
-  * one, before it publishes anything.
+  * another format before it publishes anything.
   */
 abstract class SegmentFamily[Idx] {
   import SegmentFamily._
@@ -52,8 +51,9 @@ abstract class SegmentFamily[Idx] {
   /** Compose base + segments into the LIVE index view. */
   def view(base: Idx, segs: Seq[Seg]): Idx
 
-  /** The live view's id relation, one row per id. */
-  protected def liveIds(live: Idx): DataFrame
+  /** The live view's id relation, one row per id: by default the ids
+    * of [[cdcState]], for a family whose content is one row per id. */
+  protected def liveIds(live: Idx): DataFrame = cdcState(live).select(idCol)
 
   /** The rows a delta is appended as, whose ids the disjointness check
     * guards (MinHash signs the delta documents). */
@@ -62,10 +62,14 @@ abstract class SegmentFamily[Idx] {
   /** An append segment of `rows`, already checked disjoint from `live`. */
   protected def appendSegFrom(live: Idx, rows: DataFrame, param: Int): Seg
 
-  /** Build a DELETE segment against the live view. Deleting an id
-    * absent from the live view is a no-op. */
-  def deleteSegOf(live: Idx, ids: DataFrame, param: Int = defaultParam)
-      : Seg
+  /** A DELETE segment against the live view at build parameter
+    * `param`. Deleting an id absent from the live view is a no-op. By
+    * default it is tombstones only, for a family whose one add table
+    * is its [[cdcTable]]: the vacuous additions are a statically-empty
+    * copy of [[cdcState]] so the view's unions elide them. */
+  protected def deleteSegFrom(live: Idx, ids: DataFrame, param: Int)
+      : Seg = Map(cdcTable -> SegmentOps.emptyLike(cdcState(live)),
+    tombTable -> ids.select(idCol).distinct())
 
   /** The tables a segment's size counts for [[tieredMaintain]]. */
   protected def sizedTables: Seq[String] = segTables.map(_._1)
@@ -77,19 +81,18 @@ abstract class SegmentFamily[Idx] {
   protected def cdcState(live: Idx): DataFrame
   protected def cdcRows(rows: DataFrame): DataFrame = rows
 
-  protected def defaultParam: Int = buildParam.fold(0)(_._2)
-
   private lazy val tombTable = segTables.collectFirst {
     case (t, Tomb) => t }.get
 
   protected def tablesOf(seg: Seg): Seq[(String, DataFrame)] =
     segTables.map { case (t, _) => t -> seg(t) }
 
-  /** Build an APPEND segment against the live view. Precondition
+  /** An APPEND segment against the live view at build parameter
+    * `param` — each family's in-memory `appendSegOf`. Precondition
     * (asserted): the delta's ids are disjoint from the LIVE view — a
     * previously deleted id may be re-appended (the revise path;
     * tombstone scoping makes it correct). */
-  def appendSegOf(live: Idx, delta: DataFrame, param: Int = defaultParam)
+  protected def appendChecked(live: Idx, delta: DataFrame, param: Int)
       : Seg = {
     // the IN-MEMORY form keeps the eager check: an in-plan guard
     // ([[guarded]]) here would embed the live VIEW in the segment's own
@@ -113,10 +116,14 @@ abstract class SegmentFamily[Idx] {
   protected def guarded(rows: DataFrame, liveIds: DataFrame): DataFrame =
     SegmentOps.guardDisjoint(rows, liveIds, idCol, overlapMsg)
 
-  /** Write `idx` as the base generation of a segmented layout. `param`
-    * MUST be the build parameter `idx` was built with (unused by a
-    * family without one). */
-  def init(idx: Idx, root: String, param: Int = defaultParam): Unit = {
+  /** Write `idx` as the base generation of a segmented layout, at the
+    * family's default build parameter (see [[initAt]]). */
+  def init(idx: Idx, root: String): Unit =
+    initAt(idx, root, buildParam.fold(0)(_._2))
+
+  /** [[init]] at build parameter `param`, which MUST be the one `idx`
+    * was built with (unused by a family without one). */
+  protected def initAt(idx: Idx, root: String, param: Int): Unit = {
     writeBase(idx, s"$root/base", param)
     SegmentOps.publishManifest(baseTables(idx).head._2.sparkSession, root,
       "base", Seq.empty)
@@ -136,32 +143,26 @@ abstract class SegmentFamily[Idx] {
   }
 
   /** The snapshot's persisted build parameter (0 for a family without
-    * one), after checking the layout [[Format]]. When the caller asserts
-    * a value too, they must agree — the silent-corruption guard. An
-    * `Option` rather than a magic 0 (ADVICE r10): an explicit-but-wrong
-    * value can never bypass the mismatch check. */
+    * one), after checking the layout [[Format]] (a layout written before
+    * the format field existed reads as format 1). */
   protected def checkLayout(s: SparkSession, root: String,
-      snap: SegmentOps.Snapshot, asserted: Option[Int] = None): Int = {
+      snap: SegmentOps.Snapshot): Int = {
     val baseAbs = s"$root/${snap.baseDir}"
-    SegmentOps.requireFormat(s, baseAbs, name, Format)
-    buildParam match {
-      case None =>
-        require(asserted.isEmpty, s"$name: layouts have no parameter")
-        0
-      case Some((p, _)) =>
-        val stored = SegmentOps.readMetaInt(s, s"$baseAbs/meta", p)
-        asserted.foreach(c => require(c == stored,
-          s"$name: layout $baseAbs was built at $p=$stored but $p=$c " +
-            "was passed — the values must agree"))
-        stored
-    }
+    val found = SegmentOps.readMetaIntOpt(s, s"$baseAbs/meta", "format")
+      .getOrElse(1)
+    require(found == Format,
+      s"$name: layout $baseAbs is in layout format $found, but this " +
+        s"build reads format $Format only — rebuild the layout from " +
+        "its source (init) to upgrade it")
+    buildParam.fold(0) { case (p, _) =>
+      SegmentOps.readMetaInt(s, s"$baseAbs/meta", p) }
   }
 
-  /** The tables `names` (default: all) of one on-disk segment. The kind tag tells
-    * which tables are vacuous BY CONSTRUCTION, and those are rebuilt as
-    * statically-empty LocalRelations (schema from the parquet footer
-    * only), so the optimizer elides their joins — the linearity the
-    * in-memory builders get from emptyLike. A mixed-range merged
+  /** The tables `names` (default: all) of one on-disk segment. The kind
+    * tag tells which tables are vacuous BY CONSTRUCTION, and those are
+    * rebuilt as statically-empty LocalRelations (schema from the parquet
+    * footer only), so the optimizer elides their joins — the linearity
+    * the in-memory builders get from emptyLike. A mixed-range merged
     * segment (kind 'm') carries rows in every table. */
   protected def readSeg(s: SparkSession, root: String,
       entry: (Int, String, Char),
@@ -179,24 +180,20 @@ abstract class SegmentFamily[Idx] {
 
   /** The live view of `snap` and its build parameter. */
   protected def readLive(s: SparkSession, root: String,
-      snap: SegmentOps.Snapshot, asserted: Option[Int] = None)
-      : (Idx, Int) = {
-    val param = checkLayout(s, root, snap, asserted)
+      snap: SegmentOps.Snapshot): (Idx, Int) = {
+    val param = checkLayout(s, root, snap)
     (view(readBase(s, s"$root/${snap.baseDir}"),
       snap.segs.map(readSeg(s, root, _))), param)
   }
 
-  private def readCurrent(s: SparkSession, root: String,
-      asserted: Option[Int] = None): (Idx, Int) =
-    readLive(s, root, SegmentOps.resolveSnapshot(s, root), asserted)
+  protected def readCurrent(s: SparkSession, root: String): (Idx, Int) =
+    readLive(s, root, SegmentOps.resolveSnapshot(s, root))
 
-  /** Load the live view of a segmented layout; pass `Some(param)` only
-    * to ASSERT the build parameter. The snapshot (manifest) is resolved
-    * ONCE here — the returned lazy view keeps serving that snapshot's
-    * bytes even if a compaction flips the layout's pointer afterwards
-    * (SegmentManifestSpec pins it). */
-  def read(s: SparkSession, root: String, asserted: Option[Int] = None)
-      : Idx = readCurrent(s, root, asserted)._1
+  /** Load the live view of a segmented layout. The snapshot (manifest)
+    * is resolved ONCE here — the returned lazy view keeps serving that
+    * snapshot's bytes even if a compaction flips the layout's pointer
+    * afterwards (SegmentManifestSpec pins it). */
+  def read(s: SparkSession, root: String): Idx = readCurrent(s, root)._1
 
   /** Snapshot time travel: the live view AS OF manifest `version` —
     * any un-vacuumed snapshot replays exactly (its dirs are immutable
@@ -227,7 +224,7 @@ abstract class SegmentFamily[Idx] {
   def deleteSeg(s: SparkSession, root: String, ids: DataFrame,
       tag: Option[String] = None): Unit = {
     val (live, param) = readCurrent(s, root)
-    publish(s, root, 'd', deleteSegOf(live, ids, param), tag)
+    publish(s, root, 'd', deleteSegFrom(live, ids, param), tag)
   }
 
   /** TIERED compaction: fold the `k` oldest segments into ONE merged
@@ -339,7 +336,7 @@ abstract class SegmentFamily[Idx] {
     * Swapping `outRoot` in for `root` is the caller's pointer flip. */
   def compact(s: SparkSession, root: String, outRoot: String): Unit = {
     val (live, param) = readCurrent(s, root)
-    init(live, outRoot, param)
+    initAt(live, outRoot, param)
   }
 
   /** Fold the segments into a fresh base generation under the SAME

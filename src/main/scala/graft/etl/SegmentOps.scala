@@ -237,18 +237,6 @@ object SegmentOps {
         StructField(f._1, IntegerType, nullable = false))))
   }
 
-  /** Fail loudly unless the layout generation at `baseAbs` records
-    * layout format `format` in its `meta` table. A layout written
-    * before the format field existed reads as format 1. */
-  def requireFormat(s: org.apache.spark.sql.SparkSession,
-      baseAbs: String, family: String, format: Int): Unit = {
-    val found = readMetaIntOpt(s, s"$baseAbs/meta", "format").getOrElse(1)
-    require(found == format,
-      s"$family: layout $baseAbs is in layout format $found, but this " +
-        s"build reads format $format only — rebuild the layout from " +
-        "its source (init) to upgrade it")
-  }
-
   // ------------------------------------------------------------------
   // Snapshot manifests — concurrent readers vs in-place compaction.
   //

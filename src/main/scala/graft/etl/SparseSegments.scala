@@ -127,8 +127,18 @@ object SparseSegments extends SegmentFamily[SparseIndex.Index] {
   override protected val sizedTables =
     segTables.map(_._1).filterNot(_ == "plist")
 
-  protected def liveIds(live: SparseIndex.Index): DataFrame =
+  /** One row per doc (the tf holds one per posting). */
+  override protected def liveIds(live: SparseIndex.Index): DataFrame =
     live.dl.select("doc_id")
+
+  /** [[init]] at build cap `cap`. */
+  def init(idx: SparseIndex.Index, root: String, cap: Int): Unit =
+    initAt(idx, root, cap)
+
+  /** An APPEND segment at `cap`, the base's build cap (an in-memory
+    * index does not record it). */
+  def appendSegOf(live: SparseIndex.Index, deltaTf: DataFrame, cap: Int)
+      : Seg = appendChecked(live, deltaTf, cap)
 
   protected def appendSegFrom(live: SparseIndex.Index, deltaTf: DataFrame,
       cap: Int): Seg =
@@ -184,6 +194,9 @@ object SparseSegments extends SegmentFamily[SparseIndex.Index] {
       cap: Int): Seg =
     cutSeg(deleteTables(live.tf, docIds, cap,
       touched => live.tf.join(touched, Seq("tok"), "left_semi")))
+
+  override protected def deleteSegFrom(live: SparseIndex.Index,
+      docIds: DataFrame, cap: Int): Seg = deleteSegOf(live, docIds, cap)
 
   /** The delete segment's tables. `termTf` gives the live tf of a set
     * of terms (before the delete) — the disk path's form reads only
@@ -298,6 +311,16 @@ object SparseSegments extends SegmentFamily[SparseIndex.Index] {
   private def readBaseTf(s: SparkSession, baseAbs: String): DataFrame =
     SegmentOps.readKnown(s, s"$baseAbs/tf",
       Seq("tbk" -> org.apache.spark.sql.types.IntegerType))
+
+  /** [[read]], refusing a layout whose stored cap is not `cap` (an
+    * `Option`, not a magic 0, so a wrong cap never bypasses it). */
+  def read(s: SparkSession, root: String, cap: Option[Int])
+      : SparseIndex.Index = {
+    val (live, stored) = readCurrent(s, root)
+    require(cap.forall(_ == stored), s"$name: layout $root was built " +
+      s"at cap=$stored but cap=${cap.get} was passed — they must agree")
+    live
+  }
 
   protected def cdcState(live: SparseIndex.Index): DataFrame = live.tf
 

@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class LayoutFormatSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   private def rm(path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -37,7 +34,7 @@ class LayoutFormatSpec extends SparkSpec {
   test("sparse layouts of an older format fail loudly on every entry point") {
     val cap = 5
     val t = SparseIndex.termFreqs(Tables.documents(spark, sf)).cache()
-    val root = tmp("format_sparse")
+    val root = tempRoot("format_sparse")
     SparseSegments.init(
       SparseIndex.build(t.filter(col("doc_id") % 3 =!= 0), cap), root,
       cap)
@@ -65,7 +62,7 @@ class LayoutFormatSpec extends SparkSpec {
       "mergeSegsAt" -> (() => SparseSegments.mergeSegsAt(spark, root,
         0, 2)),
       "compact" -> (() => SparseSegments.compact(spark, root,
-        tmp("format_sparse_out"))),
+        tempRoot("format_sparse_out"))),
       "compactInPlace" -> (() =>
         SparseSegments.compactInPlace(spark, root))))
     // nothing was published by the refused writes
@@ -74,7 +71,7 @@ class LayoutFormatSpec extends SparkSpec {
 
   test("PQ layouts of an older format fail loudly on every entry point") {
     val e = AnnIndex.prep(Tables.embeddings(spark, sf)).cache()
-    val root = tmp("format_pq")
+    val root = tempRoot("format_pq")
     PqSegments.init(PqIndex.build(e.filter(col("vec_id") % 3 =!= 0)),
       root)
     PqSegments.appendSeg(spark, root, e.filter(col("vec_id") % 3 === 0 &&
@@ -98,14 +95,14 @@ class LayoutFormatSpec extends SparkSpec {
         e.select("vec_id").filter(col("vec_id") === 3L))),
       "mergeSegsAt" -> (() => PqSegments.mergeSegsAt(spark, root, 0, 2)),
       "compact" -> (() => PqSegments.compact(spark, root,
-        tmp("format_pq_out"))),
+        tempRoot("format_pq_out"))),
       "compactInPlace" -> (() => PqSegments.compactInPlace(spark, root))))
     assert(SegmentOps.resolveSnapshot(spark, root).version == v)
   }
 
   test("MinHash layouts of another format fail loudly on every entry point") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
-    val root = tmp("format_minhash")
+    val root = tempRoot("format_minhash")
     MinHashSegments.init(
       NearDup.signatures(docs.filter(col("doc_id") % 3 =!= 0)), root)
     MinHashSegments.appendSeg(spark, root,
@@ -136,7 +133,7 @@ class LayoutFormatSpec extends SparkSpec {
       "mergeSegsAt" -> (() =>
         MinHashSegments.mergeSegsAt(spark, root, 0, 2)),
       "compact" -> (() => MinHashSegments.compact(spark, root,
-        tmp("format_minhash_out"))),
+        tempRoot("format_minhash_out"))),
       "compactInPlace" -> (() =>
         MinHashSegments.compactInPlace(spark, root))),
       found = 2, reads = 1)

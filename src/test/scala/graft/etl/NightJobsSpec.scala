@@ -37,9 +37,6 @@ class NightJobsSpec extends SparkSpec {
     n.get
   }
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   /** The three layouts after one night, with the night's jobs per
     * family and each layout's manifest version before the night. */
   private lazy val night = {
@@ -52,11 +49,11 @@ class NightJobsSpec extends SparkSpec {
     def dels(df: DataFrame, k: String) =
       df.select(k).distinct().filter(col(k) % 10 === 3)
 
-    val sp = tmp("night_bm25")
+    val sp = tempRoot("night_bm25")
     SparseSegments.init(SparseIndex.build(live(tf, "doc_id")), sp)
-    val pq = tmp("night_pq")
+    val pq = tempRoot("night_pq")
     PqSegments.init(PqIndex.build(live(e, "vec_id")), pq)
-    val mh = tmp("night_mh")
+    val mh = tempRoot("night_mh")
     MinHashSegments.init(NearDup.signatures(live(docs, "doc_id")), mh)
     val roots = Map("bm25" -> sp, "pq" -> pq, "minhash" -> mh)
     val before = roots.map { case (f, r) =>

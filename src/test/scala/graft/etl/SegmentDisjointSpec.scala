@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class SegmentDisjointSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   /** One family on a base of the ids not divisible by 10: its disk
     * append, its in-memory append against the live view, and its delta
     * source keyed on `key`. */
@@ -29,12 +26,14 @@ class SegmentDisjointSpec extends SparkSpec {
       .cache()
     val tf = SparseIndex.termFreqs(docs).cache()
     val e = AnnIndex.prep(Tables.embeddings(spark, sf)).cache()
+    val cap = SparseIndex.ImpactCap
     Seq(
       Family("SparseSegments", "doc_id", tf,
-        (base, root) => SparseSegments.init(SparseIndex.build(base), root),
+        (base, root) =>
+          SparseSegments.init(SparseIndex.build(base, cap), root, cap),
         (root, d) => SparseSegments.appendSeg(spark, root, d),
         (root, d) => SparseSegments.appendSegOf(
-          SparseSegments.read(spark, root), d)),
+          SparseSegments.read(spark, root, Some(cap)), d, cap)),
       Family("PqSegments", "vec_id", e,
         (base, root) => PqSegments.init(PqIndex.build(base), root),
         (root, d) => PqSegments.appendSeg(spark, root, d),
@@ -55,7 +54,7 @@ class SegmentDisjointSpec extends SparkSpec {
     test(s"$name: disk and in-memory appends refuse overlapping ids " +
         "and publish nothing") {
       val f = families.find(_.name == name).get
-      val root = tmp(s"disjoint_$name")
+      val root = tempRoot(s"disjoint_$name")
       f.init(f.rows.filter(col(f.key) % 10 =!= 0), root)
       val v0 = SegmentOps.resolveSnapshot(spark, root).version
       // fresh ids (divisible by 10) plus live ones (ending in 1)
